@@ -92,6 +92,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import txlog
+from ..session import local_frame
 
 _DATA_DIR = "index"
 _META_RETRIES = 4  # redo attempts when a verb loses the parameter race
@@ -616,20 +617,45 @@ def rebuild_index(
     )
 
 
+#: Footer key under which Spark's parquet writer stores the written
+#: frame's schema as JSON — what Spark's own schema inference reads.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(file: str):
+    """The Spark schema of one landed data file, read on the driver
+    from the JSON Spark's writer stores in the parquet footer — no
+    Spark job. (A read schema is made nullable by Spark itself, as an
+    inferred one is.)"""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    meta = pq.read_schema(file).metadata
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
 def read_index(spark: SparkSession, path: str) -> DataFrame:
     """(neighbor_id, cell BIGINT, pq_code) — the probe input, reading
     ONLY the commit-manifest's files (``basePath`` keeps ``cell`` a
     real partition column over the explicit file list, so a probe's
     ``cell IN (probed cells)`` filter still prunes to the matching
     directories — plan-pinned). Files landed by a crashed,
-    uncommitted write are invisible here by construction."""
+    uncommitted write are invisible here by construction. The schema
+    comes from the first committed file's footer (every landing writes
+    the same encoder output) plus the ``cell int`` partition column,
+    so the read starts no schema-inference job; an empty index is a
+    local relation of the same schema."""
     files = txlog.committed_files(_data_path(path))
     if not files:
-        return spark.createDataFrame(
-            [], "neighbor_id bigint, cell bigint, pq_code array<int>"
+        return local_frame(
+            spark, [], "neighbor_id bigint, cell bigint, pq_code array<bigint>"
         )
+    from pyspark.sql.types import IntegerType
+
+    schema = _footer_schema(files[0]).add("cell", IntegerType())
     return (
-        spark.read.option("basePath", _data_path(path))
+        spark.read.schema(schema)
+        .option("basePath", _data_path(path))
         .parquet(*files)
         .select(
             "neighbor_id",

@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 
 def normalize_text(col: Column) -> Column:
     """Canonicalize text before hashing: lowercase, collapse whitespace,
@@ -264,9 +266,10 @@ def _drop_hot_keys(
     if hot_keys is not None:
         if not hot_keys:
             return rows
-        hot = rows.sparkSession.createDataFrame(
+        hot = local_frame(
+            rows.sparkSession,
             [(k,) for k in hot_keys],
-            schema=T.StructType([rows.schema[key_col]]),
+            T.StructType([rows.schema[key_col]]),
         )
     else:
         hot = _hot_key_counts(rows, key_col, max_count).select(key_col)

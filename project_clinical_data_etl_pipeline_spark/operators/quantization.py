@@ -38,46 +38,29 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .dedup import fan_out
+from .similarity import _col_sql, _dot_lit_sql, _lit_double
 
 #: Driver-collect budget for probe frames, in SCALARS (rows × vector
-#: dim): the single-collect probe pattern holds |queries|·n_probe rows
-#: of dim doubles on the driver — bounded control data under the
-#: small-queries contract, but a contract must be ENFORCED, not
-#: assumed (round 14, r13 verdict item 7). Default 8M scalars ≈ 64 MB;
-#: env-tunable. Past the cap the probe falls back to the
-#: lazy-checkpoint plan (distinct-cell collect for pruning — always
-#: tiny, bounded by index geometry — and the checkpointed frame as the
-#: broadcast side), which never materializes query vectors driver-side.
+#: dim): the probe path holds |queries|·n_probe rows of dim doubles on
+#: the driver — bounded control data under the small-queries contract,
+#: but a contract must be ENFORCED, not assumed. Default 8M scalars ≈
+#: 64 MB; env-tunable. Past the cap the probe falls back to the Spark
+#: cell selection and the lazy-checkpoint plan (distinct-cell collect
+#: for pruning — always tiny, bounded by index geometry — and the
+#: checkpointed frame as the broadcast side), which never materializes
+#: query vectors driver-side.
 _PROBE_COLLECT_SCALARS = int(
     os.environ.get("SPARK_GRAFT_PROBE_COLLECT_SCALARS", str(8_000_000))
 )
-
-
-def _collect_probes(probes: DataFrame, dim: int):
-    """Collect the probe frame onto the driver if it fits the scalar
-    budget; return ``(cells, probes_small)`` either way. Fast path:
-    one execution, broadcast side rebuilt from local rows. Fallback
-    (over budget): lazy localCheckpoint so probe construction still
-    executes once, cells from a distinct-cell collect."""
-    cap_rows = max(1, _PROBE_COLLECT_SCALARS // max(dim, 1))
-    rows = probes.limit(cap_rows + 1).collect()
-    if len(rows) <= cap_rows:
-        cells = sorted({r["cell"] for r in rows})
-        return cells, probes.sparkSession.createDataFrame(rows, probes.schema)
-    ck = probes.localCheckpoint(eager=False)
-    cells = sorted(
-        r["cell"] for r in ck.select("cell").distinct().collect()
-    )
-    return cells, ck
-from .similarity import _col_sql, _dot_lit_sql, _lit_double
 
 #: Above this many codebook scalars (m·ks·subdim), the inlined-literal
 #: encode/decode expressions stop being "free codegen" and start being
 #: a Catalyst ANALYSIS cost — measured ~5 s of pure compile for the
 #: ks=256/dim=64 decode on a 100-row frame. kernel='auto' switches the
-#: encode to the Arrow kernel and callers should decode via
-#: :func:`pq_reconstruct_joined` (plan size O(m) at any ks).
+#: encode to the Arrow kernel, and :func:`pq_reconstruct` decodes via
+#: :func:`pq_reconstruct_bcast` (plan size O(m) at any ks).
 _EXPR_KERNEL_MAX_SCALARS = 4096
 
 
@@ -279,66 +262,31 @@ def pq_encode(
     return df.withColumn(code_col, F.expr(f"array({codes})"))
 
 
-def pq_reconstruct_joined(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    code_col: str = "pq_code",
-    out_col: str = "__cv",
-) -> DataFrame:
-    """Append ``out_col``: the decoded vector, via ``m`` BROADCAST hash
-    joins against tiny (code → subvector) frames — ONE join per
-    subspace, so the plan is O(m) nodes at ANY ks, where the literal
-    expression (:func:`pq_reconstruct_expr`) compiles an m·ks·subdim-
-    scalar tree (~5 s of pure Catalyst analysis at ks=256/dim=64).
-    Values are identical — decode is a pure lookup, no arithmetic —
-    and the build sides are ks rows each (a few KB), so the joins stay
-    map-side at any corpus scale; column pruning through the joins
-    still reaches the scan (codes-not-vectors ReadSchema, pinned by
-    tests)."""
-    spark = df.sparkSession
-    out = df
-    for s, book in enumerate(codebooks):
-        frame = spark.createDataFrame(
-            [(c, [float(x) for x in sub]) for c, sub in enumerate(book)],
-            f"__bc{s} bigint, __bv{s} array<double>",
-        )
-        out = out.join(
-            F.broadcast(frame),
-            F.element_at(F.col(code_col), s + 1) == F.col(f"__bc{s}"),
-            "inner",
-        )
-    return out.withColumn(
-        out_col, F.concat(*[F.col(f"__bv{s}") for s in range(len(codebooks))])
-    ).drop(*[c for s in range(len(codebooks)) for c in (f"__bc{s}", f"__bv{s}")])
-
-
 def pq_reconstruct_bcast(
     df: DataFrame,
     codebooks: list[list[list[float]]],
     code_col: str = "pq_code",
     out_col: str = "__cv",
 ) -> DataFrame:
-    """Decoded vector via ONE broadcast of the whole codebook set
-    (round 14): the m codebooks travel as a single one-row
-    ``array<array<array<double>>>`` frame cross-joined broadcast onto
-    the code rows, and decode is m guarded ``element_at`` hops into
-    that value. Replaces the joined kernel's m BroadcastExchanges with
-    ONE (measured 2.9 s → ~1 s execute on the sf0.1 ks=256 probe) and
-    dodges the expr kernel's m·ks·subdim-literal Catalyst analysis
-    (~5 s per plan at ks=256) — O(m) plan nodes at any ks, one ~2 KB·ks
-    broadcast per plan. (A driver-side ``F.lit`` of the nested list
-    was tried first and is a trap: PySpark expands it to one py4j call
-    per scalar — ~23 s of pure driver time at 16,384 scalars.)
-    Corrupt codes (null / out of range) yield a NULL decoded vector
-    here and the dispatcher drops them — row-equivalent to the old
-    joined kernel's inner joins."""
-    spark = df.sparkSession
-    ks = len(codebooks[0])
-    books_df = spark.createDataFrame(
-        [([[ [float(x) for x in sub] for sub in book] for book in codebooks],)],
+    """Decoded vector via ONE broadcast of the whole codebook set: the
+    m codebooks travel as a single one-row
+    ``array<array<array<double>>>`` frame (a local relation) cross-joined
+    broadcast onto the code rows, and decode is m ``element_at`` hops
+    into that value. One BroadcastExchange per plan instead of one per
+    subspace (measured 2.9 s → ~1 s execute on the sf0.1 ks=256 probe
+    against m broadcast joins), and no m·ks·subdim-literal Catalyst
+    analysis (~5 s per plan at ks=256 for the expr kernel) — O(m) plan
+    nodes at any ks, one ~2 KB·ks broadcast per plan. (A driver-side
+    ``F.lit`` of the nested list is a trap: PySpark expands it to one
+    py4j call per scalar — ~23 s of pure driver time at 16,384
+    scalars.) Codes must be pre-validated: the dispatcher
+    (:func:`pq_reconstruct`) drops null / short / out-of-range code
+    arrays before this runs."""
+    books_df = local_frame(
+        df.sparkSession,
+        [([[[float(x) for x in sub] for sub in book] for book in codebooks],)],
         "__books array<array<array<double>>>",
     )
-    del ks  # codes are pre-validated by _valid_codes in the dispatcher
     parts = [
         F.element_at(
             F.element_at(F.col("__books"), s + 1),
@@ -363,15 +311,13 @@ def pq_reconstruct(
     ``_EXPR_KERNEL_MAX_SCALARS``) inline the literal lookup
     (:func:`pq_reconstruct_expr` — map-side, zero joins, zero
     broadcast exchanges); large ones ship the codebook set as ONE
-    one-row broadcast (:func:`pq_reconstruct_bcast` — round 14,
-    superseding the m-broadcast-join kernel: one BroadcastExchange
-    instead of m, O(m) plan nodes at any ks). Values are bit-identical
-    across kernels (decode is a pure lookup; pinned in
+    one-row broadcast (:func:`pq_reconstruct_bcast` — one
+    BroadcastExchange, O(m) plan nodes at any ks). Values are
+    bit-identical across kernels (decode is a pure lookup; pinned in
     tests/test_quantization_kernels.py). The defensive code guard
-    (r13 ADVICE) makes all kernels row-equivalent under corrupt data:
-    a null / short / out-of-range code array drops its row — as the
-    old joined kernel's inner joins did — instead of flowing garbage
-    into downstream cosines/retraining (element_at with a NULL index
+    makes both kernels row-equivalent under corrupt data: a null /
+    short / out-of-range code array drops its row instead of flowing
+    garbage into downstream cosines/retraining (element_at with a NULL index
     is NOT null-safe on this engine build: codegen feeds the null
     slot's -1 through and silently returns the LAST entry; an
     out-of-range index throws under ANSI). The guard is a cheap HOF
@@ -405,7 +351,7 @@ def pq_reconstruct_expr(
     """Decoded vector (array<double>) from PQ codes: per subspace an
     ``element_at`` lookup into the literal codebook, flattened —
     map-side, no join. PERF: the literal tree is m·ks·subdim scalars —
-    prefer :func:`pq_reconstruct_joined` beyond
+    prefer :func:`pq_reconstruct_bcast` beyond
     ``_EXPR_KERNEL_MAX_SCALARS`` (identical values, O(m) plan)."""
     parts = []
     for s, book in enumerate(codebooks):
@@ -656,9 +602,11 @@ def ivfpq_topk(
     """IVF+PQ top-k: queries probe their ``n_probe`` nearest cells and
     score the RECONSTRUCTED vectors of those cells only — candidate
     volume ~ n_probe/n_centroids of the corpus, each candidate read as
-    m codes. Same probe plan as similarity.ivf_topk (broadcast query ×
-    tiny centroid set → equi-join on cell); reconstruction is map-side
-    codebook lookup on the probed slice. Returns (query_id,
+    m codes. Probe cells are picked as similarity.ivf_topk ranks them
+    (cosine desc, centroid id asc) — on the driver for a query set
+    within the collect budget (:func:`_probe_cells`) — and the probe
+    frame broadcasts onto an equi-join on cell; reconstruction is
+    map-side codebook lookup on the probed slice. Returns (query_id,
     neighbor_id, cosine, rank) — cosine of query vs reconstruction.
     """
     return _probe_and_score(
@@ -685,30 +633,48 @@ def _probe_and_score(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Shared IVF probe/score tail (NB: near-twin of
-    similarity.ivf_topk_indexed's — keep tie-breaks/filters in sync):
-    queries pick their ``n_probe`` nearest cells (broadcast × tiny
-    centroid set); the index — (neighbor_id, cell, pq_code) — is
-    FILTERED to the probed cells FIRST (probe-cell ids are collected
-    driver-side: bounded by |queries|·n_probe — control flow, the
-    ivf_topk_indexed pattern), and only the surviving slice pays the
-    ``decode`` reconstruction + norm, so decompression cost is
-    ~n_probe/n_centroids of the corpus, not corpus-wide."""
+    """Shared flat-IVF probe/score tail: queries pick their ``n_probe``
+    nearest cells (:func:`_probe_cells` — on the driver when the query
+    set fits the collect budget), the index — (neighbor_id, cell,
+    pq_code) — is FILTERED to the probed cells FIRST, and only the
+    surviving slice pays the ``decode`` reconstruction + norm, so
+    decompression cost is ~n_probe/n_centroids of the corpus, not
+    corpus-wide."""
+    cells, probes_local = _probe_cells(
+        queries, centroids, dim, n_probe, id_col, vec_col
+    )
+    return _score_cells(cells, probes_local, index, decode, dim, k)
+
+
+def _query_frame(
+    queries: DataFrame, dim: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(query_id, __qv, __qn) — the probe-side projection."""
+    from .similarity import norm
+
+    return queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("__qv"),
+        norm(F.col(vec_col), dim).alias("__qn"),
+    )
+
+
+def _spark_probe_cells(
+    q: DataFrame, centroids: list[list[float]], dim: int, n_probe: int
+) -> DataFrame:
+    """(query_id, __qv, __qn, cell): each query's ``n_probe`` nearest
+    centroids by cosine (ties → lowest centroid id) as a Spark plan —
+    a broadcast crossJoin with the centroid frame and a row_number
+    window. The fallback of :func:`_probe_cells`."""
     from pyspark.sql import Window
 
-    from .similarity import _centroid_df, cosine, dot, norm
+    from .similarity import _centroid_df, cosine
 
-    cent = _centroid_df(queries.sparkSession, centroids)
     w_probe = Window.partitionBy("query_id").orderBy(
         F.col("__sim").desc(), F.col("centroid_id").asc()
     )
-    probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            norm(F.col(vec_col), dim).alias("__qn"),
-        )
-        .crossJoin(F.broadcast(cent))
+    return (
+        q.crossJoin(F.broadcast(_centroid_df(q.sparkSession, centroids)))
         .select(
             "query_id",
             "__qv",
@@ -719,35 +685,161 @@ def _probe_and_score(
         .withColumn("__rn", F.row_number().over(w_probe))
         .filter(F.col("__rn") <= n_probe)
         .select("query_id", "__qv", "__qn", F.col("centroid_id").alias("cell"))
-        # consumed twice downstream; _score_probed collects it ONCE
-        # (bounded control data) and rebuilds the broadcast side from
-        # the collected rows — no localCheckpoint, no double execution
     )
-    return _score_probed(probes, index, decode, dim, k)
+
+
+def _pick_cells_local(
+    rows: list, centroids: list[list[float]], dim: int, n_probe: int
+) -> list[tuple] | None:
+    """Driver-side twin of :func:`_spark_probe_cells` over collected
+    (query_id, __qv, __qn) rows: the (query_id, __qv, __qn, cell) probe
+    rows, or None when some row is outside what this path reproduces
+    bit-for-bit. The cosine is the engine's arithmetic: elements cast
+    to double, a 0.0-seeded left-to-right sum over indexes 1..dim
+    (vectorised across queries and centroids, never ``np.dot``, which
+    sums pairwise), ``dot / (‖q‖·‖c‖)`` with the engine-computed ‖q‖
+    and an IEEE ``sqrt`` of the same fold for ‖c‖. Order per query is
+    (cosine desc, centroid id asc), the window's order. None — the
+    caller falls back to the Spark selection — on a NULL or duplicate
+    query id (the window would rank such rows as one partition), a NULL
+    vector or element or fewer than ``dim`` elements on either side, a
+    zero or NaN norm, or a non-finite cosine."""
+    import numpy as np
+
+    ids = [r[0] for r in rows]
+    if None in ids or len(set(ids)) != len(ids):
+        return None
+
+    def usable(v) -> bool:
+        return v is not None and len(v) >= dim and None not in v[:dim]
+
+    if not all(usable(c) for c in centroids):
+        return None
+    if not all(usable(r[1]) and r[2] is not None for r in rows):
+        return None
+    if not rows or not centroids:
+        return []
+    qv = np.array([r[1][:dim] for r in rows], dtype=np.float64)
+    qn = np.array([r[2] for r in rows], dtype=np.float64)
+    cv = np.array([c[:dim] for c in centroids], dtype=np.float64)
+    cn = np.zeros(len(centroids), dtype=np.float64)
+    for j in range(dim):
+        cn += cv[:, j] * cv[:, j]
+    cn = np.sqrt(cn)
+    if not ((qn > 0).all() and (cn > 0).all()):
+        return None
+    # blocks of queries keep the (queries × centroids) temporaries near
+    # 8 MB even for a budget-sized query set against 4096 centroids
+    step = max(1, (1 << 20) // len(centroids))
+    picks = []
+    for lo in range(0, len(rows), step):
+        block = qv[lo : lo + step]
+        dots = np.zeros((len(block), len(centroids)), dtype=np.float64)
+        for j in range(dim):
+            dots += block[:, j : j + 1] * cv[:, j]
+        cos = dots / (qn[lo : lo + step, None] * cn[None, :])
+        if not np.isfinite(cos).all():
+            return None
+        # stable sort of 0.0 - cos: descending cosine, ties in
+        # centroid-id order, and -0.0 folded into 0.0 as the engine's
+        # double ordering folds them
+        order = np.argsort(0.0 - cos, axis=1, kind="stable")
+        picks.append(order[:, : max(n_probe, 0)])
+    cells = np.concatenate(picks)
+    return [
+        (r[0], r[1], r[2], int(c)) for r, row in zip(rows, cells) for c in row
+    ]
+
+
+def _probe_cells(
+    queries: DataFrame,
+    centroids: list[list[float]],
+    dim: int,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[list, DataFrame]:
+    """Pick each query's ``n_probe`` nearest cells; return ``(cells,
+    probes_small)`` — the sorted probed-cell ids (the scan's IN-list,
+    which prunes partitions/buckets) and the (query_id, __qv, __qn,
+    cell) probe frame for the broadcast side.
+
+    Fast path: the query rows are collected ONCE, under the
+    ``_PROBE_COLLECT_SCALARS`` budget (|queries|·n_probe·dim scalars,
+    the size of the probe frame the driver then holds), the cells are
+    picked in numpy (:func:`_pick_cells_local`, bit-identical to the
+    Spark selection), and the probe frame is a local relation — no
+    crossJoin, shuffle window or probe-frame collect, and scanning the
+    probe frame costs no job. Over the budget, or on a row the driver
+    path does not reproduce exactly, the Spark selection
+    (:func:`_spark_probe_cells`) runs and :func:`_collect_probes`
+    collects or checkpoints its result."""
+    q = _query_frame(queries, dim, id_col, vec_col)
+    per_query = max(dim, 1) * max(n_probe, 1)
+    cap_rows = max(1, _PROBE_COLLECT_SCALARS // per_query)
+    rows = q.limit(cap_rows + 1).collect()
+    picked = None
+    if len(rows) <= cap_rows:
+        picked = _pick_cells_local(rows, centroids, dim, n_probe)
+    if picked is None:
+        probes = _spark_probe_cells(q, centroids, dim, n_probe)
+        return _collect_probes(probes, dim)
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    schema = StructType(q.schema.fields + [StructField("cell", LongType())])
+    cells = sorted({p[3] for p in picked})
+    return cells, local_frame(q.sparkSession, picked, schema)
+
+
+def _collect_probes(probes: DataFrame, dim: int) -> tuple[list, DataFrame]:
+    """Collect a Spark-built (query_id, __qv, __qn, cell) probe frame
+    onto the driver if it fits the scalar budget; return ``(cells,
+    probes_small)`` either way. Fast path: one execution, the broadcast
+    side rebuilt from the collected rows as a local relation. Over
+    budget: a lazy localCheckpoint, so the probe construction still
+    executes once, and the cells from a distinct-cell collect."""
+    cap_rows = max(1, _PROBE_COLLECT_SCALARS // max(dim, 1))
+    rows = probes.limit(cap_rows + 1).collect()
+    if len(rows) <= cap_rows:
+        cells = sorted({r["cell"] for r in rows})
+        return cells, local_frame(probes.sparkSession, rows, probes.schema)
+    ck = probes.localCheckpoint(eager=False)
+    cells = sorted(
+        r["cell"] for r in ck.select("cell").distinct().collect()
+    )
+    return cells, ck
 
 
 def _score_probed(
     probes: DataFrame, index: DataFrame, decode, dim: int, k: int
 ) -> DataFrame:
-    """Shared probe-scoring tail for every cell geometry (flat IVF and
-    two-level IMI): the probe frame is collected driver-side ONCE —
-    bounded by |queries|·probes-per-query rows of (query_id, __qv,
-    __qn, cell), control data by construction — the index is
-    partition/bucket-pruned to the probed cells FIRST, and only the
-    surviving slice pays ``decode`` + norm + cosine. The broadcast
-    side is rebuilt from the collected rows (createDataFrame), so the
-    probe plan executes exactly once and needs no localCheckpoint —
-    the lazy-checkpoint version paid a full physical-planning pass at
-    CONSTRUCT time (measured 1.1-5.2 s per call) plus a second
-    execution for the distinct-cell collect. ``probes`` must carry
-    (query_id, __qv, __qn, cell). Round 14: the collect is BUDGETED
-    (``_PROBE_COLLECT_SCALARS``) — an out-of-contract large query set
-    degrades to the checkpoint plan instead of OOMing the driver."""
+    """Probe-scoring tail for Spark-built probe frames (the two-level
+    IMI geometries, whose joint cell ranking runs in Spark): the frame
+    — (query_id, __qv, __qn, cell), |queries|·probes-per-query rows —
+    is collected ONCE under the scalar budget (:func:`_collect_probes`)
+    and scored by :func:`_score_cells`."""
+    cells, probes_local = _collect_probes(probes, dim)
+    return _score_cells(cells, probes_local, index, decode, dim, k)
+
+
+def _score_cells(
+    cells: list,
+    probes_local: DataFrame,
+    index: DataFrame,
+    decode,
+    dim: int,
+    k: int,
+) -> DataFrame:
+    """Shared scoring tail for every cell geometry (flat IVF and
+    two-level IMI): the index is partition/bucket-pruned to ``cells``
+    FIRST, only the surviving slice pays ``decode`` + norm + cosine
+    against the broadcast ``probes_local`` (query_id, __qv, __qn,
+    cell), and a per-query window keeps the top ``k`` (cosine desc,
+    neighbor id asc; self-matches excluded)."""
     from pyspark.sql import Window
 
     from .similarity import dot, norm
 
-    cells, probes_local = _collect_probes(probes, dim)
     decoded = decode(index.filter(F.col("cell").isin(cells))).withColumn(
         "__cn", norm("__cv", dim)
     )
@@ -1419,7 +1511,8 @@ def imi_pb_probe_cells(
             F.col("centroid_id").alias("__c1"), "__center1",
         )
     )
-    cent2 = spark.createDataFrame(
+    cent2 = local_frame(
+        spark,
         [
             (b, j, [float(x) for x in c])
             for b, book in enumerate(books2)

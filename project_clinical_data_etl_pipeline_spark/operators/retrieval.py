@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .classify import _round_half_up
 from .similarity import _lit_double
 from .text import words_array
@@ -247,9 +248,7 @@ def bm25_topk_multi(
         base = base.localCheckpoint(eager=False)
 
     spark = docs.sparkSession
-    terms_df = spark.createDataFrame(
-        [(t,) for t in union_terms], "__term string"
-    )
+    terms_df = local_frame(spark, [(t,) for t in union_terms], "__term string")
     tok = (
         base.select(F.col(id_col), F.explode("__ws").alias("__term"))
         .join(F.broadcast(terms_df), on="__term")

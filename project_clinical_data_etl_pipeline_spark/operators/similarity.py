@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _col_sql(c: Column | str) -> str:
     """SQL fragment for a column reference. The unrolled builders need
@@ -345,8 +347,10 @@ def cell_assign(
 
 def _centroid_df(spark, centroids: list[list[float]]) -> DataFrame:
     """(centroid_id, __center) from driver-side centroid vectors — tiny
-    by definition (n_centroids × dim doubles), always broadcast."""
-    return spark.createDataFrame(
+    by definition (n_centroids × dim doubles), always broadcast; a
+    local relation, so the broadcast costs no scan job."""
+    return local_frame(
+        spark,
         [(i, [float(x) for x in v]) for i, v in enumerate(centroids)],
         "centroid_id bigint, __center array<double>",
     )
@@ -491,43 +495,18 @@ def ivf_topk_indexed(
     n_probe: int = 4,
 ) -> DataFrame:
     """Top-k against a persisted IVF index (see
-    :func:`persist_ivf_index`): probe cells are computed driver-side
-    from the (small-by-contract) query set, pushed into the bucketed
-    scan as an IN filter — Spark prunes to the matching buckets
-    (SelectedBucketsCount in the plan) and the only Exchange in the
-    whole query is the final per-query rank window."""
-    cent = _centroid_df(spark, centroids)
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            norm(F.col(vec_col), dim).alias("__qn"),
-        )
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            "__qv",
-            "__qn",
-            "centroid_id",
-            cosine(F.col("__qv"), F.col("__center"), dim).alias("__sim"),
-        )
-        .withColumn("__rn", F.row_number().over(w_probe))
-        .filter(F.col("__rn") <= n_probe)
-        .select("query_id", "__qv", "__qn", F.col("centroid_id").alias("cell"))
-    )
-    # queries are small by contract → collect the probe frame ONCE (a
-    # bounded driver round-trip that buys scan-time bucket pruning) and
-    # rebuild the broadcast side from the collected rows, so the
-    # crossJoin+window probe plan executes exactly once (round 13 —
-    # the _score_probed single-collect pattern). Round 14: budgeted —
-    # past _PROBE_COLLECT_SCALARS the probe degrades to the
-    # lazy-checkpoint plan instead of OOMing the driver.
-    from .quantization import _collect_probes
+    :func:`persist_ivf_index`): probe cells are picked by the shared
+    selector (``quantization._probe_cells`` — on the driver when the
+    small-by-contract query set fits the collect budget, else a Spark
+    crossJoin + window with a collected or checkpointed result) and
+    pushed into the bucketed scan as an IN filter — Spark prunes to the
+    matching buckets (SelectedBucketsCount in the plan) and the only
+    Exchange in the whole query is the final per-query rank window."""
+    from .quantization import _probe_cells
 
-    cells, probes_local = _collect_probes(probes, dim)
+    cells, probes_local = _probe_cells(
+        queries, centroids, dim, n_probe, id_col, vec_col
+    )
     assigned = spark.table(table).filter(F.col("cell").isin(cells))
     scored = (
         assigned.join(F.broadcast(probes_local), on="cell")

@@ -1,5 +1,5 @@
 """Kernel-equivalence gates for PQ encode/decode (operators.quantization):
-the Arrow encode kernel and the broadcast-join decode must be
+the Arrow encode kernel and the one-row-broadcast decode must be
 BIT-IDENTICAL to the literal-expression kernels they bound the compile
 cost of — same codes, same reconstructed doubles — and the 'auto'
 switch must pick the all-JVM expression plan at graded small ks and the
@@ -78,23 +78,6 @@ def test_arrow_encode_matches_expr_kernel_ks256(corpus):
     assert arrow == expr
 
 
-def test_joined_reconstruct_matches_expr(corpus, codebooks):
-    enc = Q.pq_encode(corpus, codebooks).select("vec_id", "pq_code")
-    via_expr = {
-        r["vec_id"]: r["dec"]
-        for r in enc.select(
-            "vec_id", Q.pq_reconstruct_expr(codebooks).alias("dec")
-        ).collect()
-    }
-    via_join = {
-        r["vec_id"]: r["dec"]
-        for r in Q.pq_reconstruct_joined(enc, codebooks, out_col="dec")
-        .select("vec_id", "dec")
-        .collect()
-    }
-    assert via_join == via_expr  # exact doubles — decode is pure lookup
-
-
 def test_auto_kernel_switches_on_codebook_size(corpus, codebooks):
     # graded small-ks path: all-JVM expression plan, no Python eval
     small = Q.pq_encode(corpus, codebooks, kernel="auto").select(
@@ -132,8 +115,8 @@ def test_ks256_pq_topk_bounded_compile_and_codes_only_scan(
     elapsed = time.time() - t0
     assert len(rows) == 2 * 5
     # generous wall bound — the literal path burned ~5 s in ANALYSIS
-    # alone per plan at this ks; the joined/arrow path must stay well
-    # under the old compile floor even including execution
+    # alone per plan at this ks; the broadcast/arrow path must stay
+    # well under that compile floor even including execution
     assert elapsed < 30, f"ks=256 encode+persist+topk took {elapsed:.1f}s"
     plan = out._jdf.queryExecution().executedPlan().toString()
     schemas = [
@@ -150,7 +133,7 @@ def test_ivfpq256_bench_serving_contract(spark, sf_dir):
     """bench.py's ks=256 serving twin end-to-end at production
     parameters: k results per query, bucket-pruned scan reading codes
     (never vectors), and ZERO Python in the probe plan — the decode is
-    the broadcast-joined codebook lookup, so the faiss-standard ks
+    the one-row-broadcast codebook lookup, so the faiss-standard ks
     never inlines its 16,384 scalars into Catalyst."""
     from project_clinical_data_etl_pipeline_spark.queries.llmdata import (
         ivfpq256_probe,
@@ -177,9 +160,8 @@ def test_bcast_reconstruct_matches_expr_and_drops_corrupt_codes(
     """Round-14 decode kernel: the one-row-broadcast lookup
     (pq_reconstruct_bcast) is bit-identical to the literal-expression
     kernel at graded ks AND at ks=256, and the dispatcher's defensive
-    filter drops rows with null/out-of-range codes exactly like the
-    old joined path did (row-equivalent kernels — the r13 ADVICE
-    item)."""
+    filter drops rows with null/out-of-range codes for every kernel
+    (row-equivalent kernels)."""
     for books in (codebooks, _big_codebooks()):
         enc = Q.pq_encode(corpus, books).select("vec_id", "pq_code")
         via_expr = {
@@ -196,8 +178,8 @@ def test_bcast_reconstruct_matches_expr_and_drops_corrupt_codes(
         }
         assert via_bcast == via_expr and len(via_bcast) > 0
 
-    # corrupt codes: a NULL pq_code row must drop, like the inner
-    # broadcast join used to drop it — never a NULL decoded vector
+    # corrupt codes: a NULL pq_code row must drop — never a NULL
+    # decoded vector
     enc = Q.pq_encode(corpus, codebooks).select("vec_id", "pq_code")
     corrupt = enc.withColumn(
         "pq_code",

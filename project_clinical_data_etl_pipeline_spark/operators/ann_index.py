@@ -121,19 +121,32 @@ def _load_meta_pointed(path: str) -> tuple[dict, str | None]:
     to the unversioned ``_meta.json`` sidecar next to the data — old
     targets keep working, exactly as txlog migrates legacy manifests;
     the next parameter-writing commit flips them to a versioned
-    pointer and vacuum then retires the legacy file."""
+    pointer and vacuum then retires the legacy file.
+
+    A sidecar marked ``per_branch`` (a two-level index with one level-2
+    codebook per branch, a geometry the package no longer serves)
+    raises ValueError: read as a shared-codebook index it would probe
+    and append under the wrong cell ids."""
     root = _data_path(path)
     meta_path = txlog.current_meta_file(root)
+    pointer = None
     if meta_path is None:
-        legacy = os.path.join(root, "_meta.json")
-        if txlog.read_manifest(root)["version"] >= 0 and os.path.exists(
-            legacy
+        meta_path = os.path.join(root, "_meta.json")
+        if txlog.read_manifest(root)["version"] < 0 or not os.path.exists(
+            meta_path
         ):
-            with open(legacy) as fh:
-                return json.load(fh), None
-        raise FileNotFoundError(f"no committed index at {path!r}")
+            raise FileNotFoundError(f"no committed index at {path!r}")
+    else:
+        pointer = os.path.relpath(meta_path, root)
     with open(meta_path) as fh:
-        return json.load(fh), os.path.relpath(meta_path, root)
+        meta = json.load(fh)
+    if meta.get("per_branch"):
+        raise ValueError(
+            f"the index at {path!r} uses per-branch level-2 codebooks, "
+            "which are no longer supported; build a new index at that "
+            "path (build_imi_index replaces it)"
+        )
+    return meta, pointer
 
 
 def _land_meta(path: str, meta: dict) -> str:
@@ -191,19 +204,9 @@ def _encode(
     sidecar's cell geometry (flat coarse quantizer vs two-level IMI).
     ``cell`` is cast to int so the values written match what parquet
     partition discovery infers back on read (type-stable round trip)."""
-    from .quantization import imi_index, imi_pb_index, ivfpq_index
+    from .quantization import imi_index, ivfpq_index
 
-    if meta.get("quantizer") == "imi" and meta.get("per_branch"):
-        enc = imi_pb_index(
-            corpus,
-            meta["centroids"],
-            meta["centroids2"],
-            meta["codebooks"],
-            meta["dim"],
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-    elif meta.get("quantizer") == "imi":
+    if meta.get("quantizer") == "imi":
         enc = imi_index(
             corpus,
             meta["centroids"],
@@ -388,7 +391,6 @@ def build_imi_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     carry_lineages: dict | None = None,
-    per_branch: bool = False,
 ) -> dict:
     """Build the index under the TWO-LEVEL (IMI-style) coarse quantizer
     — the tier past the flat quantizer's 4096-centroid cap
@@ -404,27 +406,18 @@ def build_imi_index(
     measure level-1 assignment distance (the distribution-shift signal
     is level-1's fit; level-2 refines within it).
 
-    ``per_branch=True`` trains a SEPARATE k2-entry residual codebook
-    per level-1 branch (quantization.imi_train_perbranch) — the
-    HIGH-RECALL configuration: each branch's residual distribution
-    gets its own dictionary (measured sf4: recall 0.875 shared →
-    parity with flat per-branch) at the cost of the centroid budget
-    returning to k1·k2 (flat-class — per-branch is a recall knob, not
-    a cap escape; the curve is in SCALE.md round 12)."""
-    from .quantization import (
-        derived_imi_k,
-        imi_train,
-        imi_train_perbranch,
-        pq_train,
-    )
+    The level-2 codebook is always SHARED by every branch. A codebook
+    per branch was measured and dropped: it lost on recall and on build
+    time at every scale point of SCALE.md round 12, and it spends the
+    k1·k2 centroid budget the two-level geometry exists to avoid."""
+    from .quantization import derived_imi_k, imi_train, pq_train
 
     corpus = corpus.localCheckpoint(eager=False)  # scanned repeatedly
     if k1 is None or k2 is None:
         n = corpus.count()
         k1 = k1 if k1 is not None else derived_imi_k(n)
         k2 = k2 if k2 is not None else derived_imi_k(n)
-    train = imi_train_perbranch if per_branch else imi_train
-    cents1, cents2 = train(
+    cents1, cents2 = imi_train(
         corpus,
         dim=dim,
         k1=k1,
@@ -446,7 +439,6 @@ def build_imi_index(
     )
     meta = {
         "quantizer": "imi",
-        "per_branch": per_branch,
         "dim": dim,
         "m": m,
         "ks": ks,
@@ -599,7 +591,6 @@ def rebuild_index(
             id_col=meta["id_col"],
             vec_col=meta["vec_col"],
             carry_lineages=prior,
-            per_branch=bool(meta.get("per_branch")),
         )
     return build_ivfpq_index(
         spark,
@@ -754,12 +745,10 @@ def split_cell(
     is pinned post-split in tests); (b) the drift baseline is NOT
     re-measured (finer centroids slightly shrink future assignment
     distances, biasing the drift ratio conservatively low — the hot
-    trigger, which split answers, is unaffected); (c) the per-branch
-    variant has no split (it is the measured honest loser —
-    SCALE.md round 12 — and a per-branch codebook could grow past the
-    shared stride); (d) growing the SHARED level-2 codebook refines
-    FUTURE assignments of every branch (semantically a finer shared
-    dictionary — the same bounded-misplacement class as (a)).
+    trigger, which split answers, is unaffected); (c) growing the
+    SHARED level-2 codebook refines FUTURE assignments of every branch
+    (semantically a finer shared dictionary — the same
+    bounded-misplacement class as (a)).
 
     Returns ``{"cell", "new_cell_ids", "rows", "n_centroids"}``.
 
@@ -773,12 +762,6 @@ def split_cell(
     cell-rewriting verbs racing can re-add each other's retired rows."""
     for _ in range(_META_RETRIES):
         meta, pointer = _load_meta_pointed(path)
-        if meta.get("per_branch"):
-            raise NotImplementedError(
-                "split_cell supports the flat and shared-IMI geometries; "
-                "the per-branch variant is the measured honest loser — "
-                "rebuild"
-            )
         try:
             if meta.get("quantizer") == "imi":
                 return _split_imi_cell(
@@ -1049,25 +1032,14 @@ def probe_index(
     sidecar, so any process can serve it cold, under EITHER geometry:
     flat (``quantization.ivfpq_topk``) or two-level IMI
     (``quantization.imi_topk`` — ``n_probe`` applies per level there,
-    probing n_probe² composite cells). Both share the cell-pruned
-    scan / codebook-lookup-on-the-probed-slice plan."""
-    from .quantization import imi_pb_topk, imi_topk, ivfpq_topk
+    probing n_probe² composite cells). Both pick their (level-1) cells
+    with the one flat selector, ``quantization._probe_cells``, and
+    share the cell-pruned scan / codebook-lookup-on-the-probed-slice
+    plan. A sidecar of a per-branch index raises ValueError
+    (:func:`_load_meta_pointed`)."""
+    from .quantization import imi_topk, ivfpq_topk
 
     meta = load_index_meta(path)
-    if meta.get("quantizer") == "imi" and meta.get("per_branch"):
-        return imi_pb_topk(
-            queries,
-            read_index(spark, path),
-            meta["centroids"],
-            meta["centroids2"],
-            meta["codebooks"],
-            meta["dim"],
-            k=k,
-            n_probe1=n_probe,
-            n_probe2=n_probe,
-            id_col=meta["id_col"],
-            vec_col=meta["vec_col"],
-        )
     if meta.get("quantizer") == "imi":
         return imi_topk(
             queries,

@@ -32,13 +32,6 @@ _CLOSURE_BC_ROWS = int(os.environ.get("SPARK_GRAFT_CLOSURE_BC_ROWS", "2000000"))
 _PAGERANK_BC_NODES = int(os.environ.get("SPARK_GRAFT_PAGERANK_BC_NODES", "5000000"))
 
 
-def parents_of(edges: DataFrame, codes: DataFrame, code_col: str = "code") -> DataFrame:
-    """ECL ``>!`` — direct parents (OP-24). ``edges(child_id, parent_id)``."""
-    return codes.join(
-        F.broadcast(edges), on=codes[code_col] == edges["child_id"], how="inner"
-    ).drop("child_id")
-
-
 def children_of(edges: DataFrame, codes: DataFrame, code_col: str = "code") -> DataFrame:
     """ECL ``<!`` — direct children (OP-25), reversed edge direction."""
     return codes.join(
@@ -222,18 +215,6 @@ def closure_insert_edges(
         .groupBy("descendant_id", "ancestor_id")
         .agg(F.min("min_depth").alias("min_depth"))
     )
-
-
-def descendants_of_any(
-    closure: DataFrame, roots: DataFrame, root_col: str = "code"
-) -> DataFrame:
-    """ECL ``<<`` via the materialized closure: all descendants of the
-    root set — one broadcast equi-join, no recursion at query time."""
-    return closure.join(
-        F.broadcast(roots.select(F.col(root_col).alias("ancestor_id"))),
-        on="ancestor_id",
-        how="inner",
-    ).select(F.col("descendant_id"), F.col("ancestor_id"), F.col("min_depth"))
 
 
 #: Fixed-point scale for pagerank(): ranks are BIGINTs in units of

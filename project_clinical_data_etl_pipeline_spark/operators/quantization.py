@@ -762,7 +762,9 @@ def _probe_cells(
     """Pick each query's ``n_probe`` nearest cells; return ``(cells,
     probes_small)`` — the sorted probed-cell ids (the scan's IN-list,
     which prunes partitions/buckets) and the (query_id, __qv, __qn,
-    cell) probe frame for the broadcast side.
+    cell) probe frame for the broadcast side. The one cosine cell
+    selector of both geometries: the flat IVF probe's cells, and the
+    two-level probe's level-1 branches (:func:`imi_probe_cells`).
 
     Fast path: the query rows are collected ONCE, under the
     ``_PROBE_COLLECT_SCALARS`` budget (|queries|·n_probe·dim scalars,
@@ -808,18 +810,6 @@ def _collect_probes(probes: DataFrame, dim: int) -> tuple[list, DataFrame]:
         r["cell"] for r in ck.select("cell").distinct().collect()
     )
     return cells, ck
-
-
-def _score_probed(
-    probes: DataFrame, index: DataFrame, decode, dim: int, k: int
-) -> DataFrame:
-    """Probe-scoring tail for Spark-built probe frames (the two-level
-    IMI geometries, whose joint cell ranking runs in Spark): the frame
-    — (query_id, __qv, __qn, cell), |queries|·probes-per-query rows —
-    is collected ONCE under the scalar budget (:func:`_collect_probes`)
-    and scored by :func:`_score_cells`."""
-    cells, probes_local = _collect_probes(probes, dim)
-    return _score_cells(cells, probes_local, index, decode, dim, k)
 
 
 def _score_cells(
@@ -1112,8 +1102,6 @@ def imi_index(
     :func:`ivfpq_index` under the finer geometry. PQ codes quantize the
     RAW vector (the flat index's convention), so decode/probe tails are
     shared verbatim between the two geometries."""
-    from .dedup import fan_out
-
     assigned = imi_cell_cols(
         fan_out(corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))),
         cents1,
@@ -1142,8 +1130,9 @@ def imi_probe_cells(
     probed composite cells, JOINT-ranked:
 
     1. top ``n_probe1`` level-1 branches by cosine (ties → lowest id)
-       — prunes the k1 axis so the pair scoring below never touches
-       k1·k2 candidates;
+       — the flat selector, :func:`_probe_cells` (on the driver when
+       the query set fits the collect budget) — prunes the k1 axis so
+       the pair scoring below never touches k1·k2 candidates;
     2. every surviving branch expands against the SHARED level-2
        codebook and the ``n_probe1·k2`` COMPOSITE centroids
        ``c = c1 + c2`` rank by actual L2 distance to the query
@@ -1161,35 +1150,17 @@ def imi_probe_cells(
     ~(p1·p2)/(k1·k2)."""
     from pyspark.sql import Window
 
-    from .similarity import _centroid_df, cosine, dot, norm
+    from .similarity import _centroid_df, dot
 
     k2 = len(cents2) if stride is None else stride
     spark = queries.sparkSession
-    cent1 = _centroid_df(spark, cents1)
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("centroid_id").asc()
+    branches, lvl1 = _probe_cells(
+        queries, cents1, dim, n_probe1, id_col, vec_col
     )
-    lvl1 = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            norm(F.col(vec_col), dim).alias("__qn"),
-        )
-        .crossJoin(F.broadcast(cent1))
-        .select(
-            "query_id",
-            "__qv",
-            "__qn",
-            "centroid_id",
-            F.col("__center").alias("__center1"),
-            cosine(F.col("__qv"), F.col("__center"), dim).alias("__sim"),
-        )
-        .withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") <= n_probe1)
-        .select(
-            "query_id", "__qv", "__qn",
-            F.col("centroid_id").alias("__c1"), "__center1",
-        )
+    cent1 = local_frame(
+        spark,
+        [(b, [float(x) for x in cents1[b]]) for b in branches],
+        "__c1 bigint, __center1 array<double>",
     )
     cent2 = _centroid_df(spark, cents2).select(
         F.col("centroid_id").alias("__cid2"),
@@ -1199,7 +1170,8 @@ def imi_probe_cells(
         F.col("__d").asc(), F.col("cell").asc()
     )
     return (
-        lvl1.crossJoin(F.broadcast(cent2))
+        lvl1.join(F.broadcast(cent1), F.col("cell") == F.col("__c1"))
+        .crossJoin(F.broadcast(cent2))
         .withColumn(
             "__comp",
             F.expr("zip_with(__center1, __center2, (a, b) -> a + b)"),
@@ -1220,7 +1192,7 @@ def imi_probe_cells(
         .withColumn("__rnj", F.row_number().over(wj))
         .filter(F.col("__rnj") <= n_probe1 * n_probe2)
         .select("query_id", "__qv", "__qn", "cell")
-        # consumed twice downstream — _score_probed collects once and
+        # consumed twice downstream — imi_topk collects once and
         # rebuilds the broadcast side, so no localCheckpoint here
     )
 
@@ -1240,337 +1212,21 @@ def imi_topk(
     stride: int | None = None,
 ) -> DataFrame:
     """Two-level IVF+PQ top-k: probe ``n_probe1·n_probe2`` composite
-    cells of the k1·k2-cell index, decode and score ONLY that slice —
-    the same partition-pruned scan / broadcast-probe / window tail as
-    the flat :func:`ivfpq_topk` (shared `_score_probed`), under a cell
-    geometry whose candidate fraction keeps falling past the flat
-    quantizer's 4096-centroid cap."""
+    cells of the k1·k2-cell index (:func:`imi_probe_cells`, its frame
+    collected once under the scalar budget by :func:`_collect_probes`),
+    decode and score ONLY that slice — the same partition-pruned scan /
+    broadcast-probe / window tail as the flat :func:`ivfpq_topk`
+    (:func:`_score_cells`), under a cell geometry whose candidate
+    fraction keeps falling past the flat quantizer's 4096-centroid
+    cap."""
     probes = imi_probe_cells(
         queries, cents1, cents2, dim, n_probe1, n_probe2, id_col, vec_col,
         stride=stride,
     )
-    return _score_probed(
-        probes,
-        index,
-        lambda df: pq_reconstruct(df, codebooks, out_col="__cv"),
-        dim,
-        k,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Per-branch residual codebooks — the IMI recall knob. The SHARED
-# level-2 codebook keeps only k1+k2 centroids driver-side but fits all
-# branches' residual distributions with one dictionary; measured at
-# sf4 that costs recall (0.875 vs the flat quantizer's 0.975 at equal
-# cell counts). Training a SEPARATE k2-entry codebook per level-1
-# branch fits each branch's residuals exactly — recall returns, but
-# the centroid budget returns to k1·k2 (flat-class): per-branch is the
-# HIGH-RECALL middle configuration, not a cap escape. Pick by budget:
-# shared-IMI (2·n^(1/4) centroids) when the driver pull binds,
-# per-branch (√n) when recall binds — the measured curve is in
-# SCALE.md round 12.
-# ---------------------------------------------------------------------------
-
-
-def _perbranch_assign_arrow_udf(books2: list[list[list[float]]]):
-    """Arrow kernel: L2 argmin of a residual vector against ITS
-    branch's codebook — d(c) = ||c||² − 2·(r·c), the dot left-folded
-    per element from a 0.0 seed (the _pq_encode_arrow_udf fold, so a
-    SQL twin's list_dot_product reproduces it), ties → lowest cid.
-    Branches may hold fewer than k2 centroids (small branches seed
-    short); missing slots carry +inf squared-norm and never win."""
-    global pd
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    k1 = len(books2)
-    k2 = max(len(b) for b in books2)
-    w = len(books2[0][0])
-    C = np.zeros((k1, k2, w), dtype=np.float64)
-    SQ = np.full((k1, k2), np.inf, dtype=np.float64)
-    for b, book in enumerate(books2):
-        for j, c in enumerate(book):
-            C[b, j] = np.asarray(c, dtype=np.float64)
-            SQ[b, j] = _fold_sq_norm(c)
-
-    @pandas_udf("bigint")
-    def assign(res: pd.Series, c1: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if len(res) == 0:
-            return pd.Series([], dtype="int64")
-        X = np.array(
-            [np.asarray(v, dtype=np.float64) for v in res], dtype=np.float64
-        )
-        B = c1.to_numpy(dtype=np.int64)
-        Cs = C[B]  # (n, k2, w) — each row's own branch codebook
-        n = X.shape[0]
-        acc = np.zeros((n, Cs.shape[1]), dtype=np.float64)
-        for j in range(Cs.shape[2]):
-            acc = acc + X[:, j : j + 1] * Cs[:, :, j]
-        d = SQ[B] - 2.0 * acc
-        return pd.Series(np.argmin(d, axis=1).astype("int64"))
-
-    return assign
-
-
-def imi_train_perbranch(
-    corpus: DataFrame,
-    dim: int,
-    k1: int = 16,
-    k2: int = 16,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int | None = 6,
-) -> tuple[list[list[float]], list[list[list[float]]]]:
-    """Train level-1 spherical k-means + ONE L2 codebook PER BRANCH
-    over that branch's residuals, FUSED across branches: each Lloyd
-    iteration is one map pass (the per-branch Arrow argmin) + ONE
-    aggregate over (branch, cell, element) — a single shuffle no
-    matter how many branches, the pq_train fused-subspace pattern with
-    "subspace" ↦ "branch". Determinism contract inherited: per-branch
-    min-id seeds, DECIMAL-exact means (round_dp), lowest-id ties;
-    branches with fewer than k2 residuals seed short (their codebook
-    just has fewer entries). Returns ``(cents1, books2)`` with
-    ``books2[branch][cid]`` the centroid vectors."""
-    from pyspark.sql import Window
-
-    from .similarity import DECIMAL_MEAN_SQL, kmeans_centroids
-
-    corpus = corpus.localCheckpoint(eager=False)
-    cents1 = kmeans_centroids(
-        corpus,
-        dim=dim,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_centroids=k1,
-        n_iter=n_iter,
-        round_dp=round_dp,
-    )
-    # fan_out: a single-file corpus scans as one partition and the
-    # Arrow assignment kernel would run serial in one Python worker
-    res = fan_out(
-        ivf_residuals(corpus, cents1, dim, id_col, vec_col).select(
-            F.col(id_col), F.col("cell").alias("__b"), F.col("__res")
-        )
-    ).localCheckpoint(eager=False)  # scanned per iteration + seeds
-    wseed = Window.partitionBy("__b").orderBy(F.col(id_col).asc())
-    seed_rows = (
-        res.withColumn("__rn", F.row_number().over(wseed))
-        .filter(F.col("__rn") <= k2)
-        .select("__b", (F.col("__rn") - 1).alias("__cid"), "__res")
-        .collect()
-    )
-    books2: list[list[list[float]]] = [[] for _ in range(k1)]
-    for r in sorted(seed_rows, key=lambda r: (r["__b"], r["__cid"])):
-        books2[r["__b"]].append([float(x) for x in r["__res"]])
-    for b in range(k1):
-        if not books2[b]:
-            # a branch that owns no vectors gets one zero centroid so
-            # lookups stay total; it can never be probed non-trivially
-            books2[b].append([0.0] * dim)
-
-    mean_sql = DECIMAL_MEAN_SQL
-    if round_dp is not None:
-        mean_sql = f"round({mean_sql}, {round_dp})"
-    for _ in range(n_iter):
-        assign = _perbranch_assign_arrow_udf(books2)
-        assigned = res.select(
-            "__b",
-            assign(F.col("__res"), F.col("__b")).alias("__cid"),
-            F.posexplode("__res").alias("__idx", "__val"),
-        )
-        means = (
-            assigned.groupBy("__b", "__cid", "__idx")
-            .agg(F.expr(mean_sql).alias("__mv"))
-        )
-        updated: dict[tuple[int, int], list[float]] = {}
-        for r in means.collect():
-            updated.setdefault((r["__b"], r["__cid"]), [0.0] * dim)[
-                r["__idx"]
-            ] = r["__mv"]
-        books2 = [
-            [
-                updated.get((b, j), books2[b][j])
-                for j in range(len(books2[b]))
-            ]
-            for b in range(k1)
-        ]
-    return cents1, books2
-
-
-def imi_pb_cell_cols(
-    df: DataFrame,
-    cents1: list[list[float]],
-    books2: list[list[list[float]]],
-    dim: int,
-    vec_col: str,
-) -> DataFrame:
-    """Composite cell under PER-BRANCH codebooks:
-    ``cell = c1·k2max + c2`` with c2 the Arrow per-branch L2 argmin of
-    the residual. One map pass; the codebooks ride the kernel closure
-    (k1·k2·dim doubles — the budget per-branch deliberately spends)."""
-    from .similarity import cell_assign, norm
-
-    k2max = max(len(b) for b in books2)
-    assign = _perbranch_assign_arrow_udf(books2)
-    out = (
-        df.withColumn("__imn", norm(F.col(vec_col), dim))
-        .withColumn("__c1", cell_assign(vec_col, "__imn", cents1, dim))
-        .withColumn(
-            "__res",
-            F.expr(
-                f"zip_with({_col_sql(vec_col)}, "
-                f"{_centroid_lookup_expr(cents1, '__c1')}, "
-                f"(a, b) -> CAST(a AS DOUBLE) - b)"
-            ),
-        )
-    )
-    return out.withColumn(
-        "cell",
-        (F.col("__c1") * k2max + assign(F.col("__res"), F.col("__c1"))).cast(
-            "bigint"
-        ),
-    ).drop("__imn", "__c1", "__res")
-
-
-def imi_pb_index(
-    corpus: DataFrame,
-    cents1: list[list[float]],
-    books2: list[list[list[float]]],
-    codebooks: list[list[list[float]]],
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(neighbor_id, cell, pq_code) under per-branch level-2 codebooks
-    — the :func:`imi_index` twin at the high-recall configuration."""
-    from .dedup import fan_out
-
-    assigned = imi_pb_cell_cols(
-        fan_out(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
-        ),
-        cents1,
-        books2,
-        dim,
-        vec_col,
-    )
-    return pq_encode(assigned, codebooks, vec_col=vec_col).select(
-        "neighbor_id", "cell", "pq_code"
-    )
-
-
-def imi_pb_probe_cells(
-    queries: DataFrame,
-    cents1: list[list[float]],
-    books2: list[list[list[float]]],
-    dim: int,
-    n_probe1: int = 4,
-    n_probe2: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Joint-ranked probes under per-branch codebooks: the level-2
-    candidate frame carries (branch, cid2, center2) — only the pairs
-    that EXIST — joined to the surviving level-1 branches, then the
-    same composite-centroid distance ranking as the shared-codebook
-    probe."""
-    from pyspark.sql import Window
-
-    from .similarity import _centroid_df, cosine, dot, norm
-
-    k2max = max(len(b) for b in books2)
-    spark = queries.sparkSession
-    cent1 = _centroid_df(spark, cents1)
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("centroid_id").asc()
-    )
-    lvl1 = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            norm(F.col(vec_col), dim).alias("__qn"),
-        )
-        .crossJoin(F.broadcast(cent1))
-        .select(
-            "query_id",
-            "__qv",
-            "__qn",
-            "centroid_id",
-            F.col("__center").alias("__center1"),
-            cosine(F.col("__qv"), F.col("__center"), dim).alias("__sim"),
-        )
-        .withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") <= n_probe1)
-        .select(
-            "query_id", "__qv", "__qn",
-            F.col("centroid_id").alias("__c1"), "__center1",
-        )
-    )
-    cent2 = local_frame(
-        spark,
-        [
-            (b, j, [float(x) for x in c])
-            for b, book in enumerate(books2)
-            for j, c in enumerate(book)
-        ],
-        "__b bigint, __cid2 bigint, __center2 array<double>",
-    )
-    wj = Window.partitionBy("query_id").orderBy(
-        F.col("__d").asc(), F.col("cell").asc()
-    )
-    return (
-        lvl1.join(F.broadcast(cent2), F.col("__c1") == F.col("__b"))
-        .withColumn(
-            "__comp",
-            F.expr("zip_with(__center1, __center2, (a, b) -> a + b)"),
-        )
-        .select(
-            "query_id",
-            "__qv",
-            "__qn",
-            (F.col("__c1") * k2max + F.col("__cid2"))
-            .cast("bigint")
-            .alias("cell"),
-            (
-                F.expr(
-                    "aggregate(__comp, CAST(0 AS DOUBLE), "
-                    "(acc, x) -> acc + x * x)"
-                )
-                - F.lit(2.0) * dot(F.col("__qv"), F.col("__comp"), dim)
-            ).alias("__d"),
-        )
-        .withColumn("__rnj", F.row_number().over(wj))
-        .filter(F.col("__rnj") <= n_probe1 * n_probe2)
-        .select("query_id", "__qv", "__qn", "cell")
-        # _score_probed collects once and rebuilds the broadcast side
-    )
-
-
-def imi_pb_topk(
-    queries: DataFrame,
-    index: DataFrame,
-    cents1: list[list[float]],
-    books2: list[list[list[float]]],
-    codebooks: list[list[list[float]]],
-    dim: int,
-    k: int = 5,
-    n_probe1: int = 4,
-    n_probe2: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-branch IMI top-k — same probe-pruned scan / decode /
-    window tail (:func:`_score_probed`) under the per-branch probes."""
-    probes = imi_pb_probe_cells(
-        queries, cents1, books2, dim, n_probe1, n_probe2, id_col, vec_col
-    )
-    return _score_probed(
-        probes,
+    cells, probes_local = _collect_probes(probes, dim)
+    return _score_cells(
+        cells,
+        probes_local,
         index,
         lambda df: pq_reconstruct(df, codebooks, out_col="__cv"),
         dim,

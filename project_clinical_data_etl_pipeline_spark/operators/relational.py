@@ -60,14 +60,6 @@ def anti_join(fact: DataFrame, exclude: DataFrame, on: str | list[str]) -> DataF
     return fact.join(exclude, on=on, how="left_anti")
 
 
-def exists_in_array(df: DataFrame, arr: Column, pred) -> DataFrame:
-    """OP-11: predicate on an element of a nested array
-    (reference src/coding_task_3.py:54-87 — ``code=system|code`` over
-    ``code.coding[]``). Higher-order ``exists`` — stays JVM-side, no
-    explode, no shuffle."""
-    return df.filter(F.exists(arr, pred))
-
-
 def array_remove_matching(arr: Column, pred) -> Column:
     """OP-13: array-element deletion by predicate (reference
     src/coding_task_1.py:199-204 removes the first 'us-ssn' identifier;
@@ -218,19 +210,6 @@ def time_bucket_trend(
     return (
         df.groupBy(F.date_trunc(bucket, F.col(ts)).alias(f"{bucket}_start"), *group_cols)
         .agg(*aggs)
-    )
-
-
-def latest_per_key(df: DataFrame, key: str, ts: str) -> DataFrame:
-    """OP-40 ranking variant: latest row per key ("latest observation per
-    patient", insights.md:173). One shuffle on the key; ties broken by
-    the key column for determinism. For skewed keys prefer
-    :func:`argmax_per_key` — same answer, no window."""
-    w = Window.partitionBy(key).orderBy(F.col(ts).desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
     )
 
 

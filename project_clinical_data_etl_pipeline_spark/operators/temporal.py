@@ -499,24 +499,23 @@ def interval_overlap_stats(
       and the candidate max at ties evaluates to the same value either
       way), so ties need no canonical tiebreak.
 
-    ``id_cols`` reproduces canonical-pair-order semantics under
-    DUPLICATE row identities: a SQL twin that dedupes mirror pairs with
-    ``(a.id…) < (b.id…)`` silently excludes pairs of rows SHARING an
-    id tuple (neither direction of a strict tuple compare holds), and
-    rows with a NULL id component pair with nothing (the comparison is
-    NULL). With ``id_cols`` set the sweep matches that exactly:
+    ``id_cols`` gives rows an identity: only pairs of rows with
+    DIFFERENT id tuples count (rows sharing an id tuple never pair),
+    and rows with any NULL id component are excluded. With ``id_cols``
+    set:
 
     - NULL-id rows are dropped with the well-formed filter;
     - the pair count subtracts the same-id pairs via a SECOND window
       over (keys, id) — same partitioning (hash on keys satisfies the
       finer clustering), so it costs a sort, not an exchange;
-    - the prefix-max candidate is kept only for rows with NO same-id
-      prior (``D`` null): any pair whose later row has a same-id prior
-      involves a duplicate-id row, and every pair touching a
-      duplicate-id row is re-derived EXACTLY by a fallback join of the
-      duplicate rows (found with one cheap window over (keys, id) on
-      the raw rows — a degenerate-data sliver, empty when ids are
-      unique) against their key's rows (distinct id + overlap;
+    - the prefix-max candidate is kept only for rows whose (keys, id)
+      group holds that row alone — an order-free window count, so no
+      tie order between the two windows can let a same-id prior into
+      ``M``: for such a row every prior has a different id. Every pair
+      touching a duplicate-id row is re-derived EXACTLY by a fallback
+      join of the duplicate rows (found with one cheap window over
+      (keys, id) on the raw rows — a degenerate-data sliver, empty when
+      ids are unique) against their key's rows (distinct id + overlap;
       order-free, since a max may observe a pair twice). Keeping the
       main sweep's candidates id-blind-safe this way avoids re-running
       the event sweep to identify "polluted" rows — the first cut did,
@@ -583,20 +582,24 @@ def interval_overlap_stats(
     )
     if ids:
         w_id = _w([*keys, *ids], Window.currentRow)
-        w_id_prev = _w([*keys, *ids], -1)
         swept = (
             swept.withColumn(
                 "__id_n_start", F.sum(1 - F.col("is_end")).over(w_id)
             )
             .withColumn("__id_n_end", F.sum("is_end").over(w_id))
-            .withColumn("__d", F.max("e").over(w_id_prev))
+            .withColumn(
+                "__id_rows",
+                F.sum(1 - F.col("is_end")).over(
+                    Window.partitionBy(*keys, *ids)
+                ),
+            )
         )
+        unique_id = F.col("__id_rows") == 1
     else:
-        swept = (
-            swept.withColumn("__id_n_start", F.lit(1))
-            .withColumn("__id_n_end", F.lit(0))
-            .withColumn("__d", F.lit(None).cast("long"))
+        swept = swept.withColumn("__id_n_start", F.lit(1)).withColumn(
+            "__id_n_end", F.lit(0)
         )
+        unique_id = F.lit(True)
     starts = (
         swept.filter(F.col("is_end") == 0)
         .withColumn(
@@ -605,14 +608,14 @@ def interval_overlap_stats(
             - (F.col("__id_n_start") - 1 - F.col("__id_n_end")),
         )
         .withColumn(
-            # candidate kept only when NO same-id prior exists: then
+            # candidate kept only for a row alone in its id group: then
             # every prior has a different id, so min(e, M) - s is a
             # true pair value and the per-row maximum over valid pairs.
-            # Rows WITH a same-id prior are duplicate-id rows — every
-            # pair touching those is re-derived by the fallback join.
+            # Every pair touching a duplicate-id row is re-derived by
+            # the fallback join.
             "__ov",
             F.when(
-                F.col("__d").isNull() & (F.col("__m") >= F.col("s")),
+                unique_id & (F.col("__m") >= F.col("s")),
                 F.least(F.col("e"), F.col("__m")) - F.col("s"),
             ),
         )

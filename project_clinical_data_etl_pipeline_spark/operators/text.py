@@ -137,26 +137,6 @@ def dup_word_fraction(words: Column) -> Column:
     )
 
 
-def top_word_fraction(words: Column) -> Column:
-    """Fraction of tokens taken by the single most frequent word —
-    the n=1 case of the most-common-n-gram repetition filter. ``words``
-    MUST be a materialized array attribute: the count-per-distinct-word
-    scan is O(distinct × n) per row in interpreted HOF land, and an
-    inline split would additionally re-tokenize per element. Empty doc
-    (words == ['']) degenerates to 1.0 in both engines — filter on
-    token count first if that matters.
-
-    This single-expression form is O(distinct × n) per row — fine for
-    ad-hoc use, quadratic on long diverse docs. The pipeline-scale path
-    is :func:`with_top_ngram` with n=1 (sorted-run mode, O(L log L)),
-    which the text suite uses."""
-    counts = F.transform(
-        F.array_distinct(words),
-        lambda w: F.size(F.filter(words, lambda x: x == w)),
-    )
-    return F.array_max(counts).cast("double") / F.size(words).cast("double")
-
-
 def ngrams_array(words: Column, n: int = 2) -> Column:
     """Word n-grams from a MATERIALIZED words array — the dedup
     shingle builder (zip-with-shifted-slices, collapse-proof) applied
@@ -281,19 +261,6 @@ def fingerprint(col: Column) -> Column:
     c = F.regexp_replace(c, r"[^a-z0-9\s]", "")
     c = F.regexp_replace(c, r"\s+", " ")
     return F.md5(F.trim(c))
-
-
-def rolling_hash_fingerprint(col: Column, window: int = 8) -> Column:
-    """Winnowing-style fingerprint: min rolling hash over ``window``-word
-    spans — robust to local edits, used for fuzzy containment checks.
-    Returns BIGINT (min of xxhash64 over spans).
-
-    PERF: ``col`` should be a materialized words array attribute when
-    called per-DataFrame (see :func:`with_rolling_fingerprint`) — the
-    words expression is otherwise re-evaluated per span position
-    (interpreted HOFs have no CSE)."""
-    words = F.split(F.lower(F.trim(col)), r"\s+")
-    return _rolling_from_words(words, window)
 
 
 def _rolling_from_words(words: Column, window: int) -> Column:

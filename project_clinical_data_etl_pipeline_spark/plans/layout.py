@@ -115,15 +115,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def colocated_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two identically-bucketed tables on their bucket key. With
-    matching bucket specs the plan contains NO Exchange on either side
-    (verified by tests/test_layout.py)."""
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
-
-
 def salted_join(
     left: DataFrame,
     right: DataFrame,

@@ -178,44 +178,7 @@ def main():
                     64,
                     3,
                     3,
-                ),
-            ),
-            4,
-        )
-
-        # per-branch residual codebooks: the recall knob at k1·k2
-        # driver-side centroids (flat-class budget)
-        from project_clinical_data_etl_pipeline_spark.operators.quantization import (  # noqa: E501
-            imi_pb_probe_cells,
-        )
-
-        pb_path = tempfile.mkdtemp(prefix="ladder_imipb_")
-        t0 = time.perf_counter()
-        meta_p = AI.build_imi_index(
-            spark, corpus, pb_path, dim=64, per_branch=True
-        )
-        out["imipb_build_s"] = round(time.perf_counter() - t0, 1)
-        out["imipb_centroids"] = meta_p["imi_k1"] + sum(
-            len(b) for b in meta_p["centroids2"]
-        )
-        out["imipb_recall"] = recall_at_5(
-            spark,
-            corpus,
-            lambda q: AI.probe_index_rerank(
-                spark, pb_path, q, corpus, k=5, n_probe=3
-            ),
-        )
-        out["imipb_frac"] = round(
-            per_query_fraction(
-                spark,
-                pb_path,
-                lambda: imi_pb_probe_cells(
-                    queries,
-                    meta_p["centroids"],
-                    meta_p["centroids2"],
-                    64,
-                    3,
-                    3,
+                    stride=meta_i["imi_stride"],
                 ),
             ),
             4,

@@ -14,10 +14,9 @@ from __future__ import annotations
 
 import pytest
 
-#: slow tier (round 14): IMI/IVF lifecycle, crash-recovery and
-#: multi-writer pins — minutes of index builds per test; operator
-#: correctness stays driver-gated via the fast kernel pins and
-#: tests/test_oracle_parity.py
+#: slow: IVF lifecycle, crash-recovery and multi-writer pins with index
+#: builds in most tests; runs in the default suite, and
+#: ``-m "not slow"`` skips it locally
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 

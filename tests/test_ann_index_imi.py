@@ -17,10 +17,8 @@ from __future__ import annotations
 
 import pytest
 
-#: slow tier (round 14): IMI/IVF lifecycle, crash-recovery and
-#: multi-writer pins — minutes of index builds per test; operator
-#: correctness stays driver-gated via the fast kernel pins and
-#: tests/test_oracle_parity.py
+#: slow: index builds in most tests; runs in the default suite, and
+#: ``-m "not slow"`` skips it locally
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
@@ -329,11 +327,9 @@ def test_split_cell_crash_before_commit_changes_nothing(
     assert _rows(AI.read_index(spark, path)) == before_rows
 
 
-def test_split_cell_rejects_perbranch_headroom_and_empty(
-    spark, corpus, imi_pb_built, imi_built, flat_built
+def test_split_cell_rejects_headroom_and_empty(
+    spark, corpus, imi_built, flat_built
 ):
-    with pytest.raises(NotImplementedError):
-        AI.split_cell(spark, imi_pb_built[0], 0)
     flat_path, _ = flat_built
     with pytest.raises(ValueError):
         AI.split_cell(spark, flat_path, 9999)
@@ -423,121 +419,30 @@ def test_derived_imi_k_rule():
     assert derived_imi_k(10**13) == 1024  # cap binds
 
 
-# ---------------------------------------------------------------------------
-# per-branch residual codebooks — the recall knob
-# ---------------------------------------------------------------------------
+def test_per_branch_sidecar_is_rejected(spark, corpus, imi_built, tmp_path):
+    """A sidecar marked ``per_branch`` (written by an older version of
+    the package, one level-2 codebook per branch) must not be served as
+    a shared-codebook index: probe and append raise ValueError, and a
+    fresh build replaces the index at the same path."""
+    import json
+    import shutil
 
-
-def test_perbranch_assign_kernel_matches_python_oracle(spark):
-    """The per-branch Arrow argmin reproduces a bit-exact Python
-    oracle (same left-fold dot, ties → lowest cid, missing slots never
-    win)."""
-    from project_clinical_data_etl_pipeline_spark.operators.quantization import (
-        _fold_sq_norm,
-        _perbranch_assign_arrow_udf,
-    )
-
-    books2 = [
-        [[1.0, 0.0], [0.0, 1.0]],
-        [[2.0, 2.0]],          # short branch: one centroid only
-        [[0.5, 0.5], [0.5, 0.5]],  # exact tie -> cid 0
-    ]
-    rows = [
-        (0, [0.9, 0.1]), (0, [0.1, 0.9]), (1, [9.0, 9.0]),
-        (2, [1.0, 1.0]), (0, [0.5, 0.5]),
-    ]
-    df = spark.createDataFrame(rows, "b bigint, r array<double>")
-    got = [
-        (x["b"], x["cid"])
-        for x in df.select(
-            "b",
-            _perbranch_assign_arrow_udf(books2)(
-                F.col("r"), F.col("b")
-            ).alias("cid"),
-        ).collect()
-    ]
-
-    def oracle(b, r):
-        best, best_d = None, None
-        for j, c in enumerate(books2[b]):
-            acc = 0.0
-            for i in range(len(c)):
-                acc += r[i] * c[i]
-            d = _fold_sq_norm(c) - 2.0 * acc
-            if best_d is None or d < best_d:
-                best, best_d = j, d
-        return best
-
-    want = [(b, oracle(b, r)) for b, r in rows]
-    assert sorted(got) == sorted(want)
-
-
-@pytest.fixture(scope="module")
-def imi_pb_built(spark, corpus, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("imi_pb_idx"))
-    meta = AI.build_imi_index(
-        spark, corpus.filter(F.col("vec_id") < _SPLIT), path,
-        dim=_DIM, k1=6, k2=6, per_branch=True,
-    )
-    AI.append_ivfpq_index(
-        spark, path, corpus.filter(F.col("vec_id") >= _SPLIT)
-    )
-    return path, meta
-
-
-def test_imi_pb_append_equals_one_shot_encode(spark, corpus, imi_pb_built):
-    from project_clinical_data_etl_pipeline_spark.operators.quantization import (
-        imi_pb_index,
-    )
-
-    path, meta = imi_pb_built
-    assert meta["per_branch"] is True
-    one_shot = imi_pb_index(
-        corpus, meta["centroids"], meta["centroids2"], meta["codebooks"], _DIM
-    ).withColumn("cell", F.col("cell").cast("bigint"))
-    assert _rows(AI.read_index(spark, path)) == _rows(one_shot)
-
-
-def test_imi_pb_recall_floor_and_vs_shared(spark, sf_dir, corpus, imi_pb_built):
-    """Per-branch holds the 0.8 floor at the same geometry and probe
-    budget. (The per-branch ADVANTAGE over the shared codebook is a
-    SCALE property — each branch needs enough residuals to train its
-    own dictionary; at 500 vectors / 36 cells a branch holds ~14 rows
-    and per-branch measured 0.800 vs shared 0.825 — so the
-    pb-beats-shared comparison lives in the sf1/sf4 ladder
-    (SCALE.md round 12), not here.)"""
-    from project_clinical_data_etl_pipeline_spark.queries import llmdata
-
-    exact: dict[int, set[int]] = {}
-    for r in llmdata.embed_topk_bruteforce(spark, sf_dir).collect():
-        exact.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    queries = corpus.filter(F.col("vec_id") < 8)
-
-    def recall(path):
-        approx: dict[int, set[int]] = {}
-        for r in AI.probe_index_rerank(
-            spark, path, queries, corpus, k=5, n_probe=3
-        ).collect():
-            approx.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        recs = [
-            len(approx.get(q, set()) & t) / len(t) for q, t in exact.items()
-        ]
-        return sum(recs) / len(recs)
-
-    pb = recall(imi_pb_built[0])
-    assert pb >= 0.8, f"per-branch recall@5 {pb:.3f}"
-
-
-def test_imi_pb_rebuild_keeps_configuration(spark, corpus, tmp_path):
-    path = str(tmp_path / "imi_pb_rebuild")
+    path = str(tmp_path / "per_branch_idx")
+    shutil.copytree(imi_built[0], path)
+    meta_file = txlog.current_meta_file(AI._data_path(path))
+    with open(meta_file) as fh:
+        meta = json.load(fh)
+    meta["per_branch"] = True
+    with open(meta_file, "w") as fh:
+        json.dump(meta, fh)
+    queries = corpus.filter(F.col("vec_id") < 4)
+    with pytest.raises(ValueError, match="per-branch"):
+        AI.probe_index(spark, path, queries, k=5, n_probe=2)
+    with pytest.raises(ValueError, match="per-branch"):
+        AI.append_ivfpq_index(spark, path, queries)
     AI.build_imi_index(
-        spark, corpus.filter(F.col("vec_id") < _SPLIT), path,
-        dim=_DIM, k1=4, k2=4, per_branch=True,
+        spark, corpus.filter(F.col("vec_id") < 100), path,
+        dim=_DIM, k1=2, k2=2, n_iter=1,
     )
-    AI.append_ivfpq_index(
-        spark, path, corpus.filter(F.col("vec_id") >= _SPLIT), batch_id=2
-    )
-    meta = AI.rebuild_index(spark, corpus, path)
-    assert meta["quantizer"] == "imi" and meta["per_branch"] is True
-    root = str(tmp_path / "imi_pb_rebuild" / "index")
-    assert txlog.has_batch(root, 2)
+    assert "per_branch" not in AI.load_index_meta(path)
+    assert AI.probe_index(spark, path, queries, k=5, n_probe=2).count() > 0

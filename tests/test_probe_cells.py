@@ -10,9 +10,9 @@ ann_index.read_index).
   Spark fallback and answer as it does.
 - ``local_frame`` must build a LocalRelation for every shape the
   package hands it, so collecting or broadcasting it starts no job.
-- A probe over a persisted flat index with a local query set starts a
-  pinned number of jobs while the frame is built — the first
-  construct-time job-count pin.
+- A probe over a persisted index with a local query set starts a
+  pinned number of jobs while the frame is built — the construct-time
+  job-count pin, for the flat and the two-level (IMI) geometry.
 """
 
 from __future__ import annotations
@@ -181,15 +181,30 @@ def _jobs(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.fixture(scope="module")
-def flat_index(spark, tmp_path_factory):
+def _corpus(spark):
     rng = np.random.default_rng(3)
     vecs = rng.normal(size=(256, DIM)).astype(np.float32)
     corpus = local_frame(
         spark, [(i, vecs[i].tolist()) for i in range(len(vecs))], _QSCHEMA
     )
+    return corpus, vecs
+
+
+@pytest.fixture(scope="module")
+def flat_index(spark, tmp_path_factory):
+    corpus, vecs = _corpus(spark)
     path = str(tmp_path_factory.mktemp("flat_idx"))
     AI.build_ivfpq_index(spark, corpus, path, dim=DIM, m=4, ks=16, n_iter=1)
+    return path, vecs
+
+
+@pytest.fixture(scope="module")
+def imi_index(spark, tmp_path_factory):
+    corpus, vecs = _corpus(spark)
+    path = str(tmp_path_factory.mktemp("imi_idx"))
+    AI.build_imi_index(
+        spark, corpus, path, dim=DIM, k1=4, k2=4, m=4, ks=16, n_iter=1
+    )
     return path, vecs
 
 
@@ -204,20 +219,27 @@ def test_read_index_schema_matches_empty_index(spark, flat_index, tmp_path):
     )
 
 
-def test_probe_index_construct_job_count(spark, flat_index):
-    """Construct (building the result frame) starts no job: the query
-    rows of a local query set are collected without one, the cells are
-    picked on the driver, and the index schema comes from a footer.
-    Only the terminal collect runs jobs. An extra collect, count or
-    checkpoint added on this path fails the pin."""
-    path, vecs = flat_index
-    q = local_frame(
-        spark, [(10_000 + i, vecs[i].tolist()) for i in range(4)], _QSCHEMA
-    )
-    AI.probe_index(spark, path, q, k=5).collect()  # warm the session
-    out, construct = _jobs(
-        spark, "probe_construct", lambda: AI.probe_index(spark, path, q, k=5)
-    )
-    assert construct == 0
-    rows, _ = _jobs(spark, "probe_execute", out.collect)
-    assert len(rows) == 4 * 5
+def test_probe_index_construct_job_count(spark, flat_index, imi_index):
+    """Construct (building the result frame) over a local query set.
+    Flat: no job — the query rows are collected without one, the cells
+    are picked on the driver, and the index schema comes from a footer;
+    only the terminal collect runs jobs. Two-level: the level-1
+    branches are picked the same way, and the jobs left are those of
+    collecting the level-2 ranking window. An extra collect, count or
+    checkpoint added on either path fails the pin."""
+    for name, (path, vecs), want in (
+        ("flat", flat_index, 0),
+        ("imi", imi_index, 4),
+    ):
+        q = local_frame(
+            spark, [(10_000 + i, vecs[i].tolist()) for i in range(4)], _QSCHEMA
+        )
+        AI.probe_index(spark, path, q, k=5).collect()  # warm the session
+        out, construct = _jobs(
+            spark,
+            f"probe_construct_{name}",
+            lambda: AI.probe_index(spark, path, q, k=5),
+        )
+        assert construct == want, name
+        rows, _ = _jobs(spark, f"probe_execute_{name}", out.collect)
+        assert len(rows) == 4 * 5, name

@@ -790,8 +790,9 @@ def test_interval_overlap_stats_matches_pair_enumeration(spark):
     interval_overlap_stats equals brute-force pair enumeration — on
     random data WITH duplicate id tuples (the canonical-order SQL twin
     excludes same-id pairs, and a duplicate whose sibling holds the
-    prefix max forces the polluted-row fallback join) and NULL ids
-    (pair with nothing)."""
+    prefix max forces the polluted-row fallback join), same-id rows
+    with TIED starts (whichever of them a window orders first, their
+    pair must not count) and NULL ids (pair with nothing)."""
     import random
 
     from project_clinical_data_etl_pipeline_spark.operators.temporal import (
@@ -814,6 +815,12 @@ def test_interval_overlap_stats_matches_pair_enumeration(spark):
     ]
     # NULL id component → pairs with nothing
     rows += [(9, None, 3, 0 * m, 5000 * m)]
+    # same id AND same start, in both input orders, plus a different-id
+    # row overlapping both by 3: the same-id pair (overlap 10) is no pair
+    tied = [(0, 100 * m), (0, 10 * m)]
+    for k, order in ((10, tied), (11, tied[::-1])):
+        rows += [(k, 300, 1, s, e) for s, e in order]
+        rows.append((k, 301, 1, 5 * m, 8 * m))
     df = spark.createDataFrame(
         rows, ["k", "ok", "ln", "s_us", "e_us"]
     ).select(
@@ -841,6 +848,7 @@ def test_interval_overlap_stats_matches_pair_enumeration(spark):
     assert got == {
         k: (len(v), max(v)) for k, v in want.items()
     }
+    assert got[10] == got[11] == (2, 3 * m)
     # no-ids form: all distinct-row pairs count (same-id pairs included)
     got_all = {
         r["k"]: (r["n_overlapping"], r["max_overlap_us"])

@@ -1034,9 +1034,12 @@ def probe_index(
     (``quantization.imi_topk`` — ``n_probe`` applies per level there,
     probing n_probe² composite cells). Both pick their (level-1) cells
     with the one flat selector, ``quantization._probe_cells``, and
-    share the cell-pruned scan / codebook-lookup-on-the-probed-slice
-    plan. A sidecar of a per-branch index raises ValueError
-    (:func:`_load_meta_pointed`)."""
+    share one scorer, ``quantization._score_cells``: the probed cells'
+    slice is read from their partitions alone and, within the collect
+    budget, decoded and ranked on the driver, so a flat probe is one
+    job over a local query set and two over an RDD-backed one, and the
+    returned frame is a local relation. A sidecar of a per-branch
+    index raises ValueError (:func:`_load_meta_pointed`)."""
     from .quantization import imi_topk, ivfpq_topk
 
     meta = load_index_meta(path)

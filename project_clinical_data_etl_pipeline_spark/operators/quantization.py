@@ -19,10 +19,15 @@ Scale shapes, all reusing the proven kmeans/classifier patterns:
   driver per iteration (the kmeans-centroid-pull pattern).
 - **Encoding** is a pure map pass: the codebooks are codegen literals,
   each subspace an argmin expression — no join, no Exchange.
-- **Reconstruction/scoring** is map-side codebook lookup
-  (``element_at`` on literal arrays) feeding the existing unrolled-dot
-  scorer — the plan shape of brute-force top-k, but the scan side
-  needs only (id, pq_code).
+- **Reconstruction/scoring** of an IVF probe reads only the probed
+  cells' (id, cell, pq_code) slice. Within the driver-collect budget
+  the slice is collected in one job and decoded, scored and ranked in
+  numpy with the engine's arithmetic (:func:`_score_cells`), so the
+  result is a local relation. Past the budget, and for
+  :func:`pq_topk`, it is map-side codebook lookup (``element_at`` on
+  literal arrays, or one broadcast codebook row) feeding the unrolled-
+  dot scorer — the plan shape of brute-force top-k, with a scan side
+  of (id, pq_code).
 
 Determinism mirrors ``similarity.kmeans_centroids``: DECIMAL-exact
 means, optional per-iteration rounding, min-id seeds, lowest-id
@@ -42,15 +47,20 @@ from ..session import local_frame
 from .dedup import fan_out
 from .similarity import _col_sql, _dot_lit_sql, _lit_double
 
-#: Driver-collect budget for probe frames, in SCALARS (rows × vector
-#: dim): the probe path holds |queries|·n_probe rows of dim doubles on
-#: the driver — bounded control data under the small-queries contract,
+#: Driver-collect budget of an IVF probe, in SCALARS (rows × vector
+#: dim). It bounds each of the three things the probe may hold on the
+#: driver: the query rows (|queries|·n_probe·dim, the probe rows they
+#: become), the probed index slice (slice rows × dim once decoded),
+#: and the scoring work (Σ over probe rows of the probed cell's slice
+#: rows × dim). Bounded control data under the small-queries contract,
 #: but a contract must be ENFORCED, not assumed. Default 8M scalars ≈
-#: 64 MB; env-tunable. Past the cap the probe falls back to the Spark
-#: cell selection and the lazy-checkpoint plan (distinct-cell collect
-#: for pruning — always tiny, bounded by index geometry — and the
-#: checkpointed frame as the broadcast side), which never materializes
-#: query vectors driver-side.
+#: 64 MB; env-tunable. Past the cap on the query rows the probe falls
+#: back to the Spark cell selection and the lazy-checkpoint plan
+#: (distinct-cell collect for pruning — always tiny, bounded by index
+#: geometry — and the checkpointed frame as the broadcast side), which
+#: never materializes query vectors driver-side; past it on the slice
+#: or the scoring work, the Spark scoring tail of :func:`_score_cells`
+#: runs.
 _PROBE_COLLECT_SCALARS = int(
     os.environ.get("SPARK_GRAFT_PROBE_COLLECT_SCALARS", str(8_000_000))
 )
@@ -603,47 +613,19 @@ def ivfpq_topk(
     score the RECONSTRUCTED vectors of those cells only — candidate
     volume ~ n_probe/n_centroids of the corpus, each candidate read as
     m codes. Probe cells are picked as similarity.ivf_topk ranks them
-    (cosine desc, centroid id asc) — on the driver for a query set
-    within the collect budget (:func:`_probe_cells`) — and the probe
-    frame broadcasts onto an equi-join on cell; reconstruction is
-    map-side codebook lookup on the probed slice. Returns (query_id,
-    neighbor_id, cosine, rank) — cosine of query vs reconstruction.
+    (cosine desc, centroid id asc) by :func:`_probe_cells`, and the
+    index is pruned to them before anything is decoded. Within the
+    collect budget both steps run on the driver — one bounded collect
+    of the query rows, one of the (neighbor_id, cell, pq_code) slice —
+    and the result is a local relation, so collecting it starts no
+    job; past the budget, or on an odd input, :func:`_score_cells`
+    decodes and ranks in a Spark plan. Returns (query_id, neighbor_id,
+    cosine, rank) — cosine of query vs reconstruction.
     """
-    return _probe_and_score(
-        queries,
-        index,
-        lambda df: pq_reconstruct(df, codebooks, out_col="__cv"),
-        centroids,
-        dim,
-        k,
-        n_probe,
-        id_col,
-        vec_col,
-    )
-
-
-def _probe_and_score(
-    queries: DataFrame,
-    index: DataFrame,
-    decode,
-    centroids: list[list[float]],
-    dim: int,
-    k: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Shared flat-IVF probe/score tail: queries pick their ``n_probe``
-    nearest cells (:func:`_probe_cells` — on the driver when the query
-    set fits the collect budget), the index — (neighbor_id, cell,
-    pq_code) — is FILTERED to the probed cells FIRST, and only the
-    surviving slice pays the ``decode`` reconstruction + norm, so
-    decompression cost is ~n_probe/n_centroids of the corpus, not
-    corpus-wide."""
-    cells, probes_local = _probe_cells(
+    cells, probes, rows = _probe_cells(
         queries, centroids, dim, n_probe, id_col, vec_col
     )
-    return _score_cells(cells, probes_local, index, decode, dim, k)
+    return _score_cells(cells, probes, rows, index, codebooks, dim, k)
 
 
 def _query_frame(
@@ -758,24 +740,25 @@ def _probe_cells(
     n_probe: int,
     id_col: str,
     vec_col: str,
-) -> tuple[list, DataFrame]:
+) -> tuple[list, DataFrame, list | None]:
     """Pick each query's ``n_probe`` nearest cells; return ``(cells,
-    probes_small)`` — the sorted probed-cell ids (the scan's IN-list,
-    which prunes partitions/buckets) and the (query_id, __qv, __qn,
-    cell) probe frame for the broadcast side. The one cosine cell
-    selector of both geometries: the flat IVF probe's cells, and the
-    two-level probe's level-1 branches (:func:`imi_probe_cells`).
+    probes, rows)`` — the sorted probed-cell ids (the scan's IN-list,
+    which prunes partitions/buckets), the (query_id, __qv, __qn, cell)
+    probe frame, and its rows when the driver holds them (None when
+    the frame is checkpointed). The one cosine cell selector of both
+    geometries: the flat IVF probe's cells, and the two-level probe's
+    level-1 branches (:func:`imi_probe_cells`).
 
-    Fast path: the query rows are collected ONCE, under the
-    ``_PROBE_COLLECT_SCALARS`` budget (|queries|·n_probe·dim scalars,
-    the size of the probe frame the driver then holds), the cells are
-    picked in numpy (:func:`_pick_cells_local`, bit-identical to the
-    Spark selection), and the probe frame is a local relation — no
-    crossJoin, shuffle window or probe-frame collect, and scanning the
-    probe frame costs no job. Over the budget, or on a row the driver
-    path does not reproduce exactly, the Spark selection
-    (:func:`_spark_probe_cells`) runs and :func:`_collect_probes`
-    collects or checkpoints its result."""
+    Fast path: the query rows are collected ONCE, in one job, under
+    the ``_PROBE_COLLECT_SCALARS`` budget (|queries|·n_probe·dim
+    scalars, the size of the probe rows the driver then holds), the
+    cells are picked in numpy (:func:`_pick_cells_local`,
+    bit-identical to the Spark selection), and the probe frame is a
+    local relation — no crossJoin, shuffle window or probe-frame
+    collect. Over the budget, or on a row the driver path does not
+    reproduce exactly, the Spark selection (:func:`_spark_probe_cells`)
+    runs and :func:`_collect_probes` collects or checkpoints its
+    result."""
     q = _query_frame(queries, dim, id_col, vec_col)
     per_query = max(dim, 1) * max(n_probe, 1)
     cap_rows = max(1, _PROBE_COLLECT_SCALARS // per_query)
@@ -790,51 +773,232 @@ def _probe_cells(
 
     schema = StructType(q.schema.fields + [StructField("cell", LongType())])
     cells = sorted({p[3] for p in picked})
-    return cells, local_frame(q.sparkSession, picked, schema)
+    return cells, local_frame(q.sparkSession, picked, schema), picked
 
 
-def _collect_probes(probes: DataFrame, dim: int) -> tuple[list, DataFrame]:
+def _collect_probes(
+    probes: DataFrame, dim: int
+) -> tuple[list, DataFrame, list | None]:
     """Collect a Spark-built (query_id, __qv, __qn, cell) probe frame
     onto the driver if it fits the scalar budget; return ``(cells,
-    probes_small)`` either way. Fast path: one execution, the broadcast
-    side rebuilt from the collected rows as a local relation. Over
-    budget: a lazy localCheckpoint, so the probe construction still
-    executes once, and the cells from a distinct-cell collect."""
+    probes, rows)`` as :func:`_probe_cells` does. Fast path: one
+    execution, the frame rebuilt from the collected rows as a local
+    relation. Over budget: a lazy localCheckpoint, so the probe
+    construction still executes once, the cells from a distinct-cell
+    collect, and no rows."""
     cap_rows = max(1, _PROBE_COLLECT_SCALARS // max(dim, 1))
     rows = probes.limit(cap_rows + 1).collect()
     if len(rows) <= cap_rows:
         cells = sorted({r["cell"] for r in rows})
-        return cells, local_frame(probes.sparkSession, rows, probes.schema)
+        return cells, local_frame(probes.sparkSession, rows, probes.schema), rows
     ck = probes.localCheckpoint(eager=False)
     cells = sorted(
         r["cell"] for r in ck.select("cell").distinct().collect()
     )
-    return cells, ck
+    return cells, ck, None
+
+
+def _score_local(
+    probe_rows: list,
+    slice_rows: list,
+    codebooks: list[list[list[float]]],
+    dim: int,
+    k: int,
+    offsets: list[list[float]] | None = None,
+) -> list[tuple] | None:
+    """Driver-side twin of the Spark tail of :func:`_score_cells` over
+    the collected probe rows (query_id, __qv, __qn, cell) and slice
+    rows (neighbor_id, cell, pq_code): the (query_id, neighbor_id,
+    cosine, rank) rows, ordered by query id and rank, or None when
+    the input is outside what this path reproduces bit-for-bit.
+
+    Same rows as the Spark plan: a row with a null, short or
+    out-of-range code is dropped (the :func:`pq_reconstruct` guard);
+    the decoded vector is the codebook lookup, plus ``offsets[cell]``
+    in residual mode; a self-match, or a pair with a NULL id, is
+    dropped; duplicate probe rows repeat their candidates and
+    duplicate query ids rank as one, as the join and the window do.
+    Same arithmetic: doubles, 0.0-seeded left-to-right folds over
+    1..dim for the dot and the norm (never ``np.dot``, which sums
+    pairwise), ``dot / (__qn · ‖c‖)``; order per query (cosine desc
+    with −0.0 = 0.0, neighbor id asc), ranks 1..k. None — the caller
+    runs the Spark tail — when the pair work (Σ over probe rows of
+    the cell's slice rows × dim) is over ``_PROBE_COLLECT_SCALARS``,
+    on a non-integer id or code, a NULL, short or NULL-element query
+    vector, ragged codebooks, a decoded vector shorter than ``dim``,
+    offsets of another length than the decoded vector, or a
+    non-finite cosine (a zero or NaN norm: under ANSI arithmetic the
+    Spark tail raises DIVIDE_BY_ZERO, and the fallback keeps that)."""
+    import numpy as np
+
+    if k <= 0:
+        return []
+    try:
+        books = np.array(codebooks, dtype=np.float64)
+        offs = None if offsets is None else np.array(offsets, dtype=np.float64)
+    except (TypeError, ValueError):  # ragged
+        return None
+    if books.ndim != 3 or books.shape[0] * books.shape[2] < dim:
+        return None
+    m, ks, w = books.shape
+    if offs is not None and (offs.ndim != 2 or offs.shape[1] != m * w):
+        return None
+
+    nids, cells, codes = [], [], []
+    for nid, cell, code in slice_rows:
+        if code is None or len(code) < m:
+            continue
+        head = code[:m]
+        if any(c is not None and type(c) is not int for c in head):
+            return None
+        if nid is None or any(c is None or not 0 <= c < ks for c in head):
+            continue
+        if type(nid) is not int:
+            return None
+        nids.append(nid)
+        cells.append(cell)
+        codes.append(head)
+    probes = []
+    for r in probe_rows:
+        qid, qv, qn = r[0], r[1], r[2]
+        if qid is None:
+            continue
+        if (
+            type(qid) is not int
+            or qv is None
+            or len(qv) < dim
+            or None in qv[:dim]
+            or qn is None
+        ):
+            return None
+        probes.append(r)
+
+    by_cell: dict = {}
+    for i, c in enumerate(cells):
+        by_cell.setdefault(c, []).append(i)
+    if sum(len(by_cell.get(r[3], ())) for r in probes) * dim > _PROBE_COLLECT_SCALARS:
+        return None
+    if offs is not None and any(not 0 <= c < len(offs) for c in by_cell):
+        return None
+
+    nid_arr = np.array(nids, dtype=np.int64)
+    pp, pc = [], []
+    for i, r in enumerate(probes):
+        idx = np.array(by_cell.get(r[3], ()), dtype=np.int64)
+        idx = idx[nid_arr[idx] != r[0]]
+        pp.append(np.full(len(idx), i, dtype=np.int64))
+        pc.append(idx)
+    pp = np.concatenate(pp) if pp else np.zeros(0, dtype=np.int64)
+    pc = np.concatenate(pc) if pc else np.zeros(0, dtype=np.int64)
+    if not len(pp):
+        return []
+
+    dec = books[np.arange(m), np.array(codes, dtype=np.int64)].reshape(len(codes), m * w)
+    if offs is not None:
+        dec = offs[np.array(cells, dtype=np.int64)] + dec
+    cv = np.ascontiguousarray(dec[:, :dim].T)  # (dim, slice rows)
+    qv = np.ascontiguousarray(
+        np.array([r[1][:dim] for r in probes], dtype=np.float64).T
+    )
+    qn = np.array([r[2] for r in probes], dtype=np.float64)
+    cn = np.zeros(cv.shape[1], dtype=np.float64)
+    for j in range(dim):
+        cn += cv[j] * cv[j]
+    cn = np.sqrt(cn)
+    dots = np.zeros(len(pp), dtype=np.float64)
+    for j in range(dim):
+        dots += qv[j][pp] * cv[j][pc]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = dots / (qn[pp] * cn[pc])
+    if not np.isfinite(cos).all():
+        return None
+
+    qid = np.array([r[0] for r in probes], dtype=np.int64)[pp]
+    nid = nid_arr[pc]
+    # 0.0 - cos sorts descending cosine and folds -0.0 into 0.0, as the
+    # engine's double ordering does
+    order = np.lexsort((nid, 0.0 - cos, qid))
+    qid, nid, cos = qid[order], nid[order], cos[order]
+    starts = np.flatnonzero(np.r_[True, qid[1:] != qid[:-1]])
+    rank = np.arange(len(qid)) - np.repeat(starts, np.diff(np.r_[starts, len(qid)])) + 1
+    keep = rank <= k
+    return list(
+        zip(
+            qid[keep].tolist(),
+            nid[keep].tolist(),
+            cos[keep].tolist(),
+            rank[keep].tolist(),
+        )
+    )
 
 
 def _score_cells(
     cells: list,
-    probes_local: DataFrame,
+    probes: DataFrame,
+    rows: list | None,
     index: DataFrame,
-    decode,
+    codebooks: list[list[list[float]]],
     dim: int,
     k: int,
+    offsets: list[list[float]] | None = None,
 ) -> DataFrame:
-    """Shared scoring tail for every cell geometry (flat IVF and
-    two-level IMI): the index is partition/bucket-pruned to ``cells``
-    FIRST, only the surviving slice pays ``decode`` + norm + cosine
-    against the broadcast ``probes_local`` (query_id, __qv, __qn,
-    cell), and a per-query window keeps the top ``k`` (cosine desc,
-    neighbor id asc; self-matches excluded)."""
+    """Shared scoring tail for every cell geometry (flat, residual and
+    two-level IMI): top ``k`` per query of the cosine between the
+    query and each reconstructed vector of the probed cells (cosine
+    desc, neighbor id asc; self-matches excluded), as (query_id,
+    neighbor_id, cosine, rank). The reconstruction is the PQ decode
+    of the ``codebooks``, plus ``offsets[cell]`` (the coarse
+    centroids) in residual mode. The index is partition/bucket-pruned
+    to ``cells`` FIRST, so only the probed slice is read.
+
+    Fast path, when the driver holds the probe ``rows``: the slice
+    (neighbor_id, cell, pq_code) is collected once — one job while its
+    partitions fit ``spark.sql.limit.initialNumPartitions`` (set by
+    ``session.tune``) — under ``_PROBE_COLLECT_SCALARS`` (slice rows
+    × dim), scored in numpy
+    (:func:`_score_local`, bit-identical to the Spark tail) and
+    returned as a local relation with the Spark tail's schema —
+    collecting it starts no job. Otherwise, over the budget, or on
+    an input the driver path does not reproduce exactly, the Spark
+    tail runs: the slice is decoded (:func:`pq_reconstruct`), joined
+    to the broadcast ``probes`` on cell, scored, and ranked by a
+    per-query window."""
     from pyspark.sql import Window
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     from .similarity import dot, norm
 
-    decoded = decode(index.filter(F.col("cell").isin(cells))).withColumn(
-        "__cn", norm("__cv", dim)
-    )
+    scanned = _probed_slice(index, cells)
+    if rows is not None:
+        cap_rows = max(1, _PROBE_COLLECT_SCALARS // max(dim, 1))
+        slice_rows = scanned.limit(cap_rows + 1).collect()
+        top = None
+        if len(slice_rows) <= cap_rows:
+            top = _score_local(rows, slice_rows, codebooks, dim, k, offsets)
+        if top is not None:
+            schema = StructType([
+                probes.schema["query_id"],
+                scanned.schema["neighbor_id"],
+                StructField("cosine", DoubleType()),
+                StructField("rank", LongType(), False),
+            ])
+            return local_frame(index.sparkSession, top, schema)
+
+    if offsets is None:
+        decoded = pq_reconstruct(scanned, codebooks, out_col="__cv")
+    else:
+        recon = (
+            f"zip_with({_centroid_lookup_expr(offsets)}, __dec, "
+            f"(a, b) -> a + b)"
+        )
+        decoded = (
+            pq_reconstruct(scanned, codebooks, out_col="__dec")
+            .withColumn("__cv", F.expr(recon))
+            .drop("__dec")
+        )
     scored = (
-        decoded.join(F.broadcast(probes_local), on="cell")
+        decoded.withColumn("__cn", norm("__cv", dim))
+        .join(F.broadcast(probes), on="cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
@@ -857,6 +1021,15 @@ def _score_cells(
             "cosine",
             F.col("rank").cast("bigint").alias("rank"),
         )
+    )
+
+
+def _probed_slice(index: DataFrame, cells: list) -> DataFrame:
+    """(neighbor_id, cell, pq_code) of the probed ``cells``: the IN
+    filter reaches the scan, so a persisted index opens only the
+    probed partitions or buckets."""
+    return index.filter(F.col("cell").isin(cells)).select(
+        "neighbor_id", "cell", "pq_code"
     )
 
 
@@ -929,22 +1102,14 @@ def ivfpq_topk_residual(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Residual-mode IVF+PQ top-k: reconstruction =
-    ``centroid[cell] + decode(pq_code)`` (map-side literal lookups),
-    then the same probe/score plan as :func:`ivfpq_topk`."""
-    recon = (
-        f"zip_with({_centroid_lookup_expr(centroids)}, __dec, "
-        f"(a, b) -> a + b)"
+    ``centroid[cell] + decode(pq_code)``, then the same probe/score
+    path as :func:`ivfpq_topk` — the coarse centroids pass to
+    :func:`_score_cells` as its ``offsets``."""
+    cells, probes, rows = _probe_cells(
+        queries, centroids, dim, n_probe, id_col, vec_col
     )
-
-    def decode(df: DataFrame) -> DataFrame:
-        return (
-            pq_reconstruct(df, codebooks, out_col="__dec")
-            .withColumn("__cv", F.expr(recon))
-            .drop("__dec")
-        )
-
-    return _probe_and_score(
-        queries, index, decode, centroids, dim, k, n_probe, id_col, vec_col
+    return _score_cells(
+        cells, probes, rows, index, codebooks, dim, k, offsets=centroids
     )
 
 
@@ -1154,7 +1319,7 @@ def imi_probe_cells(
 
     k2 = len(cents2) if stride is None else stride
     spark = queries.sparkSession
-    branches, lvl1 = _probe_cells(
+    branches, lvl1, _ = _probe_cells(
         queries, cents1, dim, n_probe1, id_col, vec_col
     )
     cent1 = local_frame(
@@ -1214,21 +1379,14 @@ def imi_topk(
     """Two-level IVF+PQ top-k: probe ``n_probe1·n_probe2`` composite
     cells of the k1·k2-cell index (:func:`imi_probe_cells`, its frame
     collected once under the scalar budget by :func:`_collect_probes`),
-    decode and score ONLY that slice — the same partition-pruned scan /
-    broadcast-probe / window tail as the flat :func:`ivfpq_topk`
-    (:func:`_score_cells`), under a cell geometry whose candidate
-    fraction keeps falling past the flat quantizer's 4096-centroid
-    cap."""
+    decode and score ONLY that slice — the same scorer as the flat
+    :func:`ivfpq_topk` (:func:`_score_cells`: on the driver within the
+    collect budget, else the partition-pruned scan / broadcast-probe /
+    window tail), under a cell geometry whose candidate fraction keeps
+    falling past the flat quantizer's 4096-centroid cap."""
     probes = imi_probe_cells(
         queries, cents1, cents2, dim, n_probe1, n_probe2, id_col, vec_col,
         stride=stride,
     )
-    cells, probes_local = _collect_probes(probes, dim)
-    return _score_cells(
-        cells,
-        probes_local,
-        index,
-        lambda df: pq_reconstruct(df, codebooks, out_col="__cv"),
-        dim,
-        k,
-    )
+    cells, probes, rows = _collect_probes(probes, dim)
+    return _score_cells(cells, probes, rows, index, codebooks, dim, k)

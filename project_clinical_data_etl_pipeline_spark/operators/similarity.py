@@ -348,7 +348,9 @@ def cell_assign(
 def _centroid_df(spark, centroids: list[list[float]]) -> DataFrame:
     """(centroid_id, __center) from driver-side centroid vectors — tiny
     by definition (n_centroids × dim doubles), always broadcast; a
-    local relation, so the broadcast costs no scan job."""
+    local relation, so collecting it costs no job and its broadcast
+    one job with no scan stage (the exchange collects it through an
+    RDD)."""
     return local_frame(
         spark,
         [(i, [float(x) for x in v]) for i, v in enumerate(centroids)],
@@ -504,7 +506,7 @@ def ivf_topk_indexed(
     Exchange in the whole query is the final per-query rank window."""
     from .quantization import _probe_cells
 
-    cells, probes_local = _probe_cells(
+    cells, probes_local, _ = _probe_cells(
         queries, centroids, dim, n_probe, id_col, vec_col
     )
     assigned = spark.table(table).filter(F.col("cell").isin(cells))

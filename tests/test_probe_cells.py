@@ -9,16 +9,20 @@ ann_index.read_index).
   cannot reproduce exactly (NULL or zero-norm queries) must take the
   Spark fallback and answer as it does.
 - ``local_frame`` must build a LocalRelation for every shape the
-  package hands it, so collecting or broadcasting it starts no job.
-- A probe over a persisted index with a local query set starts a
-  pinned number of jobs while the frame is built — the construct-time
-  job-count pin, for the flat and the two-level (IMI) geometry.
+  package hands it, so collecting it starts no job. Broadcasting it
+  still starts one: the broadcast exchange collects its child through
+  an RDD.
+- A probe over a persisted index starts a pinned number of jobs,
+  building the frame and collecting it — the job-count pin, for the
+  flat geometry over a local and an RDD-backed query set and for the
+  two-level (IMI) geometry.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from project_clinical_data_etl_pipeline_spark.operators import ann_index as AI
 from project_clinical_data_etl_pipeline_spark.operators import quantization as Q
@@ -52,7 +56,7 @@ def _driver_cells(queries, centroids, n_probe):
 
 
 def _probe_rows(queries, centroids, n_probe):
-    cells, frame = Q._probe_cells(
+    cells, frame, _ = Q._probe_cells(
         queries, centroids, DIM, n_probe, "vec_id", "embedding"
     )
     return cells, sorted(
@@ -119,7 +123,7 @@ def test_null_and_zero_norm_queries_take_the_fallback(spark):
         assert _driver_cells(q, cents, 2) is None, name
 
         def spark_path():
-            cells, frame = Q._collect_probes(
+            cells, frame, _ = Q._collect_probes(
                 Q._spark_probe_cells(
                     Q._query_frame(q, DIM, "vec_id", "embedding"), cents, DIM, 2
                 ),
@@ -219,27 +223,46 @@ def test_read_index_schema_matches_empty_index(spark, flat_index, tmp_path):
     )
 
 
+def test_local_frame_broadcast_starts_one_job(spark):
+    """Collecting a local relation runs on the driver; as a join's
+    broadcast side it does not: the broadcast exchange collects its
+    child through an RDD, one job. So a join of two local frames costs
+    two jobs — the streamed side's scan and the broadcast."""
+    small = local_frame(spark, [(i, float(i)) for i in range(16)], "k bigint, v double")
+    big = local_frame(spark, [(i % 16, i) for i in range(64)], "k bigint, n bigint")
+    _, collect = _jobs(spark, "local_collect", small.collect)
+    assert collect == 0
+    joined = big.join(F.broadcast(small), "k")
+    rows, jobs = _jobs(spark, "local_bcast_join", joined.collect)
+    assert len(rows) == 64
+    assert jobs == 2
+
+
 def test_probe_index_construct_job_count(spark, flat_index, imi_index):
-    """Construct (building the result frame) over a local query set.
-    Flat: no job — the query rows are collected without one, the cells
-    are picked on the driver, and the index schema comes from a footer;
-    only the terminal collect runs jobs. Two-level: the level-1
-    branches are picked the same way, and the jobs left are those of
-    collecting the level-2 ranking window. An extra collect, count or
-    checkpoint added on either path fails the pin."""
-    for name, (path, vecs), want in (
-        ("flat", flat_index, 0),
-        ("imi", imi_index, 4),
+    """Jobs per probe, building the result frame and collecting it.
+    Flat over a local query set: one — the probed slice's collect; the
+    query rows are collected without a job, the cells picked and the
+    slice scored on the driver, and the result is a local relation.
+    Flat over a ``createDataFrame(list)`` query set: two — its bounded
+    collect is one job at the session's ``limit.initialNumPartitions``
+    (Spark's incremental take would make it two). Two-level: the
+    level-2 ranking window's collect adds its jobs to the slice's.
+    An extra collect, count or checkpoint on any path fails the pin."""
+    for name, (path, vecs), kind, want in (
+        ("flat", flat_index, "local", 1),
+        ("flat", flat_index, "rdd", 2),
+        ("imi", imi_index, "local", 5),
     ):
-        q = local_frame(
-            spark, [(10_000 + i, vecs[i].tolist()) for i in range(4)], _QSCHEMA
-        )
+        rows = [(10_000 + i, vecs[i].tolist()) for i in range(4)]
+        if kind == "local":
+            q = local_frame(spark, rows, _QSCHEMA)
+        else:
+            q = spark.createDataFrame(rows, _QSCHEMA)
         AI.probe_index(spark, path, q, k=5).collect()  # warm the session
-        out, construct = _jobs(
+        got, jobs = _jobs(
             spark,
-            f"probe_construct_{name}",
-            lambda: AI.probe_index(spark, path, q, k=5),
+            f"probe_{name}_{kind}",
+            lambda: AI.probe_index(spark, path, q, k=5).collect(),
         )
-        assert construct == want, name
-        rows, _ = _jobs(spark, f"probe_execute_{name}", out.collect)
-        assert len(rows) == 4 * 5, name
+        assert len(got) == 4 * 5, (name, kind)
+        assert jobs == want, (name, kind, jobs)

@@ -13,6 +13,7 @@ from project_clinical_data_etl_pipeline_spark.operators.similarity import (
     brute_force_topk,
 )
 from project_clinical_data_etl_pipeline_spark.tables import load
+from tests.scan_plan import bucketed_scans
 
 M, KS, DIM = 32, 16, 64
 
@@ -295,19 +296,32 @@ def test_pq_train_matches_python_oracle_bit_exact(spark, corpus, codebooks):
 
 
 def test_persisted_ivfpq_index_prunes_buckets_and_matches_direct(
-    spark, corpus, codebooks, tmp_path
+    spark, corpus, codebooks, tmp_path, monkeypatch
 ):
     """The persisted bucketed IVF+PQ index must return exactly the
     in-memory composition's results, scan codes-not-vectors, and prune
-    to the probed cells' buckets (SelectedBucketsCount < total)."""
+    to the probed cells' buckets (selected buckets < total) — both
+    in the slice the driver scorer collects and in the Spark tail."""
     from project_clinical_data_etl_pipeline_spark.operators.similarity import (
         kmeans_centroids,
     )
+
+    def assert_pruned_code_scan(df):
+        # the bucketed scan prunes buckets and reads codes, never raw
+        # vectors
+        [(selected, total, schema)] = bucketed_scans(df)
+        assert selected < total, (selected, total)
+        assert "pq_code" in schema and "embedding" not in schema, schema
 
     cents = kmeans_centroids(corpus, dim=DIM, n_centroids=8, n_iter=2,
                              round_dp=6)
     table = "ivfpq_index_test"
     Q.persist_ivfpq_index(spark, corpus, table, cents, codebooks, dim=DIM)
+    slices = []
+    probed_slice = Q._probed_slice
+    monkeypatch.setattr(
+        Q, "_probed_slice", lambda *a: slices.append(probed_slice(*a)) or slices[-1]
+    )
     try:
         q = corpus.filter(F.col("vec_id") < 8)
         direct = Q.ivfpq_topk(
@@ -320,19 +334,15 @@ def test_persisted_ivfpq_index_prunes_buckets_and_matches_direct(
         assert sorted(map(tuple, direct.collect())) == sorted(
             map(tuple, persisted.collect())
         )
-        plan = persisted._jdf.queryExecution().executedPlan().toString()
-        assert "SelectedBucketsCount" in plan, plan
-        import re
-
-        m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-        assert m and int(m.group(1)) < int(m.group(2)), m.group(0)
-        # the BUCKETED scan itself reads codes, never raw vectors
-        # (scope to the FileScan segment that carries the bucket count)
-        seg = next(
-            s for s in plan.split("FileScan") if "SelectedBucketsCount" in s
+        assert_pruned_code_scan(slices[-1])
+        monkeypatch.setattr(Q, "_PROBE_COLLECT_SCALARS", 1)  # the Spark tail
+        tail = Q.ivfpq_topk(
+            q, spark.table(table), cents, codebooks, dim=DIM, k=5, n_probe=4
         )
-        schema = seg[seg.index("ReadSchema: "):].split("\n")[0]
-        assert "pq_code" in schema and "embedding" not in schema, schema
+        assert sorted(map(tuple, tail.collect())) == sorted(
+            map(tuple, persisted.collect())
+        )
+        assert_pruned_code_scan(tail)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from project_clinical_data_etl_pipeline_spark.operators import quantization as Q
 from project_clinical_data_etl_pipeline_spark.tables import load
+from tests.scan_plan import bucketed_scans
 
 M, KS, DIM = 8, 16, 64
 
@@ -129,16 +130,23 @@ def test_ks256_pq_topk_bounded_compile_and_codes_only_scan(
     assert all("embedding" not in s for s in index_scans), index_scans
 
 
-def test_ivfpq256_bench_serving_contract(spark, sf_dir):
+def test_ivfpq256_bench_serving_contract(spark, sf_dir, monkeypatch):
     """bench.py's ks=256 serving twin end-to-end at production
     parameters: k results per query, bucket-pruned scan reading codes
     (never vectors), and ZERO Python in the probe plan — the decode is
     the one-row-broadcast codebook lookup, so the faiss-standard ks
-    never inlines its 16,384 scalars into Catalyst."""
+    never inlines its 16,384 scalars into Catalyst. The plan checks
+    hold for the slice the driver scorer collects and for the Spark
+    tail."""
     from project_clinical_data_etl_pipeline_spark.queries.llmdata import (
         ivfpq256_probe,
     )
 
+    slices = []
+    probed_slice = Q._probed_slice
+    monkeypatch.setattr(
+        Q, "_probed_slice", lambda *a: slices.append(probed_slice(*a)) or slices[-1]
+    )
     out = ivfpq256_probe(spark, sf_dir)
     rows = out.collect()
     by_q: dict[int, int] = {}
@@ -146,12 +154,15 @@ def test_ivfpq256_bench_serving_contract(spark, sf_dir):
         by_q[r["query_id"]] = by_q.get(r["query_id"], 0) + 1
     assert set(by_q) == set(range(8)) and all(v == 5 for v in by_q.values())
 
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount" in plan
-    seg = next(s for s in plan.split("FileScan") if "SelectedBucketsCount" in s)
-    schema = seg[seg.index("ReadSchema: "):].split("\n")[0]
-    assert "pq_code" in schema and "embedding" not in schema, schema
-    assert "EvalPython" not in plan  # probe+decode stay all-JVM
+    monkeypatch.setattr(Q, "_PROBE_COLLECT_SCALARS", 1)  # the Spark tail
+    tail = ivfpq256_probe(spark, sf_dir)
+    assert sorted(map(tuple, tail.collect())) == sorted(map(tuple, rows))
+    for df in (slices[0], tail):
+        [(selected, total, schema)] = bucketed_scans(df)
+        assert selected < total, (selected, total)
+        assert "pq_code" in schema and "embedding" not in schema, schema
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in plan  # probe+decode stay all-JVM
 
 
 def test_bcast_reconstruct_matches_expr_and_drops_corrupt_codes(

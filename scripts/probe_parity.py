@@ -25,6 +25,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import statistics
 import sys
 import tempfile
@@ -74,7 +75,7 @@ def _probed_cells(Q, meta: dict, q) -> list:
     )[0]
 
 
-def run(args) -> dict:
+def run(args, work: str) -> dict:
     sys.path.insert(0, args.tree)
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(args.cpus))
     from project_clinical_data_etl_pipeline_spark.operators import ann_index as AI
@@ -86,7 +87,6 @@ def run(args) -> dict:
     schema = "vec_id bigint, embedding array<float>"
     x, pool = _corpus(args.seed)
     corpus = local_frame(spark, [(i, x[i].tolist()) for i in range(N_VECTORS)], schema)
-    work = tempfile.mkdtemp(prefix="probe_parity_")
     builders = {
         "ks16": lambda p: AI.build_ivfpq_index(spark, corpus, p, dim=DIM, ks=16, n_iter=1),
         "ks256": lambda p: AI.build_ivfpq_index(spark, corpus, p, dim=DIM, ks=256, n_iter=1),
@@ -178,7 +178,11 @@ def main() -> None:
     args = ap.parse_args()
     if args.compare:
         sys.exit(compare(*args.compare))
-    res = run(args)
+    work = tempfile.mkdtemp(prefix="probe_parity_")
+    try:
+        res = run(args, work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
     for s, v in res["summary"].items():
         print(s, v)
     if args.out:

@@ -18,16 +18,17 @@ Scale shapes, all reusing the proven kmeans/classifier patterns:
   how many subspaces; ``m·ks·(dim/m) = ks·dim`` scalars reach the
   driver per iteration (the kmeans-centroid-pull pattern).
 - **Encoding** is a pure map pass: the codebooks are codegen literals,
-  each subspace an argmin expression — no join, no Exchange.
+  each subspace an argmin expression (an Arrow kernel past
+  ``_EXPR_KERNEL_MAX_SCALARS``) — no join, no Exchange.
 - **Reconstruction/scoring** of an IVF probe reads only the probed
   cells' (id, cell, pq_code) slice. Within the driver-collect budget
   the slice is collected in one job and decoded, scored and ranked in
   numpy with the engine's arithmetic (:func:`_score_cells`), so the
   result is a local relation. Past the budget, and for
-  :func:`pq_topk`, it is map-side codebook lookup (``element_at`` on
-  literal arrays, or one broadcast codebook row) feeding the unrolled-
-  dot scorer — the plan shape of brute-force top-k, with a scan side
-  of (id, pq_code).
+  :func:`pq_topk`, the one Spark decode (:func:`pq_reconstruct`, a
+  lookup into one broadcast codebook row) feeds the one cosine top-k
+  tail (``similarity._rank_topk``) — the plan shape of brute-force
+  top-k, with a scan side of (id, pq_code).
 
 Determinism mirrors ``similarity.kmeans_centroids``: DECIMAL-exact
 means, optional per-iteration rounding, min-id seeds, lowest-id
@@ -40,12 +41,30 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import local_frame
 from .dedup import fan_out
-from .similarity import _col_sql, _dot_lit_sql, _lit_double
+from .similarity import (
+    DECIMAL_MEAN_SQL,
+    _centroid_df,
+    _col_sql,
+    _corpus_frame,
+    _dot_lit_sql,
+    _fold_sq_norm,
+    _guard_sql,
+    _lit_double,
+    _query_frame,
+    _rank_topk,
+    _spark_probe_cells,
+    _vector_reader,
+    brute_force_topk,
+    cell_assign,
+    dot,
+    kmeans_centroids,
+    norm,
+)
 
 #: Driver-collect budget of an IVF probe, in SCALARS (rows × vector
 #: dim). It bounds each of the three things the probe may hold on the
@@ -66,21 +85,12 @@ _PROBE_COLLECT_SCALARS = int(
 )
 
 #: Above this many codebook scalars (m·ks·subdim), the inlined-literal
-#: encode/decode expressions stop being "free codegen" and start being
-#: a Catalyst ANALYSIS cost — measured ~5 s of pure compile for the
-#: ks=256/dim=64 decode on a 100-row frame. kernel='auto' switches the
-#: encode to the Arrow kernel, and :func:`pq_reconstruct` decodes via
-#: :func:`pq_reconstruct_bcast` (plan size O(m) at any ks).
+#: encode expression stops being "free codegen" and starts being a
+#: Catalyst ANALYSIS cost (a literal ks=256/dim=64 decode measured ~5 s
+#: of pure compile on a 100-row frame). kernel='auto' switches the
+#: encode to the Arrow kernel there. It governs encode only: decode is
+#: the one-row broadcast of :func:`pq_reconstruct` at every ks.
 _EXPR_KERNEL_MAX_SCALARS = 4096
-
-
-def _fold_sq_norm(vec: list[float]) -> float:
-    """Driver-side ||v||² with the engines' fold order (0.0 seed,
-    index order)."""
-    acc = 0.0
-    for x in vec:
-        acc += float(x) * float(x)
-    return acc
 
 
 def _slice_ref(vec_ref: str, start0: int, width: int) -> str:
@@ -147,8 +157,6 @@ def pq_train(
     vecs = fan_out(corpus.select(F.col(vec_col).alias("__v"))).localCheckpoint(
         eager=False
     )
-    from .similarity import DECIMAL_MEAN_SQL
-
     mean_sql = DECIMAL_MEAN_SQL
     if round_dp is not None:
         mean_sql = f"round({mean_sql}, {round_dp})"
@@ -209,6 +217,7 @@ def _pq_encode_arrow_udf(codebooks: list[list[list[float]]]):
     sqn = [[_fold_sq_norm(c) for c in book] for book in codebooks]
     m = len(books)
     w = len(books[0][0])
+    read = _vector_reader("pq_encode", m * w)
 
     @pandas_udf("array<bigint>")
     def encode(vs: pd.Series) -> pd.Series:
@@ -218,9 +227,7 @@ def _pq_encode_arrow_udf(codebooks: list[list[list[float]]]):
             return pd.Series([], dtype=object)
         C = np.array(books, dtype=np.float64)  # (m, ks, w)
         SQ = np.array(sqn, dtype=np.float64)  # (m, ks)
-        X = np.array(
-            [np.asarray(v, dtype=np.float64) for v in vs], dtype=np.float64
-        )
+        X = read(vs)
         n = X.shape[0]
         out = np.empty((n, m), dtype=np.int64)
         for s in range(m):
@@ -253,7 +260,10 @@ def pq_encode(
     tests) with O(1) plan size. 'auto' picks 'expr' up to
     ``_EXPR_KERNEL_MAX_SCALARS`` codebook scalars, 'arrow' above —
     graded small-ks paths keep the all-JVM plan, serving-scale ks
-    stays compile-bounded."""
+    stays compile-bounded. Both kernels give one answer on a bad row:
+    a NULL vector, fewer than m·subdim elements, or a NULL or NaN among
+    the first m·subdim raises a named error, and elements past m·subdim
+    are ignored."""
     m = len(codebooks)
     ks = len(codebooks[0])
     w = len(codebooks[0][0])
@@ -269,29 +279,52 @@ def pq_encode(
     codes = ", ".join(
         l2_argmin_expr(_slice_ref(ref, s * w, w), codebooks[s]) for s in range(m)
     )
-    return df.withColumn(code_col, F.expr(f"array({codes})"))
+    return df.withColumn(
+        code_col, F.expr(_guard_sql("pq_encode", ref, m * w, f"array({codes})"))
+    )
 
 
-def pq_reconstruct_bcast(
+def pq_reconstruct(
     df: DataFrame,
     codebooks: list[list[list[float]]],
     code_col: str = "pq_code",
     out_col: str = "__cv",
 ) -> DataFrame:
-    """Decoded vector via ONE broadcast of the whole codebook set: the
-    m codebooks travel as a single one-row
-    ``array<array<array<double>>>`` frame (a local relation) cross-joined
-    broadcast onto the code rows, and decode is m ``element_at`` hops
-    into that value. One BroadcastExchange per plan instead of one per
-    subspace (measured 2.9 s → ~1 s execute on the sf0.1 ks=256 probe
-    against m broadcast joins), and no m·ks·subdim-literal Catalyst
-    analysis (~5 s per plan at ks=256 for the expr kernel) — O(m) plan
-    nodes at any ks, one ~2 KB·ks broadcast per plan. (A driver-side
-    ``F.lit`` of the nested list is a trap: PySpark expands it to one
-    py4j call per scalar — ~23 s of pure driver time at 16,384
-    scalars.) Codes must be pre-validated: the dispatcher
-    (:func:`pq_reconstruct`) drops null / short / out-of-range code
-    arrays before this runs."""
+    """Append ``out_col``, the decoded vector (array<double>) of each
+    row's PQ codes — the one Spark decode, at every ks. The m codebooks
+    travel as ONE one-row ``array<array<array<double>>>`` frame (a
+    local relation) cross-joined broadcast onto the code rows, and
+    decode is m ``element_at`` hops into that value: one
+    BroadcastExchange per plan, not one per subspace (measured 2.9 s →
+    ~1 s execute on the sf0.1 ks=256 probe), and O(m) plan nodes at any
+    ks. An
+    inlined-literal lookup instead costs m·ks·subdim scalars of
+    Catalyst analysis (~5 s per plan at ks=256) and measured no faster
+    at ks=16 (407 vs 407 ms on ``pq_topk``, 872 vs 863 ms on a forced
+    Spark probe tail, identical rows). (A driver-side ``F.lit`` of the
+    nested list is a trap: PySpark expands it to one py4j call per
+    scalar — ~23 s of pure driver time at 16,384 scalars.)
+
+    A defensive code guard runs first: a null / short / out-of-range
+    code array drops its row instead of flowing garbage into
+    downstream cosines/retraining (element_at with a NULL index is NOT
+    null-safe on this engine build: codegen feeds the null slot's -1
+    through and silently returns the LAST entry; an out-of-range index
+    throws under ANSI). The guard is a cheap HOF predicate on the CODE
+    column — deliberately not a filter on the decoded output, whose
+    alias substitution under predicate pushdown would inline a second
+    copy of the decode into the plan (measured: minutes of optimizer
+    time at m=32). In-contract codes always pass, so the guard drops
+    nothing on real data."""
+    m, ks = len(codebooks), len(codebooks[0])
+    valid = (
+        F.col(code_col).isNotNull()
+        & (F.size(F.col(code_col)) >= m)
+        & F.forall(
+            F.slice(F.col(code_col), 1, m),
+            lambda c: c.isNotNull() & (c >= 0) & (c < ks),
+        )
+    )
     books_df = local_frame(
         df.sparkSession,
         [([[[float(x) for x in sub] for sub in book] for book in codebooks],)],
@@ -302,76 +335,14 @@ def pq_reconstruct_bcast(
             F.element_at(F.col("__books"), s + 1),
             (F.element_at(F.col(code_col), s + 1) + 1).cast("int"),
         )
-        for s in range(len(codebooks))
+        for s in range(m)
     ]
     return (
-        df.crossJoin(F.broadcast(books_df))
+        df.filter(valid)
+        .crossJoin(F.broadcast(books_df))
         .withColumn(out_col, F.flatten(F.array(*parts)))
         .drop("__books")
     )
-
-
-def pq_reconstruct(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    code_col: str = "pq_code",
-    out_col: str = "__cv",
-) -> DataFrame:
-    """Decode-kernel dispatcher. Small codebooks (m·ks·subdim ≤
-    ``_EXPR_KERNEL_MAX_SCALARS``) inline the literal lookup
-    (:func:`pq_reconstruct_expr` — map-side, zero joins, zero
-    broadcast exchanges); large ones ship the codebook set as ONE
-    one-row broadcast (:func:`pq_reconstruct_bcast` — one
-    BroadcastExchange, O(m) plan nodes at any ks). Values are
-    bit-identical across kernels (decode is a pure lookup; pinned in
-    tests/test_quantization_kernels.py). The defensive code guard
-    makes both kernels row-equivalent under corrupt data: a null /
-    short / out-of-range code array drops its row instead of flowing
-    garbage into downstream cosines/retraining (element_at with a NULL index
-    is NOT null-safe on this engine build: codegen feeds the null
-    slot's -1 through and silently returns the LAST entry; an
-    out-of-range index throws under ANSI). The guard is a cheap HOF
-    predicate on the CODE column — deliberately not a filter on the
-    decoded output, whose alias substitution under predicate pushdown
-    would inline a second copy of the decode tree into the plan
-    (measured: minutes of optimizer time at m=32). In-contract codes
-    always pass, so the guard drops nothing on real data."""
-    m, ks, w = len(codebooks), len(codebooks[0]), len(codebooks[0][0])
-    valid = (
-        F.col(code_col).isNotNull()
-        & (F.size(F.col(code_col)) >= m)
-        & F.forall(
-            F.slice(F.col(code_col), 1, m),
-            lambda c: c.isNotNull() & (c >= 0) & (c < ks),
-        )
-    )
-    src = df.filter(valid)
-    if m * ks * w <= _EXPR_KERNEL_MAX_SCALARS:
-        return src.withColumn(
-            out_col, pq_reconstruct_expr(codebooks, code_col=code_col)
-        )
-    return pq_reconstruct_bcast(
-        src, codebooks, code_col=code_col, out_col=out_col
-    )
-
-
-def pq_reconstruct_expr(
-    codebooks: list[list[list[float]]], code_col: str = "pq_code"
-) -> Column:
-    """Decoded vector (array<double>) from PQ codes: per subspace an
-    ``element_at`` lookup into the literal codebook, flattened —
-    map-side, no join. PERF: the literal tree is m·ks·subdim scalars —
-    prefer :func:`pq_reconstruct_bcast` beyond
-    ``_EXPR_KERNEL_MAX_SCALARS`` (identical values, O(m) plan)."""
-    parts = []
-    for s, book in enumerate(codebooks):
-        arrays = ", ".join(
-            f"array({', '.join(_lit_double(x) for x in c)})" for c in book
-        )
-        parts.append(
-            f"element_at(array({arrays}), CAST(element_at({code_col}, {s + 1}) + 1 AS INT))"
-        )
-    return F.expr(f"flatten(array({', '.join(parts)}))")
 
 
 def pq_topk(
@@ -390,8 +361,6 @@ def pq_topk(
     scans only (id, pq_code) — the 32× IO saving at 100 TB. Returns
     (query_id, neighbor_id, cosine, rank).
     """
-    from .similarity import brute_force_topk
-
     decoded = pq_reconstruct(
         encoded_corpus, codebooks, code_col=code_col, out_col="__decoded"
     ).select(F.col(id_col), F.col("__decoded").alias(vec_col))
@@ -479,46 +448,15 @@ def _exact_rerank(
     pairs pick up their raw vectors and re-rank by exact cosine.
     Candidate ids BROADCAST into the raw scan (semi-prunes the float
     read to |candidates| rows — never corpus-wide); exact query
-    vectors broadcast onto the survivors."""
-    from .similarity import dot, norm
-
-    raw = raw_corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm(F.col(vec_col), dim).alias("__cn"),
+    vectors broadcast onto the survivors; ``similarity._rank_topk``
+    ranks the pairs (their self-match filter drops nothing here: the
+    candidates come from a top-k that already dropped them)."""
+    raw = _corpus_frame(raw_corpus, dim, id_col, vec_col)
+    q = _query_frame(queries, dim, id_col, vec_col)
+    pairs = raw.join(F.broadcast(candidates), on="neighbor_id").join(
+        F.broadcast(q), on="query_id"
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm(F.col(vec_col), dim).alias("__qn"),
-    )
-    scored = (
-        raw.join(F.broadcast(candidates), on="neighbor_id")
-        .join(F.broadcast(q), on="query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("__qv"), F.col("__cv"), dim)
-                / (F.col("__qn") * F.col("__cn"))
-            ).alias("cosine"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _rank_topk(pairs, k, dim)
 
 
 def ivfpq_topk_rerank(
@@ -582,8 +520,6 @@ def ivfpq_index(
     subspace L2 argmins — all inlined literals, no join, no Exchange.
     Persist this (optionally bucketed by cell, plans.layout) and the
     serving scan reads ~24 B/vector instead of dim floats."""
-    from .similarity import cell_assign, norm
-
     coarse = fan_out(
         corpus.select(
             F.col(id_col).alias("neighbor_id"),
@@ -628,52 +564,10 @@ def ivfpq_topk(
     return _score_cells(cells, probes, rows, index, codebooks, dim, k)
 
 
-def _query_frame(
-    queries: DataFrame, dim: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """(query_id, __qv, __qn) — the probe-side projection."""
-    from .similarity import norm
-
-    return queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm(F.col(vec_col), dim).alias("__qn"),
-    )
-
-
-def _spark_probe_cells(
-    q: DataFrame, centroids: list[list[float]], dim: int, n_probe: int
-) -> DataFrame:
-    """(query_id, __qv, __qn, cell): each query's ``n_probe`` nearest
-    centroids by cosine (ties → lowest centroid id) as a Spark plan —
-    a broadcast crossJoin with the centroid frame and a row_number
-    window. The fallback of :func:`_probe_cells`."""
-    from pyspark.sql import Window
-
-    from .similarity import _centroid_df, cosine
-
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("centroid_id").asc()
-    )
-    return (
-        q.crossJoin(F.broadcast(_centroid_df(q.sparkSession, centroids)))
-        .select(
-            "query_id",
-            "__qv",
-            "__qn",
-            "centroid_id",
-            cosine(F.col("__qv"), F.col("__center"), dim).alias("__sim"),
-        )
-        .withColumn("__rn", F.row_number().over(w_probe))
-        .filter(F.col("__rn") <= n_probe)
-        .select("query_id", "__qv", "__qn", F.col("centroid_id").alias("cell"))
-    )
-
-
 def _pick_cells_local(
     rows: list, centroids: list[list[float]], dim: int, n_probe: int
 ) -> list[tuple] | None:
-    """Driver-side twin of :func:`_spark_probe_cells` over collected
+    """Driver-side twin of ``similarity._spark_probe_cells`` over collected
     (query_id, __qv, __qn) rows: the (query_id, __qv, __qn, cell) probe
     rows, or None when some row is outside what this path reproduces
     bit-for-bit. The cosine is the engine's arithmetic: elements cast
@@ -756,9 +650,9 @@ def _probe_cells(
     bit-identical to the Spark selection), and the probe frame is a
     local relation — no crossJoin, shuffle window or probe-frame
     collect. Over the budget, or on a row the driver path does not
-    reproduce exactly, the Spark selection (:func:`_spark_probe_cells`)
-    runs and :func:`_collect_probes` collects or checkpoints its
-    result."""
+    reproduce exactly, the Spark selection
+    (``similarity._spark_probe_cells``) runs and :func:`_collect_probes`
+    collects or checkpoints its result."""
     q = _query_frame(queries, dim, id_col, vec_col)
     per_query = max(dim, 1) * max(n_probe, 1)
     cap_rows = max(1, _PROBE_COLLECT_SCALARS // per_query)
@@ -767,8 +661,8 @@ def _probe_cells(
     if len(rows) <= cap_rows:
         picked = _pick_cells_local(rows, centroids, dim, n_probe)
     if picked is None:
-        probes = _spark_probe_cells(q, centroids, dim, n_probe)
-        return _collect_probes(probes, dim)
+        cent = _centroid_df(q.sparkSession, centroids)
+        return _collect_probes(_spark_probe_cells(q, cent, dim, n_probe), dim)
     from pyspark.sql.types import LongType, StructField, StructType
 
     schema = StructType(q.schema.fields + [StructField("cell", LongType())])
@@ -806,17 +700,19 @@ def _score_local(
     k: int,
     offsets: list[list[float]] | None = None,
 ) -> list[tuple] | None:
-    """Driver-side twin of the Spark tail of :func:`_score_cells` over
-    the collected probe rows (query_id, __qv, __qn, cell) and slice
-    rows (neighbor_id, cell, pq_code): the (query_id, neighbor_id,
-    cosine, rank) rows, ordered by query id and rank, or None when
-    the input is outside what this path reproduces bit-for-bit.
+    """Driver-side twin of the Spark tail of :func:`_score_cells` —
+    :func:`pq_reconstruct` feeding ``similarity._rank_topk``, the
+    result contract of every ANN answer — over the collected probe
+    rows (query_id, __qv, __qn, cell) and slice rows (neighbor_id,
+    cell, pq_code): the (query_id, neighbor_id, cosine, rank) rows,
+    ordered by query id and rank, or None when the input is outside
+    what this path reproduces bit-for-bit.
 
     Same rows as the Spark plan: a row with a null, short or
     out-of-range code is dropped (the :func:`pq_reconstruct` guard);
     the decoded vector is the codebook lookup, plus ``offsets[cell]``
     in residual mode; a self-match, or a pair with a NULL id, is
-    dropped; duplicate probe rows repeat their candidates and
+    dropped (``_rank_topk``'s filter); duplicate probe rows repeat their candidates and
     duplicate query ids rank as one, as the join and the window do.
     Same arithmetic: doubles, 0.0-seeded left-to-right folds over
     1..dim for the dot and the norm (never ``np.dot``, which sums
@@ -961,12 +857,9 @@ def _score_cells(
     collecting it starts no job. Otherwise, over the budget, or on
     an input the driver path does not reproduce exactly, the Spark
     tail runs: the slice is decoded (:func:`pq_reconstruct`), joined
-    to the broadcast ``probes`` on cell, scored, and ranked by a
-    per-query window."""
-    from pyspark.sql import Window
+    to the broadcast ``probes`` on cell, and ranked by
+    ``similarity._rank_topk``."""
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    from .similarity import dot, norm
 
     scanned = _probed_slice(index, cells)
     if rows is not None:
@@ -996,32 +889,10 @@ def _score_cells(
             .withColumn("__cv", F.expr(recon))
             .drop("__dec")
         )
-    scored = (
-        decoded.withColumn("__cn", norm("__cv", dim))
-        .join(F.broadcast(probes), on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("__qv"), F.col("__cv"), dim)
-                / (F.col("__qn") * F.col("__cn"))
-            ).alias("cosine"),
-        )
+    pairs = decoded.withColumn("__cn", norm("__cv", dim)).join(
+        F.broadcast(probes), on="cell"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _rank_topk(pairs, k, dim)
 
 
 def _probed_slice(index: DataFrame, cells: list) -> DataFrame:
@@ -1056,8 +927,6 @@ def ivf_residuals(
     proper: the residual distribution is tighter than the raw one, so
     the same code budget buys more accuracy). One map pass: cosine
     argmax cell + literal-table lookup + elementwise subtract."""
-    from .similarity import cell_assign, norm
-
     assigned = corpus.select(
         F.col(id_col),
         F.col(vec_col),
@@ -1188,8 +1057,6 @@ def imi_train(
     so the determinism contract (min-id seeds, DECIMAL-exact means,
     round_dp, lowest-id ties) is inherited, and a SQL oracle can
     re-derive both levels with the existing Lloyd CTE patterns."""
-    from .similarity import kmeans_centroids
-
     corpus = corpus.localCheckpoint(eager=False)  # scanned by both levels
     cents1 = kmeans_centroids(
         corpus,
@@ -1231,8 +1098,6 @@ def imi_cell_cols(
     ``stride`` defaults to len(cents2); the managed index builds with
     HEADROOM (2·k2) so level-2 entries appended by a later
     ``split_cell`` keep every existing composite id stable."""
-    from .similarity import cell_assign, norm
-
     k2 = len(cents2) if stride is None else stride
     out = (
         df.withColumn("__imn", norm(F.col(vec_col), dim))
@@ -1313,10 +1178,6 @@ def imi_probe_cells(
     distance evaluations against broadcast centroid frames —
     independent of corpus size; the candidate volume fraction is
     ~(p1·p2)/(k1·k2)."""
-    from pyspark.sql import Window
-
-    from .similarity import _centroid_df, dot
-
     k2 = len(cents2) if stride is None else stride
     spark = queries.sparkSession
     branches, lvl1, _ = _probe_cells(

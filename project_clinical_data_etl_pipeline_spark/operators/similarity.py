@@ -16,6 +16,8 @@ are engine-deterministic (matches the DuckDB oracle bit-for-bit).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -102,20 +104,48 @@ def brute_force_topk(
     # norms are per-ROW: computed once per side so each pair evaluates
     # only the dot product (same values/ops as the oracle's
     # sqrt(dot(a,a))*sqrt(dot(b,b)) denominator)
-    q = queries.select(
+    q = _query_frame(queries, dim, id_col, vec_col)
+    c = _corpus_frame(corpus, dim, id_col, vec_col)
+    return _rank_topk(F.broadcast(q).crossJoin(c), k, dim)
+
+
+def _query_frame(
+    queries: DataFrame, dim: int | None, id_col: str, vec_col: str
+) -> DataFrame:
+    """(query_id, __qv, __qn): the query side of every cosine top-k
+    plan, its norm computed once per row."""
+    return queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
         norm(F.col(vec_col), dim).alias("__qn"),
     )
-    c = corpus.select(
+
+
+def _corpus_frame(
+    corpus: DataFrame, dim: int | None, id_col: str, vec_col: str
+) -> DataFrame:
+    """(neighbor_id, __cv, __cn): the candidate side of every cosine
+    top-k plan, its norm computed once per row."""
+    return corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cv"),
         norm(F.col(vec_col), dim).alias("__cn"),
     )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
+
+
+def _rank_topk(pairs: DataFrame, k: int, dim: int | None) -> DataFrame:
+    """The result contract of every ANN answer, applied to candidate
+    pairs (query_id, neighbor_id, __qv, __qn, __cv, __cn): self-matches
+    dropped, cosine = dot / (‖q‖·‖c‖), per query the first ``k`` by
+    (cosine desc, neighbor id asc) — the tiebreak that makes the answer
+    deterministic (SURVEY.md §7.5.1) — and ``rank`` 1..k as bigint.
+    Returns (query_id, neighbor_id, cosine, rank). Its driver twin is
+    ``quantization._score_local``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        pairs.filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
@@ -124,14 +154,11 @@ def brute_force_topk(
                 / (F.col("__qn") * F.col("__cn"))
             ).alias("cosine"),
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank"))
+        .select(
+            "query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank")
+        )
     )
 
 
@@ -215,16 +242,64 @@ def _dot_lit_sql(a_ref: str, vec: list[float]) -> str:
     )
 
 
-def _fold_norm(vec: list[float]) -> float:
-    """Driver-side ||v|| with the SAME fold order as the SQL/DuckDB
-    accumulation (0.0 seed, index order, IEEE doubles throughout) —
-    bit-identical to sqrt(list_dot_product(v, v))."""
-    import math
-
+def _fold_sq_norm(vec: list[float]) -> float:
+    """Driver-side ||v||² with the SAME fold order as the SQL/DuckDB
+    accumulation (0.0 seed, index order, IEEE doubles throughout)."""
     acc = 0.0
     for x in vec:
         acc += float(x) * float(x)
-    return math.sqrt(acc)
+    return acc
+
+
+def _fold_norm(vec: list[float]) -> float:
+    """Driver-side ||v||, bit-identical to sqrt(list_dot_product(v, v))."""
+    return math.sqrt(_fold_sq_norm(vec))
+
+
+_ZERO_NORM = "cell_assign: zero-norm vector"
+
+
+def _malformed(op: str, n: int) -> str:
+    return (
+        f"{op}: malformed vector (NULL, fewer than {n} elements, "
+        f"or a NULL or NaN among the first {n})"
+    )
+
+
+def _guard_sql(op: str, ref: str, n: int, value: str) -> str:
+    """``value`` for a well-formed vector column ``ref``, else a named
+    error: a NULL vector, fewer than ``n`` elements, or a NULL or NaN
+    among the first ``n``. Elements past ``n`` are ignored. The rule
+    of both kernels of :func:`cell_assign` and ``quantization.pq_encode``
+    (the Arrow kernels apply it through :func:`_vector_reader`; Arrow
+    hands a NULL element to pandas as NaN, so NaN is malformed too)."""
+    return (
+        f"CASE WHEN {ref} IS NULL OR size({ref}) < {n} "
+        f"OR exists(slice({ref}, 1, {n}), x -> x IS NULL OR isnan(x)) "
+        f"THEN raise_error('{_malformed(op, n)}') ELSE {value} END"
+    )
+
+
+def _vector_reader(op: str, n: int):
+    """The Arrow kernels' twin of :func:`_guard_sql`: a function from a
+    pandas Series of vectors to the (rows, n) float64 matrix of their
+    first ``n`` elements, raising ValueError on a malformed vector. A
+    closure, so a worker unpickles it without importing this package."""
+    msg = _malformed(op, n)
+
+    def read(vs):
+        import numpy as np
+
+        if any(v is None or len(v) < n for v in vs):
+            raise ValueError(msg)
+        X = np.array(
+            [np.asarray(v[:n], dtype=np.float64) for v in vs], dtype=np.float64
+        )
+        if np.isnan(X).any():
+            raise ValueError(msg)
+        return X
+
+    return read
 
 
 def cell_assign_expr(
@@ -245,14 +320,26 @@ def cell_assign_expr(
     ascending array_sort puts the max-cosine (min negated) first, with
     the id as tiebreak — exactly ``ORDER BY cos DESC, centroid_id ASC``
     (the DuckDB oracle's row_number ordering). Each cosine is evaluated
-    once; centroid norms are driver-side constants."""
+    once over the first ``dim`` elements; centroid norms are
+    driver-side constants. A malformed vector (:func:`_guard_sql`) or a
+    zero ``norm_col`` raises a named error."""
     ref = _col_sql(vec_col)
+    head = f"slice({ref}, 1, {dim})"
     nref = _col_sql(norm_col)
     entries = []
     for i, c in enumerate(centroids):
-        cos = f"({_dot_lit_sql(ref, c)} / ({nref} * {_lit_double(_fold_norm(c))}))"
+        cos = f"({_dot_lit_sql(head, c)} / ({nref} * {_lit_double(_fold_norm(c))}))"
         entries.append(f"named_struct('s', -({cos}), 'i', {i}L)")
-    return F.expr(f"element_at(array_sort(array({', '.join(entries)})), 1).i")
+    argmax = f"element_at(array_sort(array({', '.join(entries)})), 1).i"
+    return F.expr(
+        _guard_sql(
+            "cell_assign",
+            ref,
+            dim,
+            f"CASE WHEN {nref} = 0 THEN raise_error('{_ZERO_NORM}') "
+            f"ELSE {argmax} END",
+        )
+    )
 
 
 #: Above this many centroid scalars (k·dim) the inlined-literal
@@ -270,7 +357,7 @@ def cell_assign_expr(
 _ASSIGN_EXPR_MAX_SCALARS = 2048
 
 
-def _cell_assign_arrow_udf(centroids: list[list[float]]):
+def _cell_assign_arrow_udf(centroids: list[list[float]], dim: int):
     """Arrow-batched assignment kernel: same arithmetic as
     :func:`cell_assign_expr`, bit-for-bit — the cosine numerator is the
     0.0-seeded index-order fold (the ``j`` loop below reproduces the
@@ -278,14 +365,15 @@ def _cell_assign_arrow_udf(centroids: list[list[float]]):
     pairwise-sum and drift a ulp), the norm is recomputed with the same
     fold + IEEE sqrt (identical to the callers' precomputed ``__n``),
     and selection is first-max (ties → lowest centroid id, matching the
-    struct array_sort). Zero-norm vectors (NaN/Inf cosines) are outside
-    the contract of both kernels."""
+    struct array_sort). Malformed and zero-norm vectors raise as in the
+    expression kernel."""
     global pd
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     cents = [[float(x) for x in c] for c in centroids]
     cnorms = [_fold_norm(c) for c in cents]
+    read = _vector_reader("cell_assign", dim)
 
     @pandas_udf("bigint")
     def assign(vs: pd.Series) -> pd.Series:
@@ -294,14 +382,14 @@ def _cell_assign_arrow_udf(centroids: list[list[float]]):
         if len(vs) == 0:
             return pd.Series([], dtype="int64")
         C = np.array(cents, dtype=np.float64)  # (k, dim)
-        X = np.array(
-            [np.asarray(v, dtype=np.float64) for v in vs], dtype=np.float64
-        )
-        n, dim = X.shape
+        X = read(vs)
+        n = X.shape[0]
         nrm = np.zeros(n, dtype=np.float64)
         for j in range(dim):
             nrm = nrm + X[:, j] * X[:, j]
         nrm = np.sqrt(nrm)
+        if (nrm == 0).any():
+            raise ValueError(_ZERO_NORM)
         best = np.full(n, -np.inf, dtype=np.float64)
         idx = np.zeros(n, dtype=np.int64)
         for i in range(C.shape[0]):
@@ -330,14 +418,17 @@ def cell_assign(
     O(1) plan size (``norm_col`` is ignored there — the kernel
     recomputes the identical fold norm), 'auto' picks 'expr' up to
     ``_ASSIGN_EXPR_MAX_SCALARS`` centroid scalars. Values are
-    bit-identical either way."""
+    bit-identical either way, and so is the answer on a bad row: a
+    NULL vector, fewer than ``dim`` elements, a NULL or NaN among the
+    first ``dim`` or a zero norm raises a named error, and elements past
+    ``dim`` are ignored."""
     if kernel == "auto":
         kernel = (
             "expr" if len(centroids) * dim <= _ASSIGN_EXPR_MAX_SCALARS else "arrow"
         )
     if kernel == "arrow":
         vref = vec_col if isinstance(vec_col, Column) else F.col(vec_col)
-        return _cell_assign_arrow_udf(centroids)(vref)
+        return _cell_assign_arrow_udf(centroids, dim)(vref)
     if kernel != "expr":
         raise ValueError(
             f"kernel must be 'auto', 'expr', or 'arrow'; got {kernel!r}"
@@ -355,6 +446,32 @@ def _centroid_df(spark, centroids: list[list[float]]) -> DataFrame:
         spark,
         [(i, [float(x) for x in v]) for i, v in enumerate(centroids)],
         "centroid_id bigint, __center array<double>",
+    )
+
+
+def _spark_probe_cells(
+    q: DataFrame, cent: DataFrame, dim: int | None, n_probe: int
+) -> DataFrame:
+    """(query_id, __qv, __qn, cell): each query's ``n_probe`` nearest
+    centroids of the (centroid_id, __center) frame ``cent`` by cosine
+    (ties → lowest centroid id) as a Spark plan — a broadcast crossJoin
+    and a row_number window. The cell selector of :func:`ivf_topk`, and
+    the fallback of ``quantization._probe_cells``."""
+    w_probe = Window.partitionBy("query_id").orderBy(
+        F.col("__sim").desc(), F.col("centroid_id").asc()
+    )
+    return (
+        q.crossJoin(F.broadcast(cent))
+        .select(
+            "query_id",
+            "__qv",
+            "__qn",
+            "centroid_id",
+            cosine(F.col("__qv"), F.col("__center"), dim).alias("__sim"),
+        )
+        .withColumn("__rn", F.row_number().over(w_probe))
+        .filter(F.col("__rn") <= n_probe)
+        .select("query_id", "__qv", "__qn", F.col("centroid_id").alias("cell"))
     )
 
 
@@ -452,11 +569,9 @@ def assign_cells(
     (neighbor_id, __cv, __cn, cell) — PURE map pass via
     :func:`cell_assign_expr` (inlined centroid literals, codegen
     argmax): no broadcast join, no per-row window, no Exchange."""
-    return corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm(F.col(vec_col), dim).alias("__cn"),
-    ).withColumn("cell", cell_assign("__cv", "__cn", centroids, dim))
+    return _corpus_frame(corpus, dim, id_col, vec_col).withColumn(
+        "cell", cell_assign("__cv", "__cn", centroids, dim)
+    )
 
 
 def persist_ivf_index(
@@ -510,28 +625,7 @@ def ivf_topk_indexed(
         queries, centroids, dim, n_probe, id_col, vec_col
     )
     assigned = spark.table(table).filter(F.col("cell").isin(cells))
-    scored = (
-        assigned.join(F.broadcast(probes_local), on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("__qv"), F.col("__cv"), dim)
-                / (F.col("__qn") * F.col("__cn"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank")
-        )
-    )
+    return _rank_topk(assigned.join(F.broadcast(probes_local), on="cell"), k, dim)
 
 
 def ivf_topk(
@@ -568,72 +662,21 @@ def ivf_topk(
         cent = corpus.orderBy(F.col(id_col).asc()).limit(n_centroids).select(
             F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("__center")
         )
-    w_assign = Window.partitionBy("neighbor_id").orderBy(
-        F.col("__sim").desc(), F.col("centroid_id").asc()
+    # a corpus vector's cell is its one nearest centroid: the probe
+    # selector at n_probe=1, the corpus side standing in for queries
+    assigned = _spark_probe_cells(
+        _query_frame(corpus, dim, id_col, vec_col), cent, dim, 1
+    ).select(
+        F.col("query_id").alias("neighbor_id"),
+        F.col("__qv").alias("__cv"),
+        F.col("__qn").alias("__cn"),
+        "cell",
     )
-    assigned = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            norm(F.col(vec_col), dim).alias("__cn"),
-        )
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "neighbor_id",
-            "__cv",
-            "__cn",
-            "centroid_id",
-            cosine(F.col("__cv"), F.col("__center"), dim).alias("__sim"),
-        )
-        .withColumn("__rn", F.row_number().over(w_assign))
-        .filter(F.col("__rn") == 1)
-        .select("neighbor_id", "__cv", "__cn", F.col("centroid_id").alias("cell"))
+    probes = _spark_probe_cells(
+        _query_frame(queries, dim, id_col, vec_col), cent, dim, n_probe
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            norm(F.col(vec_col), dim).alias("__qn"),
-        )
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            "__qv",
-            "__qn",
-            "centroid_id",
-            cosine(F.col("__qv"), F.col("__center"), dim).alias("__sim"),
-        )
-        .withColumn("__rn", F.row_number().over(w_probe))
-        .filter(F.col("__rn") <= n_probe)
-        .select("query_id", "__qv", "__qn", F.col("centroid_id").alias("cell"))
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(assigned, on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("__qv"), F.col("__cv"), dim)
-                / (F.col("__qn") * F.col("__cn"))
-            ).alias("cosine"),
-        )
-        # no dedup needed: every neighbor lives in exactly one cell
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank")
-        )
-    )
+    # no dedup needed: every neighbor lives in exactly one cell
+    return _rank_topk(F.broadcast(probes).join(assigned, on="cell"), k, dim)
 
 
 def lsh_bucket_topk(
@@ -668,22 +711,12 @@ def lsh_bucket_topk(
     Recall/cost is tunable: more planes → fewer candidates; more
     tables → higher recall.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm(F.col(vec_col), dim).alias("__qn"),
-        F.explode(
-            lsh_table_keys(F.col(vec_col), dim, num_planes, num_tables)
-        ).alias("__bucket"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm(F.col(vec_col), dim).alias("__cn"),
-        F.explode(
-            lsh_table_keys(F.col(vec_col), dim, num_planes, num_tables)
-        ).alias("__bucket"),
-    )
+    def bucketed(side: DataFrame, vec: str) -> DataFrame:
+        keys = lsh_table_keys(F.col(vec), dim, num_planes, num_tables)
+        return side.withColumn("__bucket", F.explode(keys))
+
+    q = bucketed(_query_frame(queries, dim, id_col, vec_col), "__qv")
+    c = bucketed(_corpus_frame(corpus, dim, id_col, vec_col), "__cv")
     # dedup BEFORE scoring: a pair sharing m table buckets appears m
     # times; all duplicate rows are identical in every kept column, so
     # dropDuplicates is deterministic — and the dim-unrolled dot runs
@@ -691,23 +724,7 @@ def lsh_bucket_topk(
     candidates = (
         F.broadcast(q)
         .join(c, on="__bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "__qv", "__qn", "__cv", "__cn")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = candidates.select(
-        "query_id",
-        "neighbor_id",
-        (
-            dot(F.col("__qv"), F.col("__cv"), dim)
-            / (F.col("__qn") * F.col("__cn"))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _rank_topk(candidates, k, dim)

@@ -2,10 +2,13 @@
 
 Builds seeded persisted indexes over a seeded 1,024-vector, 64-dim
 corpus (flat IVF-PQ at ks=16 and ks=256, and a two-level IMI index at
-k1=k2=8), then serves N seeded four-query requests against each, once
-with a ``local_frame`` query set and once with a ``createDataFrame(list)``
-query set (an RDD-backed frame, as a serving client builds it). For each
-probe it records the rows ``(query_id, neighbor_id, cosine bits, rank)``,
+k1=k2=8), then serves N seeded four-query requests against each three
+times: with a ``local_frame`` query set, with a ``createDataFrame(list)``
+query set (an RDD-backed frame, as a serving client builds it), and
+with a ``local_frame`` query set and ``quantization._PROBE_COLLECT_SCALARS``
+set to 1, which sends every probe down the Spark cell selection and the
+Spark scoring tail instead of the driver path (frame kind ``tail``). For
+each probe it records the rows ``(query_id, neighbor_id, cosine bits, rank)``,
 the result schema with nullability, the Spark jobs the probe started
 (construct and collect), its wall time, and the index rows in the probed
 cells (slice rows), and prints a summary per index and frame kind:
@@ -95,7 +98,9 @@ def run(args, work: str) -> dict:
     frames = {
         "local": lambda rows: local_frame(spark, rows, schema),
         "rdd": lambda rows: spark.createDataFrame(rows, schema),
+        "tail": lambda rows: local_frame(spark, rows, schema),
     }
+    budget = Q._PROBE_COLLECT_SCALARS
     probes, schemas = [], {}
     for name in args.indexes.split(","):
         path = os.path.join(work, name)
@@ -106,6 +111,7 @@ def run(args, work: str) -> dict:
             for r in AI.read_index(spark, path).groupBy("cell").count().collect()
         }
         for kind, make in frames.items():
+            Q._PROBE_COLLECT_SCALARS = 1 if kind == "tail" else budget
             warm = make([(1_000_000 + j, pool[j].tolist()) for j in range(BATCH)])
             AI.probe_index(spark, path, warm, k=K).collect()
             for req in range(args.requests):
@@ -128,6 +134,7 @@ def run(args, work: str) -> dict:
                     "index": name, "frame": kind, "request": req, "rows": rows,
                     "jobs": jobs, "ms": round(ms, 1), "slice_rows": slice_rows,
                 })
+    Q._PROBE_COLLECT_SCALARS = budget
     summary = {}
     for name in args.indexes.split(","):
         for kind in frames:

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from project_clinical_data_etl_pipeline_spark.operators import ann_index as AI
 from project_clinical_data_etl_pipeline_spark.operators import quantization as Q
+from project_clinical_data_etl_pipeline_spark.operators import similarity as S
 from project_clinical_data_etl_pipeline_spark.session import local_frame
 
 DIM = 16
@@ -41,16 +42,25 @@ def _queries(spark, vecs, ids=None):
     )
 
 
+def _spark_probes(queries, centroids, n_probe):
+    """The Spark cell selection's (query_id, __qv, __qn, cell) frame."""
+    return S._spark_probe_cells(
+        S._query_frame(queries, DIM, "vec_id", "embedding"),
+        S._centroid_df(queries.sparkSession, centroids),
+        DIM,
+        n_probe,
+    )
+
+
 def _spark_cells(queries, centroids, n_probe):
-    q = Q._query_frame(queries, DIM, "vec_id", "embedding")
     return sorted(
         (r["query_id"], r["cell"])
-        for r in Q._spark_probe_cells(q, centroids, DIM, n_probe).collect()
+        for r in _spark_probes(queries, centroids, n_probe).collect()
     )
 
 
 def _driver_cells(queries, centroids, n_probe):
-    q = Q._query_frame(queries, DIM, "vec_id", "embedding")
+    q = S._query_frame(queries, DIM, "vec_id", "embedding")
     picked = Q._pick_cells_local(q.collect(), centroids, DIM, n_probe)
     return None if picked is None else sorted((p[0], p[3]) for p in picked)
 
@@ -123,12 +133,7 @@ def test_null_and_zero_norm_queries_take_the_fallback(spark):
         assert _driver_cells(q, cents, 2) is None, name
 
         def spark_path():
-            cells, frame, _ = Q._collect_probes(
-                Q._spark_probe_cells(
-                    Q._query_frame(q, DIM, "vec_id", "embedding"), cents, DIM, 2
-                ),
-                DIM,
-            )
+            cells, frame, _ = Q._collect_probes(_spark_probes(q, cents, 2), DIM)
             return cells, sorted((r["query_id"], r["cell"]) for r in frame.collect())
 
         def selector():
@@ -149,9 +154,7 @@ def test_driver_probe_frame_equals_spark_probe_frame(spark):
     cents = rng.normal(size=(12, DIM)).tolist()
     q = _queries(spark, _f32(rng.normal(size=(10, DIM))))
     cells, rows = _probe_rows(q, cents, 3)
-    spark_frame = Q._spark_probe_cells(
-        Q._query_frame(q, DIM, "vec_id", "embedding"), cents, DIM, 3
-    )
+    spark_frame = _spark_probes(q, cents, 3)
     want = sorted(
         (r["query_id"], r["cell"], r["__qn"], tuple(r["__qv"]))
         for r in spark_frame.collect()

@@ -70,7 +70,7 @@ def _books(rng, m, ks, w):
     return rng.normal(size=(m, ks, w)).tolist()
 
 
-@pytest.mark.parametrize("ks", [8, 512])  # the expr and the broadcast decode
+@pytest.mark.parametrize("ks", [8, 512])  # a small and a large codebook set
 def test_flat_driver_scorer_matches_spark_tail(spark, monkeypatch, ks):
     rng = np.random.default_rng(ks)
     cents = rng.normal(size=(6, DIM)).tolist()

@@ -1,9 +1,10 @@
-"""Kernel-equivalence gates for PQ encode/decode (operators.quantization):
-the Arrow encode kernel and the one-row-broadcast decode must be
-BIT-IDENTICAL to the literal-expression kernels they bound the compile
-cost of — same codes, same reconstructed doubles — and the 'auto'
+"""Kernel gates for PQ encode/decode (operators.quantization): the
+Arrow encode kernel must be BIT-IDENTICAL to the literal-expression
+kernel it bounds the compile cost of — same codes — and the 'auto'
 switch must pick the all-JVM expression plan at graded small ks and the
-O(1)-plan kernels at faiss-standard ks=256.
+O(1)-plan Arrow kernel at faiss-standard ks=256. The one decode, a
+one-row-broadcast codebook lookup, must return the plain lookup's
+doubles at both sizes.
 """
 
 from __future__ import annotations
@@ -165,29 +166,21 @@ def test_ivfpq256_bench_serving_contract(spark, sf_dir, monkeypatch):
         assert "EvalPython" not in plan  # probe+decode stay all-JVM
 
 
-def test_bcast_reconstruct_matches_expr_and_drops_corrupt_codes(
+def test_reconstruct_matches_codebook_lookup_and_drops_corrupt_codes(
     spark, corpus, codebooks
 ):
-    """Round-14 decode kernel: the one-row-broadcast lookup
-    (pq_reconstruct_bcast) is bit-identical to the literal-expression
-    kernel at graded ks AND at ks=256, and the dispatcher's defensive
-    filter drops rows with null/out-of-range codes for every kernel
-    (row-equivalent kernels)."""
+    """The one Spark decode (pq_reconstruct, a lookup into one broadcast
+    codebook row) returns exactly the plain codebook lookup — the
+    doubles of entry code[s] of codebook s, concatenated — at graded
+    ks AND at ks=256, and its defensive filter drops rows with null
+    codes."""
     for books in (codebooks, _big_codebooks()):
         enc = Q.pq_encode(corpus, books).select("vec_id", "pq_code")
-        via_expr = {
-            r["vec_id"]: r["dec"]
-            for r in enc.select(
-                "vec_id", Q.pq_reconstruct_expr(books).alias("dec")
-            ).collect()
-        }
-        via_bcast = {
-            r["vec_id"]: r["dec"]
-            for r in Q.pq_reconstruct_bcast(enc, books, out_col="dec")
-            .select("vec_id", "dec")
-            .collect()
-        }
-        assert via_bcast == via_expr and len(via_bcast) > 0
+        rows = Q.pq_reconstruct(enc, books, out_col="dec").collect()
+        assert len(rows) == enc.count() > 0
+        for r in rows:
+            want = [x for s, c in enumerate(r["pq_code"]) for x in books[s][c]]
+            assert r["dec"] == want, r["vec_id"]
 
     # corrupt codes: a NULL pq_code row must drop — never a NULL
     # decoded vector

@@ -3,17 +3,23 @@
 BIT-IDENTICAL to the literal-expression kernel it bounds the plan cost
 of — same cell ids, same tie behavior — and the 'auto' switch must keep
 graded-scale centroid sets all-JVM while corpus-scale k (SemDeDup's
-k = sqrt(n)) takes the O(1)-plan Arrow path.
+k = sqrt(n)) takes the O(1)-plan Arrow path. On a malformed vector both
+kernels of the assignment and of the PQ encode give one answer.
 """
 
 from __future__ import annotations
 
+import math
+import re
 import time
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from project_clinical_data_etl_pipeline_spark.operators import quantization as Q
 from project_clinical_data_etl_pipeline_spark.operators import similarity as S
+from project_clinical_data_etl_pipeline_spark.session import local_frame
 from project_clinical_data_etl_pipeline_spark.tables import load
 
 DIM = 64
@@ -91,3 +97,83 @@ def test_large_k_assignment_bounded_and_correct(vecs):
     assert elapsed < 30, f"k=256 arrow assignment took {elapsed:.1f}s"
     via_expr = _assign(sample, cents, "expr")
     assert via_auto == via_expr
+
+
+_W = 8  # vector width: the assignment's dim, the encode's m·subdim
+_GOOD = [0.5, -1.25, 2.0, 0.75, -0.5, 1.5, -2.0, 0.25]
+_BAD = {
+    "null vector": None,
+    "null element": [None] + _GOOD[1:],
+    # Arrow hands a NULL element to pandas as NaN: both are malformed
+    "nan element": [float("nan")] + _GOOD[1:],
+    "too few elements": _GOOD[:-1],
+    "more than dim": _GOOD + [1e6, -3.0],
+    "zero norm": [0.0] * _W,
+}
+
+
+def _fold_dot(a, b):
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += float(x) * float(y)
+    return acc
+
+
+def _ref_assign(v, cents):
+    v = v[:_W]
+    cos = [
+        _fold_dot(v, c) / (math.sqrt(_fold_dot(v, v)) * math.sqrt(_fold_dot(c, c)))
+        for c in cents
+    ]
+    return cos.index(max(cos))
+
+
+def _ref_encode(v, books):
+    w = len(books[0][0])
+    code = []
+    for s, book in enumerate(books):
+        sub = v[s * w : (s + 1) * w]
+        d = [_fold_dot(c, c) - 2.0 * _fold_dot(sub, c) for c in book]
+        code.append(d.index(min(d)))
+    return code
+
+
+@pytest.mark.parametrize("kernel", ["expr", "arrow"])
+@pytest.mark.parametrize("op", ["cell_assign", "pq_encode"])
+@pytest.mark.parametrize("case", list(_BAD))
+def test_malformed_vector_answer_is_kernel_independent(spark, op, kernel, case):
+    """A bad row gets one answer whichever kernel runs: a NULL vector,
+    a NULL or NaN element among the first dim (m·subdim for the encode)
+    or fewer elements raises a named error; elements past that are
+    ignored; a zero norm raises in the assignment, while its L2 encode
+    is a valid code."""
+    rng = np.random.default_rng(4)
+    cents = rng.normal(size=(5, _W)).tolist()
+    books = rng.normal(size=(2, 6, _W // 2)).tolist()
+    # the well-formed head of a long vector is centroid 3 and codeword
+    # (4, 4), away from the 0 a blanked cosine or distance falls to
+    cents[3] = list(_GOOD)
+    books[0][4], books[1][4] = _GOOD[:4], _GOOD[4:]
+    rows = [(i, rng.normal(size=_W).tolist()) for i in range(3)] + [(9, _BAD[case])]
+    df = local_frame(spark, rows, "vec_id bigint, v array<double>")
+    if op == "cell_assign":
+        out = df.withColumn("__n", S.norm("v")).select(
+            "vec_id", S.cell_assign("v", "__n", cents, _W, kernel=kernel).alias("a")
+        )
+        ref = lambda v: _ref_assign(v, cents)  # noqa: E731
+    else:
+        out = Q.pq_encode(df, books, vec_col="v", code_col="a", kernel=kernel).select(
+            "vec_id", "a"
+        )
+        ref = lambda v: _ref_encode(v, books)  # noqa: E731
+    if case in ("null vector", "null element", "nan element", "too few elements") or (
+        case == "zero norm" and op == "cell_assign"
+    ):
+        named = "zero-norm vector" if case == "zero norm" else "malformed vector"
+        with pytest.raises(Exception, match=re.escape(f"{op}: {named}")):
+            out.collect()
+        return
+    got = {r["vec_id"]: r["a"] for r in out.collect()}
+    assert got == {i: ref(v) for i, v in rows}
+    if case == "more than dim":
+        assert got[9] == (3 if op == "cell_assign" else [4, 4])

@@ -35,6 +35,10 @@ module gives the index a real lifecycle:
   centroids no longer fit the data) and the cell-occupancy skew
   against uniform (hot-cell fraction ⇒ probe cost concentrates), and
   says WHEN to pay the rebuild.
+- **Probes serve one committed version**: a probe takes the parameters
+  and the file list from ONE manifest read, and a version probed
+  before is served from the driver-resident store
+  (:class:`_ResidentStore`) without a scan.
 
 Invariant (test-pinned, tests/test_ann_index.py): because append
 freezes the trained parameters, build(A) + append(B) produces the
@@ -87,12 +91,21 @@ from __future__ import annotations
 import json
 import math
 import os
+import threading
+from collections import OrderedDict
+from functools import partial
+from typing import TYPE_CHECKING, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import txlog
 from ..session import local_frame
+
+if TYPE_CHECKING:
+    from pyspark.sql.types import StructField
+
+    from .quantization import _HeldIndex
 
 _DATA_DIR = "index"
 _META_RETRIES = 4  # redo attempts when a verb loses the parameter race
@@ -127,17 +140,21 @@ def _load_meta_pointed(path: str) -> tuple[dict, str | None]:
     codebook per branch, a geometry the package no longer serves)
     raises ValueError: read as a shared-codebook index it would probe
     and append under the wrong cell ids."""
+    return _meta_of(path, txlog.read_manifest(_data_path(path)))
+
+
+def _meta_of(path: str, manifest: dict) -> tuple[dict, str | None]:
+    """:func:`_load_meta_pointed` resolved through an already-read
+    ``manifest``, so a caller that also takes the file list from it
+    sees parameters and files of one commit."""
     root = _data_path(path)
-    meta_path = txlog.current_meta_file(root)
-    pointer = None
-    if meta_path is None:
+    pointer = manifest["meta_file"]
+    if pointer is None:
         meta_path = os.path.join(root, "_meta.json")
-        if txlog.read_manifest(root)["version"] < 0 or not os.path.exists(
-            meta_path
-        ):
+        if manifest["version"] < 0 or not os.path.exists(meta_path):
             raise FileNotFoundError(f"no committed index at {path!r}")
     else:
-        pointer = os.path.relpath(meta_path, root)
+        meta_path = os.path.join(root, pointer)
     with open(meta_path) as fh:
         meta = json.load(fh)
     if meta.get("per_branch"):
@@ -636,7 +653,11 @@ def read_index(spark: SparkSession, path: str) -> DataFrame:
     the same encoder output) plus the ``cell int`` partition column,
     so the read starts no schema-inference job; an empty index is a
     local relation of the same schema."""
-    files = txlog.committed_files(_data_path(path))
+    return _read_files(spark, path, txlog.committed_files(_data_path(path)))
+
+
+def _read_files(spark: SparkSession, path: str, files: list[str]) -> DataFrame:
+    """:func:`read_index` over an already-read committed file list."""
     if not files:
         return local_frame(
             spark, [], "neighbor_id bigint, cell bigint, pq_code array<bigint>"
@@ -1021,6 +1042,142 @@ def retrain_criterion(
     }
 
 
+def _footer_rows(files: list[str]) -> int:
+    """Committed rows of the index, summed from the files' parquet
+    footers on the driver — what a count of :func:`read_index` returns,
+    without its job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
+class _Snapshot(NamedTuple):
+    """One committed version of an index as probes serve it: its
+    sidecar ``meta``, its committed ``rows`` (:func:`_footer_rows`),
+    and, when ``held``, those rows on the driver — ``cells`` and
+    ``neighbor_field`` as ``quantization._HeldIndex`` carries them."""
+
+    meta: dict
+    rows: int
+    held: bool
+    cells: dict | None = None
+    neighbor_field: StructField | None = None
+
+    @property
+    def scalars(self) -> int:
+        """Driver memory held, in ``_PROBE_COLLECT_SCALARS`` units."""
+        return self.rows * self.meta["dim"] if self.held else 0
+
+
+class _ResidentStore:
+    """The process-wide store of index snapshots that probes serve
+    from, so a warm probe reads no sidecar, builds no parquet frame and
+    scans nothing.
+
+    Keyed by ``(realpath of the data root, manifest version, committed
+    file list, sidecar pointer)``, all from the probe's one manifest
+    read: every commit (append, compaction, split, rebuild, a new build
+    at the same path) changes the key, so a probe never serves an older
+    version's rows, and a new entry drops the older versions of its
+    root. The held rows of all entries together stay within
+    ``quantization._PROBE_COLLECT_SCALARS``, checked on every lookup:
+    past it the least recently used entries go. One fill runs at a
+    time, so concurrent probes of one cold index fill it once."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()  # guards _snaps
+        self._fill_lock = threading.Lock()
+        self._snaps: OrderedDict[tuple, _Snapshot] = OrderedDict()
+
+    def get(self, key: tuple, fill: Callable[[], _Snapshot]) -> _Snapshot:
+        snap = self._lookup(key)
+        if snap is not None:
+            return snap
+        with self._fill_lock:
+            snap = self._lookup(key)
+            if snap is None:
+                snap = fill()
+                with self._lock:
+                    for old in [k for k in self._snaps if k[0] == key[0]]:
+                        del self._snaps[old]
+                    self._snaps[key] = snap
+                    self._trim()
+        return snap
+
+    def clear(self) -> None:
+        with self._lock:
+            self._snaps.clear()
+
+    def _lookup(self, key: tuple) -> _Snapshot | None:
+        from . import quantization as Q
+
+        with self._lock:
+            self._trim()
+            snap = self._snaps.get(key)
+            if snap is None or (
+                # the budget grew past an index that did not fit
+                not snap.held
+                and snap.rows * snap.meta["dim"] <= Q._PROBE_COLLECT_SCALARS
+            ):
+                return None
+            self._snaps.move_to_end(key)
+            return snap
+
+    def _trim(self) -> None:
+        from . import quantization as Q
+
+        while sum(s.scalars for s in self._snaps.values()) > Q._PROBE_COLLECT_SCALARS:
+            self._snaps.popitem(last=False)
+
+
+_RESIDENT = _ResidentStore()
+
+
+def _fill(
+    spark: SparkSession, path: str, manifest: dict, files: list[str]
+) -> _Snapshot:
+    """The snapshot of one committed version: the sidecar, the footer
+    row count and, when rows × dim fits ``_PROBE_COLLECT_SCALARS``, the
+    whole index collected in one job and validated once
+    (``quantization._cell_arrays``)."""
+    from . import quantization as Q
+
+    meta = _meta_of(path, manifest)[0]
+    rows = _footer_rows(files)
+    if rows * meta["dim"] > Q._PROBE_COLLECT_SCALARS:
+        return _Snapshot(meta, rows, held=False)
+    frame = _read_files(spark, path, files)
+    books = meta["codebooks"]
+    cells = Q._cell_arrays(frame.collect(), len(books), len(books[0]))
+    return _Snapshot(meta, rows, True, cells, frame.schema["neighbor_id"])
+
+
+def _open_index(
+    spark: SparkSession, path: str
+) -> tuple[_Snapshot, DataFrame | _HeldIndex]:
+    """``(snapshot, index)`` for one probe, from ONE manifest read: the
+    sidecar parameters and the committed files both come from it, so a
+    commit landing mid-probe cannot pair one version's parameters with
+    another's codes. ``index`` is a ``quantization._HeldIndex`` when
+    the snapshot is held, else the index frame over those files."""
+    from .quantization import _HeldIndex
+
+    root = _data_path(path)
+    manifest = txlog.read_manifest(root)
+    files = [os.path.join(root, f) for f in manifest["files"]]
+    key = (
+        os.path.realpath(root),
+        manifest["version"],
+        tuple(manifest["files"]),
+        manifest["meta_file"],
+    )
+    snap = _RESIDENT.get(key, partial(_fill, spark, path, manifest, files))
+    frame = partial(_read_files, spark, path, files)
+    if not snap.held:
+        return snap, frame()
+    return snap, _HeldIndex(snap.cells, snap.neighbor_field, frame)
+
+
 def probe_index(
     spark: SparkSession,
     path: str,
@@ -1034,19 +1191,40 @@ def probe_index(
     (``quantization.imi_topk`` — ``n_probe`` applies per level there,
     probing n_probe² composite cells). Both pick their (level-1) cells
     with the one flat selector, ``quantization._probe_cells``, and
-    share one scorer, ``quantization._score_cells``: the probed cells'
-    slice is read from their partitions alone and, within the collect
-    budget, decoded and ranked on the driver, so a flat probe is one
-    job over a local query set and two over an RDD-backed one, and the
-    returned frame is a local relation. A sidecar of a per-branch
-    index raises ValueError (:func:`_load_meta_pointed`)."""
+    share one scorer, ``quantization._score_cells``, which decodes and
+    ranks the probed cells on the driver within the collect budget and
+    returns a local relation.
+
+    The sidecar and the files come from one manifest read
+    (:func:`_open_index`). The first probe of a committed version
+    collects the whole index in one job into the resident store
+    (:class:`_ResidentStore`) when its rows × dim fit
+    ``quantization._PROBE_COLLECT_SCALARS``; later probes of that
+    version score from the store and scan nothing. So a warm flat
+    probe starts no job over a local query set and one (the query
+    collect) over an RDD-backed one; a cold probe starts one more, the
+    fill, as does every probe of an index too large to hold, whose
+    probed slice is collected instead. A two-level probe adds the jobs
+    of its level-2 ranking window. A sidecar of a per-branch index
+    raises ValueError (:func:`_load_meta_pointed`)."""
+    return _probe(*_open_index(spark, path), queries, k, n_probe)
+
+
+def _probe(
+    snap: _Snapshot,
+    index: DataFrame | _HeldIndex,
+    queries: DataFrame,
+    k: int,
+    n_probe: int,
+) -> DataFrame:
+    """:func:`probe_index` over an opened snapshot."""
     from .quantization import imi_topk, ivfpq_topk
 
-    meta = load_index_meta(path)
+    meta = snap.meta
     if meta.get("quantizer") == "imi":
         return imi_topk(
             queries,
-            read_index(spark, path),
+            index,
             meta["centroids"],
             meta["centroids2"],
             meta["codebooks"],
@@ -1060,7 +1238,7 @@ def probe_index(
         )
     return ivfpq_topk(
         queries,
-        read_index(spark, path),
+        index,
         meta["centroids"],
         meta["codebooks"],
         meta["dim"],
@@ -1082,18 +1260,20 @@ def probe_index_rerank(
 ) -> DataFrame:
     """The served mode: ADC shortlist over the persisted index → exact
     cosine re-rank against the raw vectors (volume-derived shortlist
-    depth — ``quantization.derived_shortlist`` — unless pinned). This
-    is the path the ≥0.8 recall floor is guaranteed through after
-    appends (tests/test_ann_index.py)."""
+    depth — ``quantization.derived_shortlist`` of the committed row
+    count, read from the files' footers without a job — unless
+    pinned). The shortlist probe serves the same snapshot as
+    :func:`probe_index`. This is the path the ≥0.8 recall floor is
+    guaranteed through after appends (tests/test_ann_index.py)."""
     from .quantization import derived_shortlist, _exact_rerank
 
-    meta = load_index_meta(path)
-    idx = read_index(spark, path)
+    snap, index = _open_index(spark, path)
+    meta = snap.meta
     if shortlist is None:
-        shortlist = derived_shortlist(idx.count())
-    cand = probe_index(
-        spark, path, queries, k=shortlist, n_probe=n_probe
-    ).select("query_id", "neighbor_id")
+        shortlist = derived_shortlist(snap.rows)
+    cand = _probe(snap, index, queries, shortlist, n_probe).select(
+        "query_id", "neighbor_id"
+    )
     return _exact_rerank(
         queries,
         cand,

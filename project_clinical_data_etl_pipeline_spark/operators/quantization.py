@@ -22,13 +22,15 @@ Scale shapes, all reusing the proven kmeans/classifier patterns:
   ``_EXPR_KERNEL_MAX_SCALARS``) — no join, no Exchange.
 - **Reconstruction/scoring** of an IVF probe reads only the probed
   cells' (id, cell, pq_code) slice. Within the driver-collect budget
-  the slice is collected in one job and decoded, scored and ranked in
-  numpy with the engine's arithmetic (:func:`_score_cells`), so the
-  result is a local relation. Past the budget, and for
-  :func:`pq_topk`, the one Spark decode (:func:`pq_reconstruct`, a
-  lookup into one broadcast codebook row) feeds the one cosine top-k
-  tail (``similarity._rank_topk``) — the plan shape of brute-force
-  top-k, with a scan side of (id, pq_code).
+  the slice is collected in one job — or handed over by
+  ``ann_index``'s resident store, which holds a persisted index's
+  committed rows on the driver between probes — and decoded, scored
+  and ranked in numpy with the engine's arithmetic
+  (:func:`_score_cells`), so the result is a local relation. Past the
+  budget, and for :func:`pq_topk`, the one Spark decode
+  (:func:`pq_reconstruct`, a lookup into one broadcast codebook row)
+  feeds the one cosine top-k tail (``similarity._rank_topk``) — the
+  plan shape of brute-force top-k, with a scan side of (id, pq_code).
 
 Determinism mirrors ``similarity.kmeans_centroids``: DECIMAL-exact
 means, optional per-iteration rounding, min-id seeds, lowest-id
@@ -40,9 +42,12 @@ from __future__ import annotations
 
 import math
 import os
+from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..session import local_frame
 from .dedup import fan_out
@@ -71,15 +76,19 @@ from .similarity import (
 #: driver: the query rows (|queries|·n_probe·dim, the probe rows they
 #: become), the probed index slice (slice rows × dim once decoded),
 #: and the scoring work (Σ over probe rows of the probed cell's slice
-#: rows × dim). Bounded control data under the small-queries contract,
-#: but a contract must be ENFORCED, not assumed. Default 8M scalars ≈
-#: 64 MB; env-tunable. Past the cap on the query rows the probe falls
-#: back to the Spark cell selection and the lazy-checkpoint plan
-#: (distinct-cell collect for pruning — always tiny, bounded by index
-#: geometry — and the checkpointed frame as the broadcast side), which
-#: never materializes query vectors driver-side; past it on the slice
-#: or the scoring work, the Spark scoring tail of :func:`_score_cells`
-#: runs.
+#: rows × dim). It also bounds ``ann_index``'s resident store: the
+#: committed rows × dim of all the persisted indexes it holds on the
+#: driver between probes, together, checked on every probe. Bounded
+#: control data under the small-queries contract, but a contract must
+#: be ENFORCED, not assumed. Default 8M scalars ≈ 64 MB; env-tunable.
+#: Past the cap on the query rows the probe falls back to the Spark
+#: cell selection and the lazy-checkpoint plan (distinct-cell collect
+#: for pruning — always tiny, bounded by index geometry — and the
+#: checkpointed frame as the broadcast side), which never materializes
+#: query vectors driver-side; past it on the slice or the scoring
+#: work, the Spark scoring tail of :func:`_score_cells` runs; past it
+#: on an index's committed rows, the index is not held and each probe
+#: collects its slice.
 _PROBE_COLLECT_SCALARS = int(
     os.environ.get("SPARK_GRAFT_PROBE_COLLECT_SCALARS", str(8_000_000))
 )
@@ -550,18 +559,20 @@ def ivfpq_topk(
     volume ~ n_probe/n_centroids of the corpus, each candidate read as
     m codes. Probe cells are picked as similarity.ivf_topk ranks them
     (cosine desc, centroid id asc) by :func:`_probe_cells`, and the
-    index is pruned to them before anything is decoded. Within the
-    collect budget both steps run on the driver — one bounded collect
-    of the query rows, one of the (neighbor_id, cell, pq_code) slice —
-    and the result is a local relation, so collecting it starts no
-    job; past the budget, or on an odd input, :func:`_score_cells`
-    decodes and ranks in a Spark plan. Returns (query_id, neighbor_id,
-    cosine, rank) — cosine of query vs reconstruction.
+    index is pruned to them before anything is decoded. ``index`` is
+    the (neighbor_id, cell, pq_code) frame, or a :class:`_HeldIndex`,
+    a persisted index's rows already on the driver. Within the collect
+    budget both steps run on the driver — one bounded collect of the
+    query rows (no job over a local relation), and one of the probed
+    slice unless the index is held — and the result is a local
+    relation, so collecting it starts no job: a probe of a held index
+    over a local query set starts none at all. Past the budget, or on
+    an odd input, :func:`_score_cells` decodes and ranks in a Spark
+    plan. Returns (query_id, neighbor_id, cosine, rank) — cosine of
+    query vs reconstruction.
     """
-    cells, probes, rows = _probe_cells(
-        queries, centroids, dim, n_probe, id_col, vec_col
-    )
-    return _score_cells(cells, probes, rows, index, codebooks, dim, k)
+    probes = _probe_cells(queries, centroids, dim, n_probe, id_col, vec_col)
+    return _score_cells(probes, index, codebooks, dim, k)
 
 
 def _pick_cells_local(
@@ -627,6 +638,28 @@ def _pick_cells_local(
     ]
 
 
+@dataclass
+class _Probes:
+    """A probe's cell selection: ``cells``, the sorted probed-cell ids
+    (the scan's IN-list, which prunes partitions/buckets), and the
+    (query_id, __qv, __qn, cell) probe ``rows`` when the driver holds
+    them, else None. :meth:`frame` is the probe frame a Spark plan
+    joins: a local relation of the rows, built on first use only, since
+    the driver scorer reads the rows; or, when the driver holds no
+    rows, the checkpointed Spark selection given as ``built``."""
+
+    cells: list
+    rows: list | None
+    schema: StructType
+    spark: SparkSession
+    built: DataFrame | None = None
+
+    def frame(self) -> DataFrame:
+        if self.built is None:
+            self.built = local_frame(self.spark, self.rows, self.schema)
+        return self.built
+
+
 def _probe_cells(
     queries: DataFrame,
     centroids: list[list[float]],
@@ -634,25 +667,21 @@ def _probe_cells(
     n_probe: int,
     id_col: str,
     vec_col: str,
-) -> tuple[list, DataFrame, list | None]:
-    """Pick each query's ``n_probe`` nearest cells; return ``(cells,
-    probes, rows)`` — the sorted probed-cell ids (the scan's IN-list,
-    which prunes partitions/buckets), the (query_id, __qv, __qn, cell)
-    probe frame, and its rows when the driver holds them (None when
-    the frame is checkpointed). The one cosine cell selector of both
-    geometries: the flat IVF probe's cells, and the two-level probe's
-    level-1 branches (:func:`imi_probe_cells`).
+) -> _Probes:
+    """Pick each query's ``n_probe`` nearest cells (:class:`_Probes`).
+    The one cosine cell selector of both geometries: the flat IVF
+    probe's cells, and the two-level probe's level-1 branches
+    (:func:`imi_probe_cells`).
 
-    Fast path: the query rows are collected ONCE, in one job, under
-    the ``_PROBE_COLLECT_SCALARS`` budget (|queries|·n_probe·dim
-    scalars, the size of the probe rows the driver then holds), the
-    cells are picked in numpy (:func:`_pick_cells_local`,
-    bit-identical to the Spark selection), and the probe frame is a
-    local relation — no crossJoin, shuffle window or probe-frame
-    collect. Over the budget, or on a row the driver path does not
-    reproduce exactly, the Spark selection
-    (``similarity._spark_probe_cells``) runs and :func:`_collect_probes`
-    collects or checkpoints its result."""
+    Fast path: the query rows are collected ONCE, in one job (none over
+    a local relation), under the ``_PROBE_COLLECT_SCALARS`` budget
+    (|queries|·n_probe·dim scalars, the size of the probe rows the
+    driver then holds), and the cells are picked in numpy
+    (:func:`_pick_cells_local`, bit-identical to the Spark selection)
+    — no crossJoin, shuffle window or probe-frame collect. Over the
+    budget, or on a row the driver path does not reproduce exactly,
+    the Spark selection (``similarity._spark_probe_cells``) runs and
+    :func:`_collect_probes` collects or checkpoints its result."""
     q = _query_frame(queries, dim, id_col, vec_col)
     per_query = max(dim, 1) * max(n_probe, 1)
     cap_rows = max(1, _PROBE_COLLECT_SCALARS // per_query)
@@ -663,33 +692,73 @@ def _probe_cells(
     if picked is None:
         cent = _centroid_df(q.sparkSession, centroids)
         return _collect_probes(_spark_probe_cells(q, cent, dim, n_probe), dim)
-    from pyspark.sql.types import LongType, StructField, StructType
-
     schema = StructType(q.schema.fields + [StructField("cell", LongType())])
     cells = sorted({p[3] for p in picked})
-    return cells, local_frame(q.sparkSession, picked, schema), picked
+    return _Probes(cells, picked, schema, q.sparkSession)
 
 
-def _collect_probes(
-    probes: DataFrame, dim: int
-) -> tuple[list, DataFrame, list | None]:
+def _collect_probes(probes: DataFrame, dim: int) -> _Probes:
     """Collect a Spark-built (query_id, __qv, __qn, cell) probe frame
-    onto the driver if it fits the scalar budget; return ``(cells,
-    probes, rows)`` as :func:`_probe_cells` does. Fast path: one
-    execution, the frame rebuilt from the collected rows as a local
-    relation. Over budget: a lazy localCheckpoint, so the probe
-    construction still executes once, the cells from a distinct-cell
-    collect, and no rows."""
+    onto the driver if it fits the scalar budget (:class:`_Probes`).
+    Fast path: one execution, the rows held. Over budget: a lazy
+    localCheckpoint, so the probe construction still executes once,
+    the cells from a distinct-cell collect, and no rows."""
+    spark = probes.sparkSession
     cap_rows = max(1, _PROBE_COLLECT_SCALARS // max(dim, 1))
     rows = probes.limit(cap_rows + 1).collect()
     if len(rows) <= cap_rows:
         cells = sorted({r["cell"] for r in rows})
-        return cells, local_frame(probes.sparkSession, rows, probes.schema), rows
+        return _Probes(cells, rows, probes.schema, spark)
     ck = probes.localCheckpoint(eager=False)
     cells = sorted(
         r["cell"] for r in ck.select("cell").distinct().collect()
     )
-    return cells, ck, None
+    return _Probes(cells, None, ck.schema, spark, ck)
+
+
+class _HeldIndex(NamedTuple):
+    """A persisted index's committed rows held on the driver, as the
+    probe scorer reads them (``ann_index``'s resident store builds it
+    from one collect). ``cells`` maps cell id → the (neighbor ids,
+    codes) arrays of :func:`_cell_arrays`, or is None when some row's
+    id or code is not an integer, which only the Spark tail scores;
+    ``neighbor_field`` is the index frame's neighbor_id field, the
+    result schema's; ``frame`` builds the index frame, for the Spark
+    tail only."""
+
+    cells: dict | None
+    neighbor_field: StructField
+    frame: Callable[[], DataFrame]
+
+
+def _cell_arrays(slice_rows: list, m: int, ks: int) -> dict | None:
+    """Index rows (neighbor_id, cell, pq_code) → {cell: (neighbor ids
+    int64[n], codes int64[n, m])}, keeping exactly the rows the Spark
+    tail can rank: a row with a null, short or out-of-range code is
+    dropped (the :func:`pq_reconstruct` guard) and so is a NULL id
+    (``_rank_topk``'s filter); codes past the first ``m`` are ignored.
+    None — the caller runs the Spark tail — on a non-integer id or
+    code."""
+    import numpy as np
+
+    ids: dict = {}
+    codes: dict = {}
+    for nid, cell, code in slice_rows:
+        if code is None or len(code) < m:
+            continue
+        head = code[:m]
+        if any(c is not None and type(c) is not int for c in head):
+            return None
+        if nid is None or any(c is None or not 0 <= c < ks for c in head):
+            continue
+        if type(nid) is not int:
+            return None
+        ids.setdefault(cell, []).append(nid)
+        codes.setdefault(cell, []).append(head)
+    return {
+        c: (np.array(ids[c], dtype=np.int64), np.array(codes[c], dtype=np.int64))
+        for c in ids
+    }
 
 
 def _score_local(
@@ -700,31 +769,47 @@ def _score_local(
     k: int,
     offsets: list[list[float]] | None = None,
 ) -> list[tuple] | None:
+    """:func:`_score_arrays` over collected slice rows (neighbor_id,
+    cell, pq_code), validated by :func:`_cell_arrays`."""
+    ks = len(codebooks[0]) if codebooks else 0
+    by_cell = _cell_arrays(slice_rows, len(codebooks), ks)
+    if by_cell is None:
+        return None
+    return _score_arrays(probe_rows, by_cell, codebooks, dim, k, offsets)
+
+
+def _score_arrays(
+    probe_rows: list,
+    by_cell: dict,
+    codebooks: list[list[list[float]]],
+    dim: int,
+    k: int,
+    offsets: list[list[float]] | None = None,
+) -> list[tuple] | None:
     """Driver-side twin of the Spark tail of :func:`_score_cells` —
     :func:`pq_reconstruct` feeding ``similarity._rank_topk``, the
     result contract of every ANN answer — over the collected probe
-    rows (query_id, __qv, __qn, cell) and slice rows (neighbor_id,
-    cell, pq_code): the (query_id, neighbor_id, cosine, rank) rows,
-    ordered by query id and rank, or None when the input is outside
-    what this path reproduces bit-for-bit.
+    rows (query_id, __qv, __qn, cell) and the probed cells' rows as
+    :func:`_cell_arrays` returns them: the (query_id, neighbor_id,
+    cosine, rank) rows, ordered by query id and rank, or None when the
+    input is outside what this path reproduces bit-for-bit.
 
-    Same rows as the Spark plan: a row with a null, short or
-    out-of-range code is dropped (the :func:`pq_reconstruct` guard);
-    the decoded vector is the codebook lookup, plus ``offsets[cell]``
-    in residual mode; a self-match, or a pair with a NULL id, is
-    dropped (``_rank_topk``'s filter); duplicate probe rows repeat their candidates and
-    duplicate query ids rank as one, as the join and the window do.
-    Same arithmetic: doubles, 0.0-seeded left-to-right folds over
-    1..dim for the dot and the norm (never ``np.dot``, which sums
-    pairwise), ``dot / (__qn · ‖c‖)``; order per query (cosine desc
-    with −0.0 = 0.0, neighbor id asc), ranks 1..k. None — the caller
-    runs the Spark tail — when the pair work (Σ over probe rows of
-    the cell's slice rows × dim) is over ``_PROBE_COLLECT_SCALARS``,
-    on a non-integer id or code, a NULL, short or NULL-element query
-    vector, ragged codebooks, a decoded vector shorter than ``dim``,
-    offsets of another length than the decoded vector, or a
-    non-finite cosine (a zero or NaN norm: under ANSI arithmetic the
-    Spark tail raises DIVIDE_BY_ZERO, and the fallback keeps that)."""
+    Same rows as the Spark plan: the decoded vector is the codebook
+    lookup, plus ``offsets[cell]`` in residual mode; a self-match, or
+    a pair with a NULL query id, is dropped (``_rank_topk``'s filter);
+    duplicate probe rows repeat their candidates and duplicate query
+    ids rank as one, as the join and the window do. Same arithmetic:
+    doubles, 0.0-seeded left-to-right folds over 1..dim for the dot
+    and the norm (never ``np.dot``, which sums pairwise), ``dot /
+    (__qn · ‖c‖)``; order per query (cosine desc with −0.0 = 0.0,
+    neighbor id asc), ranks 1..k. None — the caller runs the Spark
+    tail — when the pair work (Σ over probe rows of the cell's rows ×
+    dim) is over ``_PROBE_COLLECT_SCALARS``, on a non-integer query
+    id, a NULL, short or NULL-element query vector, ragged codebooks,
+    a decoded vector shorter than ``dim``, offsets of another length
+    than the decoded vector, or a non-finite cosine (a zero or NaN
+    norm: under ANSI arithmetic the Spark tail raises DIVIDE_BY_ZERO,
+    and the fallback keeps that)."""
     import numpy as np
 
     if k <= 0:
@@ -740,20 +825,6 @@ def _score_local(
     if offs is not None and (offs.ndim != 2 or offs.shape[1] != m * w):
         return None
 
-    nids, cells, codes = [], [], []
-    for nid, cell, code in slice_rows:
-        if code is None or len(code) < m:
-            continue
-        head = code[:m]
-        if any(c is not None and type(c) is not int for c in head):
-            return None
-        if nid is None or any(c is None or not 0 <= c < ks for c in head):
-            continue
-        if type(nid) is not int:
-            return None
-        nids.append(nid)
-        cells.append(cell)
-        codes.append(head)
     probes = []
     for r in probe_rows:
         qid, qv, qn = r[0], r[1], r[2]
@@ -769,29 +840,35 @@ def _score_local(
             return None
         probes.append(r)
 
-    by_cell: dict = {}
-    for i, c in enumerate(cells):
-        by_cell.setdefault(c, []).append(i)
-    if sum(len(by_cell.get(r[3], ())) for r in probes) * dim > _PROBE_COLLECT_SCALARS:
+    if sum(len(by_cell[r[3]][0]) for r in probes if r[3] in by_cell) * dim > _PROBE_COLLECT_SCALARS:
         return None
     if offs is not None and any(not 0 <= c < len(offs) for c in by_cell):
         return None
+    if not any(r[3] in by_cell for r in probes):
+        return []
 
-    nid_arr = np.array(nids, dtype=np.int64)
+    cells = list(by_cell)
+    nid_arr = np.concatenate([by_cell[c][0] for c in cells])
+    code_arr = np.concatenate([by_cell[c][1] for c in cells])
+    sizes = [len(by_cell[c][0]) for c in cells]
+    ends = np.cumsum(sizes)
+    span = {c: (int(e) - n, int(e)) for c, n, e in zip(cells, sizes, ends)}
     pp, pc = [], []
     for i, r in enumerate(probes):
-        idx = np.array(by_cell.get(r[3], ()), dtype=np.int64)
+        if r[3] not in span:
+            continue
+        idx = np.arange(*span[r[3]], dtype=np.int64)
         idx = idx[nid_arr[idx] != r[0]]
         pp.append(np.full(len(idx), i, dtype=np.int64))
         pc.append(idx)
-    pp = np.concatenate(pp) if pp else np.zeros(0, dtype=np.int64)
-    pc = np.concatenate(pc) if pc else np.zeros(0, dtype=np.int64)
+    pp = np.concatenate(pp)
+    pc = np.concatenate(pc)
     if not len(pp):
         return []
 
-    dec = books[np.arange(m), np.array(codes, dtype=np.int64)].reshape(len(codes), m * w)
+    dec = books[np.arange(m), code_arr].reshape(len(code_arr), m * w)
     if offs is not None:
-        dec = offs[np.array(cells, dtype=np.int64)] + dec
+        dec = offs[np.repeat(np.array(cells, dtype=np.int64), sizes)] + dec
     cv = np.ascontiguousarray(dec[:, :dim].T)  # (dim, slice rows)
     qv = np.ascontiguousarray(
         np.array([r[1][:dim] for r in probes], dtype=np.float64).T
@@ -829,10 +906,8 @@ def _score_local(
 
 
 def _score_cells(
-    cells: list,
-    probes: DataFrame,
-    rows: list | None,
-    index: DataFrame,
+    probes: _Probes,
+    index: DataFrame | _HeldIndex,
     codebooks: list[list[list[float]]],
     dim: int,
     k: int,
@@ -845,52 +920,58 @@ def _score_cells(
     neighbor_id, cosine, rank). The reconstruction is the PQ decode
     of the ``codebooks``, plus ``offsets[cell]`` (the coarse
     centroids) in residual mode. The index is partition/bucket-pruned
-    to ``cells`` FIRST, so only the probed slice is read.
+    to the probed cells FIRST, so only the probed slice is read.
 
-    Fast path, when the driver holds the probe ``rows``: the slice
-    (neighbor_id, cell, pq_code) is collected once — one job while its
-    partitions fit ``spark.sql.limit.initialNumPartitions`` (set by
-    ``session.tune``) — under ``_PROBE_COLLECT_SCALARS`` (slice rows
-    × dim), scored in numpy
-    (:func:`_score_local`, bit-identical to the Spark tail) and
-    returned as a local relation with the Spark tail's schema —
-    collecting it starts no job. Otherwise, over the budget, or on
-    an input the driver path does not reproduce exactly, the Spark
-    tail runs: the slice is decoded (:func:`pq_reconstruct`), joined
-    to the broadcast ``probes`` on cell, and ranked by
+    Fast path, when the driver holds the probe rows: the slice is
+    scored in numpy (:func:`_score_arrays`, bit-identical to the Spark
+    tail) and returned as a local relation with the Spark tail's
+    schema — collecting it starts no job. A :class:`_HeldIndex` hands
+    over its probed cells' arrays and starts no job; from an index
+    frame the slice (neighbor_id, cell, pq_code) is collected once —
+    one job while its partitions fit
+    ``spark.sql.limit.initialNumPartitions`` (set by ``session.tune``)
+    — under ``_PROBE_COLLECT_SCALARS`` (slice rows × dim). Otherwise,
+    over the budget, or on an input the driver path does not
+    reproduce exactly, the Spark tail runs: the slice is decoded
+    (:func:`pq_reconstruct`; in residual mode the centroid table rides
+    as one broadcast one-row frame, as the codebooks do), joined to
+    the broadcast probe frame on cell, and ranked by
     ``similarity._rank_topk``."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    scanned = _probed_slice(index, cells)
-    if rows is not None:
+    held = index if isinstance(index, _HeldIndex) else None
+    scanned = None if held else _probed_slice(index, probes.cells)
+    top = None
+    if probes.rows is not None and held is None:
         cap_rows = max(1, _PROBE_COLLECT_SCALARS // max(dim, 1))
         slice_rows = scanned.limit(cap_rows + 1).collect()
-        top = None
         if len(slice_rows) <= cap_rows:
-            top = _score_local(rows, slice_rows, codebooks, dim, k, offsets)
-        if top is not None:
-            schema = StructType([
-                probes.schema["query_id"],
-                scanned.schema["neighbor_id"],
-                StructField("cosine", DoubleType()),
-                StructField("rank", LongType(), False),
-            ])
-            return local_frame(index.sparkSession, top, schema)
+            top = _score_local(probes.rows, slice_rows, codebooks, dim, k, offsets)
+    elif probes.rows is not None and held.cells is not None:
+        probed = {c: held.cells[c] for c in probes.cells if c in held.cells}
+        top = _score_arrays(probes.rows, probed, codebooks, dim, k, offsets)
+    if top is not None:
+        schema = StructType([
+            probes.schema["query_id"],
+            held.neighbor_field if held else scanned.schema["neighbor_id"],
+            StructField("cosine", DoubleType()),
+            StructField("rank", LongType(), False),
+        ])
+        return local_frame(probes.spark, top, schema)
 
+    if scanned is None:
+        scanned = _probed_slice(held.frame(), probes.cells)
     if offsets is None:
         decoded = pq_reconstruct(scanned, codebooks, out_col="__cv")
     else:
-        recon = (
-            f"zip_with({_centroid_lookup_expr(offsets)}, __dec, "
-            f"(a, b) -> a + b)"
-        )
         decoded = (
             pq_reconstruct(scanned, codebooks, out_col="__dec")
-            .withColumn("__cv", F.expr(recon))
-            .drop("__dec")
+            .crossJoin(F.broadcast(_centroid_table(probes.spark, offsets)))
+            .withColumn(
+                "__cv", F.expr(f"zip_with({_CELL_CENTROID}, __dec, (a, b) -> a + b)")
+            )
+            .drop("__dec", "__offs")
         )
     pairs = decoded.withColumn("__cn", norm("__cv", dim)).join(
-        F.broadcast(probes), on="cell"
+        F.broadcast(probes.frame()), on="cell"
     )
     return _rank_topk(pairs, k, dim)
 
@@ -915,6 +996,27 @@ def _centroid_lookup_expr(
     return f"element_at(array({arrays}), CAST({cell_col} + 1 AS INT))"
 
 
+#: The centroid of each row's cell, looked up in :func:`_centroid_table`.
+_CELL_CENTROID = "element_at(__offs, CAST(cell + 1 AS INT))"
+
+
+def _centroid_table(spark: SparkSession, centroids: list[list[float]]) -> DataFrame:
+    """The centroid table as ONE one-row ``__offs array<array<double>>``
+    local frame, cross-joined broadcast onto rows that look up their
+    cell's centroid (``_CELL_CENTROID``), as :func:`pq_reconstruct`
+    attaches its codebooks. The lookup stays one small expression
+    wherever the optimizer copies it — into each unrolled term of a
+    norm or dot, or into a filter pushed down through it — where an
+    inlined literal table copies n_centroids·dim literals each time (a
+    32.8 M-character plan for a dim-64 residual probe over a
+    lazily-encoded index, which ran out of driver heap)."""
+    return local_frame(
+        spark,
+        [([[float(x) for x in c] for c in centroids],)],
+        "__offs array<array<double>>",
+    )
+
+
 def ivf_residuals(
     corpus: DataFrame,
     centroids: list[list[float]],
@@ -926,19 +1028,17 @@ def ivf_residuals(
     centroid — what residual-mode PQ codebooks train on (faiss IVF+PQ
     proper: the residual distribution is tighter than the raw one, so
     the same code budget buys more accuracy). One map pass: cosine
-    argmax cell + literal-table lookup + elementwise subtract."""
+    argmax cell + centroid lookup (:func:`_centroid_table`) +
+    elementwise subtract."""
     assigned = corpus.select(
         F.col(id_col),
         F.col(vec_col),
         norm(F.col(vec_col), dim).alias("__n"),
     ).withColumn("cell", cell_assign(vec_col, "__n", centroids, dim))
-    res = (
-        f"zip_with({vec_col}, {_centroid_lookup_expr(centroids)}, "
-        f"(a, b) -> CAST(a AS DOUBLE) - b)"
-    )
-    return assigned.select(
-        F.col(id_col), F.col("cell"), F.expr(res).alias("__res")
-    )
+    res = f"zip_with({vec_col}, {_CELL_CENTROID}, (a, b) -> CAST(a AS DOUBLE) - b)"
+    return assigned.crossJoin(
+        F.broadcast(_centroid_table(corpus.sparkSession, centroids))
+    ).select(F.col(id_col), F.col("cell"), F.expr(res).alias("__res"))
 
 
 def ivfpq_index_residual(
@@ -951,8 +1051,9 @@ def ivfpq_index_residual(
 ) -> DataFrame:
     """Residual-mode IVF+PQ index: (neighbor_id, cell, pq_code) where
     the codes quantize ``x − centroid[cell]`` (train ``codebooks`` on
-    :func:`ivf_residuals` output). Same one-map-pass/no-join shape as
-    :func:`ivfpq_index`."""
+    :func:`ivf_residuals` output). One map pass, as
+    :func:`ivfpq_index`, plus the broadcast centroid row — no
+    Exchange."""
     res = ivf_residuals(corpus, centroids, dim, id_col, vec_col)
     return pq_encode(res, codebooks, vec_col="__res").select(
         F.col(id_col).alias("neighbor_id"), "cell", "pq_code"
@@ -974,12 +1075,8 @@ def ivfpq_topk_residual(
     ``centroid[cell] + decode(pq_code)``, then the same probe/score
     path as :func:`ivfpq_topk` — the coarse centroids pass to
     :func:`_score_cells` as its ``offsets``."""
-    cells, probes, rows = _probe_cells(
-        queries, centroids, dim, n_probe, id_col, vec_col
-    )
-    return _score_cells(
-        cells, probes, rows, index, codebooks, dim, k, offsets=centroids
-    )
+    probes = _probe_cells(queries, centroids, dim, n_probe, id_col, vec_col)
+    return _score_cells(probes, index, codebooks, dim, k, offsets=centroids)
 
 
 def persist_ivfpq_index(
@@ -1180,12 +1277,10 @@ def imi_probe_cells(
     ~(p1·p2)/(k1·k2)."""
     k2 = len(cents2) if stride is None else stride
     spark = queries.sparkSession
-    branches, lvl1, _ = _probe_cells(
-        queries, cents1, dim, n_probe1, id_col, vec_col
-    )
+    lvl1 = _probe_cells(queries, cents1, dim, n_probe1, id_col, vec_col)
     cent1 = local_frame(
         spark,
-        [(b, [float(x) for x in cents1[b]]) for b in branches],
+        [(b, [float(x) for x in cents1[b]]) for b in lvl1.cells],
         "__c1 bigint, __center1 array<double>",
     )
     cent2 = _centroid_df(spark, cents2).select(
@@ -1196,7 +1291,8 @@ def imi_probe_cells(
         F.col("__d").asc(), F.col("cell").asc()
     )
     return (
-        lvl1.join(F.broadcast(cent1), F.col("cell") == F.col("__c1"))
+        lvl1.frame()
+        .join(F.broadcast(cent1), F.col("cell") == F.col("__c1"))
         .crossJoin(F.broadcast(cent2))
         .withColumn(
             "__comp",
@@ -1249,5 +1345,4 @@ def imi_topk(
         queries, cents1, cents2, dim, n_probe1, n_probe2, id_col, vec_col,
         stride=stride,
     )
-    cells, probes, rows = _collect_probes(probes, dim)
-    return _score_cells(cells, probes, rows, index, codebooks, dim, k)
+    return _score_cells(_collect_probes(probes, dim), index, codebooks, dim, k)

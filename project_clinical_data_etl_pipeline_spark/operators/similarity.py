@@ -621,11 +621,9 @@ def ivf_topk_indexed(
     Exchange in the whole query is the final per-query rank window."""
     from .quantization import _probe_cells
 
-    cells, probes_local, _ = _probe_cells(
-        queries, centroids, dim, n_probe, id_col, vec_col
-    )
-    assigned = spark.table(table).filter(F.col("cell").isin(cells))
-    return _rank_topk(assigned.join(F.broadcast(probes_local), on="cell"), k, dim)
+    probes = _probe_cells(queries, centroids, dim, n_probe, id_col, vec_col)
+    assigned = spark.table(table).filter(F.col("cell").isin(probes.cells))
+    return _rank_topk(assigned.join(F.broadcast(probes.frame()), on="cell"), k, dim)
 
 
 def ivf_topk(

@@ -7,12 +7,15 @@ times: with a ``local_frame`` query set, with a ``createDataFrame(list)``
 query set (an RDD-backed frame, as a serving client builds it), and
 with a ``local_frame`` query set and ``quantization._PROBE_COLLECT_SCALARS``
 set to 1, which sends every probe down the Spark cell selection and the
-Spark scoring tail instead of the driver path (frame kind ``tail``). For
-each probe it records the rows ``(query_id, neighbor_id, cosine bits, rank)``,
-the result schema with nullability, the Spark jobs the probe started
-(construct and collect), its wall time, and the index rows in the probed
-cells (slice rows), and prints a summary per index and frame kind:
-median ms, median jobs, and slice rows per result.
+Spark scoring tail instead of the driver path (frame kind ``tail``). Each
+request is served twice: cold, with ``ann_index``'s resident store cleared
+first, and warm, from the store the cold probe filled (a tree without the
+store serves both the same way). For each probe it records the rows
+``(query_id, neighbor_id, cosine bits, rank)``, the result schema with
+nullability, the Spark jobs the probe started (construct and collect), its
+wall time, and the index rows in the probed cells (slice rows), and prints a
+summary per index, frame kind and state: median ms, median jobs, and slice
+rows per result.
 
     python scripts/probe_parity.py --out new.json
     python scripts/probe_parity.py --tree ../parent --out old.json
@@ -20,7 +23,8 @@ median ms, median jobs, and slice rows per result.
 
 ``--tree`` imports the package from another checkout (default: the tree
 holding this script). ``--compare`` exits 1 if any probe's rows or
-schema differ. One local session, ``--cpus`` cores (default: all).
+schema differ, cold or warm. One local session, ``--cpus`` cores
+(default: all).
 """
 
 from __future__ import annotations
@@ -65,17 +69,21 @@ def _jobs(sc, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _probed_cells(Q, meta: dict, q) -> list:
-    """The cells a probe scans, by the package's own selectors."""
+def _probed_cells(Q, S, meta: dict, q) -> list:
+    """The cells a probe scans, by the package's own Spark selectors."""
     if meta.get("quantizer") == "imi":
         probes = Q.imi_probe_cells(
             q, meta["centroids"], meta["centroids2"], meta["dim"], N_PROBE, N_PROBE,
             meta["id_col"], meta["vec_col"], stride=meta.get("imi_stride"),
         )
-        return sorted({r["cell"] for r in probes.select("cell").collect()})
-    return Q._probe_cells(
-        q, meta["centroids"], meta["dim"], N_PROBE, meta["id_col"], meta["vec_col"]
-    )[0]
+    else:
+        probes = S._spark_probe_cells(
+            S._query_frame(q, meta["dim"], meta["id_col"], meta["vec_col"]),
+            S._centroid_df(q.sparkSession, meta["centroids"]),
+            meta["dim"],
+            N_PROBE,
+        )
+    return sorted({r["cell"] for r in probes.select("cell").collect()})
 
 
 def run(args, work: str) -> dict:
@@ -83,6 +91,7 @@ def run(args, work: str) -> dict:
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(args.cpus))
     from project_clinical_data_etl_pipeline_spark.operators import ann_index as AI
     from project_clinical_data_etl_pipeline_spark.operators import quantization as Q
+    from project_clinical_data_etl_pipeline_spark.operators import similarity as S
     from project_clinical_data_etl_pipeline_spark.session import get_spark, local_frame
 
     spark = get_spark(app_name="probe_parity", cpus=args.cpus)
@@ -101,6 +110,8 @@ def run(args, work: str) -> dict:
         "tail": lambda rows: local_frame(spark, rows, schema),
     }
     budget = Q._PROBE_COLLECT_SCALARS
+    store = getattr(AI, "_RESIDENT", None)
+    states = ("cold", "warm")
     probes, schemas = [], {}
     for name in args.indexes.split(","):
         path = os.path.join(work, name)
@@ -117,35 +128,45 @@ def run(args, work: str) -> dict:
             for req in range(args.requests):
                 idx = [(req * BATCH + j) % POOL for j in range(BATCH)]
                 q = make([(1_000_000 + i, pool[i].tolist()) for i in idx])
-                t0 = time.perf_counter()
-                out, jobs = _jobs(
-                    sc, f"parity_{name}_{kind}_{req}",
-                    lambda: AI.probe_index(spark, path, q, k=K).collect(),
-                )
-                ms = (time.perf_counter() - t0) * 1e3
+                slice_rows = sum(cell_rows.get(c, 0) for c in _probed_cells(Q, S, meta, q))
+                for state in states:
+                    if state == "cold" and store is not None:
+                        store.clear()
+                    t0 = time.perf_counter()
+                    out, jobs = _jobs(
+                        sc, f"parity_{name}_{kind}_{req}_{state}",
+                        lambda: AI.probe_index(spark, path, q, k=K).collect(),
+                    )
+                    ms = (time.perf_counter() - t0) * 1e3
+                    rows = sorted(
+                        (r["query_id"], r["neighbor_id"], float(r["cosine"]).hex(), r["rank"])
+                        for r in out
+                    )
+                    probes.append({
+                        "index": name, "frame": kind, "state": state, "request": req,
+                        "rows": rows, "jobs": jobs, "ms": round(ms, 1),
+                        "slice_rows": slice_rows,
+                    })
                 df = AI.probe_index(spark, path, q, k=K)
                 schemas[f"{name}/{kind}"] = df.schema.jsonValue()
-                rows = sorted(
-                    (r["query_id"], r["neighbor_id"], float(r["cosine"]).hex(), r["rank"])
-                    for r in out
-                )
-                slice_rows = sum(cell_rows.get(c, 0) for c in _probed_cells(Q, meta, q))
-                probes.append({
-                    "index": name, "frame": kind, "request": req, "rows": rows,
-                    "jobs": jobs, "ms": round(ms, 1), "slice_rows": slice_rows,
-                })
     Q._PROBE_COLLECT_SCALARS = budget
     summary = {}
     for name in args.indexes.split(","):
         for kind in frames:
-            ps = [p for p in probes if p["index"] == name and p["frame"] == kind]
-            summary[f"{name}/{kind}"] = {
-                "median_ms": statistics.median(p["ms"] for p in ps),
-                "median_jobs": statistics.median(p["jobs"] for p in ps),
-                "slice_rows_per_result": round(
-                    sum(p["slice_rows"] for p in ps) / max(1, sum(len(p["rows"]) for p in ps)), 2
-                ),
-            }
+            for state in states:
+                ps = [
+                    p for p in probes
+                    if (p["index"], p["frame"], p["state"]) == (name, kind, state)
+                ]
+                summary[f"{name}/{kind}/{state}"] = {
+                    "median_ms": statistics.median(p["ms"] for p in ps),
+                    "median_jobs": statistics.median(p["jobs"] for p in ps),
+                    "slice_rows_per_result": round(
+                        sum(p["slice_rows"] for p in ps)
+                        / max(1, sum(len(p["rows"]) for p in ps)),
+                        2,
+                    ),
+                }
     return {
         "tree": os.path.abspath(args.tree),
         "seed": args.seed,
@@ -158,7 +179,7 @@ def run(args, work: str) -> dict:
 
 def compare(a_path: str, b_path: str) -> int:
     a, b = (json.load(open(p)) for p in (a_path, b_path))
-    key = lambda p: (p["index"], p["frame"], p["request"])  # noqa: E731
+    key = lambda p: (p["index"], p["frame"], p["state"], p["request"])  # noqa: E731
     rows_a = {key(p): p["rows"] for p in a["probes"]}
     rows_b = {key(p): p["rows"] for p in b["probes"]}
     bad = [k for k in sorted(set(rows_a) | set(rows_b)) if rows_a.get(k) != rows_b.get(k)]

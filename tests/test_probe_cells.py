@@ -13,9 +13,13 @@ ann_index.read_index).
   still starts one: the broadcast exchange collects its child through
   an RDD.
 - A probe over a persisted index starts a pinned number of jobs,
-  building the frame and collecting it — the job-count pin, for the
-  flat geometry over a local and an RDD-backed query set and for the
-  two-level (IMI) geometry.
+  building the frame and collecting it — the job-count pin, cold and
+  warm, for the flat geometry over a local and an RDD-backed query set
+  and for the two-level (IMI) geometry.
+- The resident store (``ann_index._ResidentStore``) serves a warm probe
+  exactly what a cold one answers, after every lifecycle commit, under
+  concurrent cold probes, and not at all past the collect budget; a
+  probe takes the sidecar and the files from one manifest read.
 """
 
 from __future__ import annotations
@@ -66,12 +70,10 @@ def _driver_cells(queries, centroids, n_probe):
 
 
 def _probe_rows(queries, centroids, n_probe):
-    cells, frame, _ = Q._probe_cells(
-        queries, centroids, DIM, n_probe, "vec_id", "embedding"
-    )
-    return cells, sorted(
+    probes = Q._probe_cells(queries, centroids, DIM, n_probe, "vec_id", "embedding")
+    return probes.cells, sorted(
         (r["query_id"], r["cell"], r["__qn"], tuple(r["__qv"] or ()))
-        for r in frame.collect()
+        for r in probes.frame().collect()
     )
 
 
@@ -133,8 +135,10 @@ def test_null_and_zero_norm_queries_take_the_fallback(spark):
         assert _driver_cells(q, cents, 2) is None, name
 
         def spark_path():
-            cells, frame, _ = Q._collect_probes(_spark_probes(q, cents, 2), DIM)
-            return cells, sorted((r["query_id"], r["cell"]) for r in frame.collect())
+            probes = Q._collect_probes(_spark_probes(q, cents, 2), DIM)
+            return probes.cells, sorted(
+                (r["query_id"], r["cell"]) for r in probes.frame().collect()
+            )
 
         def selector():
             cells, rows = _probe_rows(q, cents, 2)
@@ -241,20 +245,31 @@ def test_local_frame_broadcast_starts_one_job(spark):
     assert jobs == 2
 
 
+def _probe(spark, path, q, **kw):
+    return sorted(tuple(r) for r in AI.probe_index(spark, path, q, k=5, **kw).collect())
+
+
+def _local_queries(spark, vecs, n=4):
+    return local_frame(spark, [(10_000 + i, vecs[i].tolist()) for i in range(n)], _QSCHEMA)
+
+
 def test_probe_index_construct_job_count(spark, flat_index, imi_index):
-    """Jobs per probe, building the result frame and collecting it.
-    Flat over a local query set: one — the probed slice's collect; the
-    query rows are collected without a job, the cells picked and the
-    slice scored on the driver, and the result is a local relation.
-    Flat over a ``createDataFrame(list)`` query set: two — its bounded
-    collect is one job at the session's ``limit.initialNumPartitions``
-    (Spark's incremental take would make it two). Two-level: the
-    level-2 ranking window's collect adds its jobs to the slice's.
-    An extra collect, count or checkpoint on any path fails the pin."""
-    for name, (path, vecs), kind, want in (
-        ("flat", flat_index, "local", 1),
-        ("flat", flat_index, "rdd", 2),
-        ("imi", imi_index, "local", 5),
+    """Jobs per probe, building the result frame and collecting it, cold
+    (the first probe of a committed version: the resident store is
+    empty) and warm. Flat over a local query set: cold one, the fill
+    that collects the whole index into the store; warm none — the query
+    rows are collected without a job, the cells picked and the slice
+    scored on the driver from the store, and the result is a local
+    relation. Flat over a ``createDataFrame(list)`` query set: one more
+    each — its bounded collect is one job at the session's
+    ``limit.initialNumPartitions`` (Spark's incremental take would make
+    it two). Two-level: the level-2 ranking window's collect adds its
+    four jobs. An extra collect, count or checkpoint on any path fails
+    the pin."""
+    for name, (path, vecs), kind, cold, warm in (
+        ("flat", flat_index, "local", 1, 0),
+        ("flat", flat_index, "rdd", 2, 1),
+        ("imi", imi_index, "local", 5, 4),
     ):
         rows = [(10_000 + i, vecs[i].tolist()) for i in range(4)]
         if kind == "local":
@@ -262,10 +277,169 @@ def test_probe_index_construct_job_count(spark, flat_index, imi_index):
         else:
             q = spark.createDataFrame(rows, _QSCHEMA)
         AI.probe_index(spark, path, q, k=5).collect()  # warm the session
-        got, jobs = _jobs(
-            spark,
-            f"probe_{name}_{kind}",
-            lambda: AI.probe_index(spark, path, q, k=5).collect(),
+        AI._RESIDENT.clear()
+        got = {}
+        for state in ("cold", "warm"):
+            got[state] = _jobs(
+                spark,
+                f"probe_{name}_{kind}_{state}",
+                lambda: AI.probe_index(spark, path, q, k=5).collect(),
+            )
+        assert len(got["cold"][0]) == 4 * 5, (name, kind)
+        assert sorted(map(tuple, got["warm"][0])) == sorted(map(tuple, got["cold"][0]))
+        assert (got["cold"][1], got["warm"][1]) == (cold, warm), (name, kind)
+
+
+def test_warm_probe_follows_every_commit(spark, tmp_path):
+    """Every lifecycle verb commits a new manifest version, and the
+    first probe after it refills the store (one job) instead of serving
+    the previous version's rows; the next probe is warm (no job). Both
+    answer exactly as a cold probe with the store cleared."""
+    rng = np.random.default_rng(17)
+    vecs = rng.normal(size=(300, DIM)).astype(np.float32)
+
+    def frame(lo, hi, shift=0.0):
+        return local_frame(
+            spark, [(i, (vecs[i] + shift).tolist()) for i in range(lo, hi)], _QSCHEMA
         )
-        assert len(got) == 4 * 5, (name, kind)
-        assert jobs == want, (name, kind, jobs)
+
+    path = str(tmp_path / "idx")
+    AI.build_ivfpq_index(spark, frame(0, 200), path, dim=DIM, m=4, ks=16, n_iter=1)
+    q = _local_queries(spark, vecs[200:])
+    before = _probe(spark, path, q)
+
+    def step(label, verb, changes):
+        nonlocal before
+        verb()
+        after, jobs = _jobs(spark, f"commit_{label}", lambda: _probe(spark, path, q))
+        warm, warm_jobs = _jobs(spark, f"warm_{label}", lambda: _probe(spark, path, q))
+        AI._RESIDENT.clear()
+        assert after == warm == _probe(spark, path, q), label
+        assert (jobs, warm_jobs) == (1, 0), label
+        assert (after != before) == changes, label
+        before = after
+
+    # the queries' own vectors join the index: they answer themselves
+    step("append", lambda: AI.append_ivfpq_index(spark, path, frame(200, 204)), True)
+    step("compact", lambda: AI.compact_index(spark, path, max_files_per_cell=1), False)
+    hot = AI.retrain_criterion(spark, path)["hot_cell"]
+    step("split", lambda: AI.split_cell(spark, path, hot, n_iter=1), True)
+    step("rebuild", lambda: AI.rebuild_index(spark, frame(0, 300, 0.5), path), True)
+    step(
+        "build",
+        lambda: AI.build_ivfpq_index(spark, frame(50, 300), path, dim=DIM, m=4, ks=16, n_iter=1),
+        True,
+    )
+
+
+def test_store_is_bypassed_past_the_budget(spark, flat_index, monkeypatch):
+    """An index whose rows × dim exceed ``_PROBE_COLLECT_SCALARS`` is
+    not held: every probe collects its probed slice (one job) and
+    answers as the held index does. A held index is dropped as soon as
+    the budget shrinks below it."""
+    path, vecs = flat_index
+    q = _local_queries(spark, vecs)
+    AI._RESIDENT.clear()
+    held = _probe(spark, path, q)
+    assert AI._RESIDENT._snaps
+    rows = AI.read_index(spark, path).count()
+    monkeypatch.setattr(Q, "_PROBE_COLLECT_SCALARS", rows * DIM - 1)
+    for i in range(2):
+        got, jobs = _jobs(spark, f"bypass_{i}", lambda: _probe(spark, path, q))
+        assert (got, jobs) == (held, 1)
+        assert not any(s.held for s in AI._RESIDENT._snaps.values())
+
+
+def test_concurrent_cold_probes_fill_once(spark, flat_index):
+    """Four threads probing one cold index all get the cold answer, and
+    only one of them fills the store (one job across all four)."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    path, vecs = flat_index
+    q = _local_queries(spark, vecs)
+    AI._RESIDENT.clear()
+    want = _probe(spark, path, q)
+    AI._RESIDENT.clear()
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(4) as ex:
+            futs = [
+                ex.submit(_jobs, spark, f"thread_{i}", lambda: _probe(spark, path, q))
+                for i in range(4)
+            ]
+            results = [f.result(timeout=300) for f in futs]
+    finally:
+        sys.setswitchinterval(switch)
+    assert [r[0] for r in results] == [want] * 4
+    assert sum(r[1] for r in results) == 1
+
+
+def test_probe_reads_one_manifest_snapshot(spark, tmp_path, monkeypatch):
+    """A rebuild that commits after the probe has resolved the sidecar
+    must not pair the old parameters with the new codes: the answer is
+    a cold probe of the old index or of the new one."""
+    rng = np.random.default_rng(23)
+    vecs = rng.normal(size=(200, DIM)).astype(np.float32)
+    path = str(tmp_path / "idx")
+    AI.build_ivfpq_index(
+        spark,
+        local_frame(spark, [(i, vecs[i].tolist()) for i in range(200)], _QSCHEMA),
+        path, dim=DIM, m=4, ks=16, n_iter=1,
+    )
+    rebuilt = local_frame(
+        spark, [(i, (vecs[i] ** 3).tolist()) for i in range(200)], _QSCHEMA
+    )
+    q = _local_queries(spark, vecs, n=8)
+    AI._RESIDENT.clear()
+    old = _probe(spark, path, q)
+    AI._RESIDENT.clear()
+    load = AI.load_index_meta
+    done = []
+
+    def load_then_rebuild(p):
+        meta = load(p)
+        if not done:  # rebuild_index resolves the sidecar through here too
+            done.append(True)
+            AI.rebuild_index(spark, rebuilt, path)
+        return meta
+
+    monkeypatch.setattr(AI, "load_index_meta", load_then_rebuild)
+    got = _probe(spark, path, q)
+    monkeypatch.undo()
+    if not done:
+        AI.rebuild_index(spark, rebuilt, path)
+    AI._RESIDENT.clear()
+    new = _probe(spark, path, q)
+    assert old != new
+    assert got in (old, new)
+
+
+def test_rerank_shortlist_from_footers(spark, flat_index, monkeypatch):
+    """``probe_index_rerank`` derives its shortlist depth from the
+    committed files' footers: the depth is the one a count of the index
+    gives, without the count's two jobs (its scan and aggregate stages).
+    A cold rerank request starts five jobs — the fill, then the
+    re-rank's join — and a warm one four."""
+    path, vecs = flat_index
+    corpus = local_frame(
+        spark, [(i, vecs[i].tolist()) for i in range(len(vecs))], _QSCHEMA
+    )
+    q = _local_queries(spark, vecs)
+    seen = []
+    derived = Q.derived_shortlist
+    monkeypatch.setattr(Q, "derived_shortlist", lambda n: seen.append(n) or derived(n))
+    AI.probe_index_rerank(spark, path, q, corpus, k=5).collect()  # warm the session
+    AI._RESIDENT.clear()
+    got = [
+        _jobs(
+            spark,
+            f"rerank_{state}",
+            lambda: AI.probe_index_rerank(spark, path, q, corpus, k=5).collect(),
+        )
+        for state in ("cold", "warm")
+    ]
+    assert seen[-1] == AI.read_index(spark, path).count() == len(vecs)
+    assert [len(rows) for rows, _ in got] == [4 * 5] * 2
+    assert [jobs for _, jobs in got] == [5, 4]

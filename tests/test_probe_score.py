@@ -233,3 +233,41 @@ def test_over_budget_slice_takes_spark_tail(spark, monkeypatch):
     assert Q._score_local(probe_rows, slice_rows, books, DIM, 5) is None
     monkeypatch.setattr(Q, "_PROBE_COLLECT_SCALARS", 4 * 30 * DIM)
     assert len(Q._score_local(probe_rows, slice_rows, books, DIM, 5)) == 4 * 5
+
+
+def test_residual_tail_plan_stays_flat_sized_at_dim_64(spark, sf_dir, monkeypatch):
+    """The residual reconstruction adds the coarse centroid of each
+    row's cell to its decoded vector, and the residual encode subtracts
+    it. Over a lazily-encoded index the optimizer copies the residual
+    into every term of the encode that the decode's code guard is
+    pushed into; with the centroid table an inlined literal, that made
+    a dim-64 tail plan 80 times the flat tail's, which ran out of
+    driver heap. With the table one broadcast one-row frame the plan
+    stays within twice the flat tail's, and the rows equal the driver
+    path's."""
+    from project_clinical_data_etl_pipeline_spark.tables import load
+
+    dim = 64
+    rng = np.random.default_rng(81)
+    cents = rng.normal(size=(8, dim)).tolist()
+    books = _books(rng, 8, 16, dim // 8)
+    corpus = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    q = _queries(spark, _f32(rng.normal(size=(8, dim))), ids=list(range(8)))
+
+    def build(topk, encode):
+        return topk(q, encode(corpus, cents, books, dim), cents, books, dim, k=5, n_probe=3)
+
+    fast = build(Q.ivfpq_topk_residual, Q.ivfpq_index_residual)
+    assert _is_local(fast)
+    with monkeypatch.context() as mp:
+        mp.setattr(Q, "_PROBE_COLLECT_SCALARS", 1)
+        residual = build(Q.ivfpq_topk_residual, Q.ivfpq_index_residual)
+        flat = build(Q.ivfpq_topk, Q.ivfpq_index)
+        sizes = [
+            len(df._jdf.queryExecution().optimizedPlan().toString())
+            for df in (residual, flat)
+        ]
+        assert sizes[0] <= 2 * sizes[1], sizes
+        assert fast.schema == residual.schema
+        assert _rows(residual) == _rows(fast)
+    assert len(_rows(fast)) == 8 * 5

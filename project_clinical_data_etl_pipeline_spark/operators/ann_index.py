@@ -37,8 +37,8 @@ module gives the index a real lifecycle:
   says WHEN to pay the rebuild.
 - **Probes serve one committed version**: a probe takes the parameters
   and the file list from ONE manifest read, and a version probed
-  before is served from the driver-resident store
-  (:class:`_ResidentStore`) without a scan.
+  more than once is served from the driver-resident store
+  (:class:`_ResidentStore`) without a scan from its third probe on.
 
 Invariant (test-pinned, tests/test_ann_index.py): because append
 freezes the trained parameters, build(A) + append(B) produces the
@@ -104,8 +104,6 @@ from ..session import local_frame
 
 if TYPE_CHECKING:
     from pyspark.sql.types import StructField
-
-    from .quantization import _HeldIndex
 
 _DATA_DIR = "index"
 _META_RETRIES = 4  # redo attempts when a verb loses the parameter race
@@ -1051,83 +1049,125 @@ def _footer_rows(files: list[str]) -> int:
     return sum(pq.read_metadata(f).num_rows for f in files)
 
 
+def _scalars(x) -> int:
+    """The numbers in a (nested) list; 1 for a number."""
+    return sum(map(_scalars, x)) if isinstance(x, list) else 1
+
+
 class _Snapshot(NamedTuple):
-    """One committed version of an index as probes serve it: its
+    """One committed version of an index held on the driver: its
     sidecar ``meta``, its committed ``rows`` (:func:`_footer_rows`),
-    and, when ``held``, those rows on the driver — ``cells`` and
-    ``neighbor_field`` as ``quantization._HeldIndex`` carries them."""
+    and those rows as the probe scorer reads them. ``cells`` maps cell
+    id → the (neighbor ids, codes) arrays of
+    ``quantization._cell_arrays``, or is None when some row's id or
+    code is not an integer, which only the Spark tail scores;
+    ``neighbor_field`` is the index frame's neighbor_id field, the
+    result schema's. ``frame`` builds the index frame over the
+    version's files, for the Spark tail; the store keeps it None and
+    :func:`_open_index` sets it for each probe."""
 
     meta: dict
     rows: int
-    held: bool
-    cells: dict | None = None
-    neighbor_field: StructField | None = None
+    cells: dict | None
+    neighbor_field: StructField | None
+    frame: Callable[[], DataFrame] | None = None
 
     @property
     def scalars(self) -> int:
-        """Driver memory held, in ``_PROBE_COLLECT_SCALARS`` units."""
-        return self.rows * self.meta["dim"] if self.held else 0
+        """Driver memory held, in ``_PROBE_COLLECT_SCALARS`` units: the
+        committed rows × dim, plus the sidecar's centroids and
+        codebooks."""
+        meta = self.meta
+        return self.rows * meta["dim"] + sum(
+            _scalars(v) for v in meta.values() if isinstance(v, list)
+        )
+
+
+#: Data roots whose latest probed version the resident store remembers.
+_SEEN_ROOTS = 64
 
 
 class _ResidentStore:
-    """The process-wide store of index snapshots that probes serve
-    from, so a warm probe reads no sidecar, builds no parquet frame and
-    scans nothing.
+    """The process-wide store of index snapshots that repeated probes
+    of one committed version are served from, so such a probe reads no
+    sidecar, builds no parquet frame and scans nothing.
 
     Keyed by ``(realpath of the data root, manifest version, committed
     file list, sidecar pointer)``, all from the probe's one manifest
     read: every commit (append, compaction, split, rebuild, a new build
     at the same path) changes the key, so a probe never serves an older
-    version's rows, and a new entry drops the older versions of its
-    root. The held rows of all entries together stay within
-    ``quantization._PROBE_COLLECT_SCALARS``, checked on every lookup:
-    past it the least recently used entries go. One fill runs at a
-    time, so concurrent probes of one cold index fill it once."""
+    version's rows. The first probe of a version only records its key,
+    dropping its root's older snapshot, and collects its probed slice
+    as a probe without the store does, so a version probed once — a
+    commit between every two probes — costs what it did before the
+    store. The second probe fills the snapshot (:func:`_fill`); one
+    fill runs at a time, so concurrent probes fill a version once.
+
+    Bounds: the held snapshots' :attr:`_Snapshot.scalars` together stay
+    within ``quantization._PROBE_COLLECT_SCALARS``, checked on every
+    lookup, least recently used out first; a version larger than that
+    alone is not held, and its probes collect their slices. Recorded
+    keys are kept for the ``_SEEN_ROOTS`` most recently probed roots."""
 
     def __init__(self) -> None:
-        self._lock = threading.Lock()  # guards _snaps
+        self._lock = threading.Lock()  # guards _held and _seen
         self._fill_lock = threading.Lock()
-        self._snaps: OrderedDict[tuple, _Snapshot] = OrderedDict()
+        self._held: OrderedDict[tuple, _Snapshot] = OrderedDict()
+        # data root → (key of its latest probed version, that version's
+        # scalars once a fill found it too large, else None)
+        self._seen: OrderedDict[str, tuple[tuple, int | None]] = OrderedDict()
 
-    def get(self, key: tuple, fill: Callable[[], _Snapshot]) -> _Snapshot:
-        snap = self._lookup(key)
-        if snap is not None:
-            return snap
+    def get(self, key: tuple, fill: Callable[[], _Snapshot]) -> _Snapshot | None:
+        """The snapshot of ``key`` — ``fill()`` runs on the version's
+        second probe — or None, when the probe collects its slice: the
+        version's first probe, or one too large to hold."""
+        from . import quantization as Q
+
+        root = key[0]
+        with self._lock:
+            self._trim()
+            snap = self._held.get(key)
+            if snap is not None:
+                self._held.move_to_end(key)
+                return snap
+            seen = self._seen.pop(root, None)
+            if seen is None or seen[0] != key:
+                for old in [k for k in self._held if k[0] == root]:
+                    del self._held[old]
+                self._seen[root] = (key, None)
+                while len(self._seen) > _SEEN_ROOTS:
+                    self._seen.popitem(last=False)
+                return None
+            self._seen[root] = seen
+            if seen[1] is not None and seen[1] > Q._PROBE_COLLECT_SCALARS:
+                return None
         with self._fill_lock:
-            snap = self._lookup(key)
-            if snap is None:
-                snap = fill()
-                with self._lock:
-                    for old in [k for k in self._snaps if k[0] == key[0]]:
-                        del self._snaps[old]
-                    self._snaps[key] = snap
+            with self._lock:
+                snap = self._held.get(key)
+            if snap is not None:
+                return snap
+            snap = fill()
+            with self._lock:
+                current = self._seen.get(root, (None,))[0] == key
+                if snap.scalars > Q._PROBE_COLLECT_SCALARS:
+                    if current:
+                        self._seen[root] = (key, snap.scalars)
+                    return None
+                if current:  # no newer version was probed meanwhile
+                    self._held[key] = snap
                     self._trim()
         return snap
 
     def clear(self) -> None:
         with self._lock:
-            self._snaps.clear()
-
-    def _lookup(self, key: tuple) -> _Snapshot | None:
-        from . import quantization as Q
-
-        with self._lock:
-            self._trim()
-            snap = self._snaps.get(key)
-            if snap is None or (
-                # the budget grew past an index that did not fit
-                not snap.held
-                and snap.rows * snap.meta["dim"] <= Q._PROBE_COLLECT_SCALARS
-            ):
-                return None
-            self._snaps.move_to_end(key)
-            return snap
+            self._held.clear()
+            self._seen.clear()
 
     def _trim(self) -> None:
         from . import quantization as Q
 
-        while sum(s.scalars for s in self._snaps.values()) > Q._PROBE_COLLECT_SCALARS:
-            self._snaps.popitem(last=False)
+        while sum(s.scalars for s in self._held.values()) > Q._PROBE_COLLECT_SCALARS:
+            self._held.popitem(last=False)
 
 
 _RESIDENT = _ResidentStore()
@@ -1137,31 +1177,31 @@ def _fill(
     spark: SparkSession, path: str, manifest: dict, files: list[str]
 ) -> _Snapshot:
     """The snapshot of one committed version: the sidecar, the footer
-    row count and, when rows × dim fits ``_PROBE_COLLECT_SCALARS``, the
+    row count and, when its scalars fit ``_PROBE_COLLECT_SCALARS``, the
     whole index collected in one job and validated once
-    (``quantization._cell_arrays``)."""
+    (``quantization._cell_arrays``); past the budget nothing is
+    collected and ``cells`` is None."""
     from . import quantization as Q
 
     meta = _meta_of(path, manifest)[0]
-    rows = _footer_rows(files)
-    if rows * meta["dim"] > Q._PROBE_COLLECT_SCALARS:
-        return _Snapshot(meta, rows, held=False)
+    snap = _Snapshot(meta, _footer_rows(files), None, None)
+    if snap.scalars > Q._PROBE_COLLECT_SCALARS:
+        return snap
     frame = _read_files(spark, path, files)
     books = meta["codebooks"]
     cells = Q._cell_arrays(frame.collect(), len(books), len(books[0]))
-    return _Snapshot(meta, rows, True, cells, frame.schema["neighbor_id"])
+    return snap._replace(cells=cells, neighbor_field=frame.schema["neighbor_id"])
 
 
 def _open_index(
     spark: SparkSession, path: str
-) -> tuple[_Snapshot, DataFrame | _HeldIndex]:
-    """``(snapshot, index)`` for one probe, from ONE manifest read: the
-    sidecar parameters and the committed files both come from it, so a
-    commit landing mid-probe cannot pair one version's parameters with
-    another's codes. ``index`` is a ``quantization._HeldIndex`` when
-    the snapshot is held, else the index frame over those files."""
-    from .quantization import _HeldIndex
-
+) -> tuple[dict, list[str], DataFrame | _Snapshot]:
+    """``(meta, files, index)`` for one probe, from ONE manifest read:
+    the sidecar parameters and the committed files both come from it,
+    so a commit landing mid-probe cannot pair one version's parameters
+    with another's codes. ``index`` is the resident store's
+    :class:`_Snapshot` of the version when it holds one, else the index
+    frame over those files."""
     root = _data_path(path)
     manifest = txlog.read_manifest(root)
     files = [os.path.join(root, f) for f in manifest["files"]]
@@ -1173,9 +1213,9 @@ def _open_index(
     )
     snap = _RESIDENT.get(key, partial(_fill, spark, path, manifest, files))
     frame = partial(_read_files, spark, path, files)
-    if not snap.held:
-        return snap, frame()
-    return snap, _HeldIndex(snap.cells, snap.neighbor_field, frame)
+    if snap is None:
+        return _meta_of(path, manifest)[0], files, frame()
+    return snap.meta, files, snap._replace(frame=frame)
 
 
 def probe_index(
@@ -1197,30 +1237,31 @@ def probe_index(
 
     The sidecar and the files come from one manifest read
     (:func:`_open_index`). The first probe of a committed version
-    collects the whole index in one job into the resident store
-    (:class:`_ResidentStore`) when its rows × dim fit
+    collects its probed slice, one job, as it did before the resident
+    store (:class:`_ResidentStore`); the second collects the whole
+    index into the store in one job, when its rows × dim fit
     ``quantization._PROBE_COLLECT_SCALARS``; later probes of that
     version score from the store and scan nothing. So a warm flat
     probe starts no job over a local query set and one (the query
-    collect) over an RDD-backed one; a cold probe starts one more, the
-    fill, as does every probe of an index too large to hold, whose
-    probed slice is collected instead. A two-level probe adds the jobs
-    of its level-2 ranking window. A sidecar of a per-branch index
-    raises ValueError (:func:`_load_meta_pointed`)."""
-    return _probe(*_open_index(spark, path), queries, k, n_probe)
+    collect) over an RDD-backed one; the first two probes of a version
+    start one more, as does every probe of an index too large to hold.
+    A two-level probe adds the jobs of its level-2 ranking window. A
+    sidecar of a per-branch index raises ValueError
+    (:func:`_load_meta_pointed`)."""
+    meta, _, index = _open_index(spark, path)
+    return _probe(meta, index, queries, k, n_probe)
 
 
 def _probe(
-    snap: _Snapshot,
-    index: DataFrame | _HeldIndex,
+    meta: dict,
+    index: DataFrame | _Snapshot,
     queries: DataFrame,
     k: int,
     n_probe: int,
 ) -> DataFrame:
-    """:func:`probe_index` over an opened snapshot."""
+    """:func:`probe_index` over an opened index (:func:`_open_index`)."""
     from .quantization import imi_topk, ivfpq_topk
 
-    meta = snap.meta
     if meta.get("quantizer") == "imi":
         return imi_topk(
             queries,
@@ -1267,11 +1308,11 @@ def probe_index_rerank(
     guaranteed through after appends (tests/test_ann_index.py)."""
     from .quantization import derived_shortlist, _exact_rerank
 
-    snap, index = _open_index(spark, path)
-    meta = snap.meta
+    meta, files, index = _open_index(spark, path)
     if shortlist is None:
-        shortlist = derived_shortlist(snap.rows)
-    cand = _probe(snap, index, queries, shortlist, n_probe).select(
+        rows = index.rows if isinstance(index, _Snapshot) else _footer_rows(files)
+        shortlist = derived_shortlist(rows)
+    cand = _probe(meta, index, queries, shortlist, n_probe).select(
         "query_id", "neighbor_id"
     )
     return _exact_rerank(

@@ -42,8 +42,7 @@ from __future__ import annotations
 
 import math
 import os
-from dataclasses import dataclass
-from typing import Callable, NamedTuple
+from typing import TYPE_CHECKING, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -71,16 +70,26 @@ from .similarity import (
     norm,
 )
 
+if TYPE_CHECKING:
+    from .ann_index import _Snapshot
+
 #: Driver-collect budget of an IVF probe, in SCALARS (rows × vector
 #: dim). It bounds each of the three things the probe may hold on the
 #: driver: the query rows (|queries|·n_probe·dim, the probe rows they
 #: become), the probed index slice (slice rows × dim once decoded),
 #: and the scoring work (Σ over probe rows of the probed cell's slice
 #: rows × dim). It also bounds ``ann_index``'s resident store: the
-#: committed rows × dim of all the persisted indexes it holds on the
-#: driver between probes, together, checked on every probe. Bounded
-#: control data under the small-queries contract, but a contract must
-#: be ENFORCED, not assumed. Default 8M scalars ≈ 64 MB; env-tunable.
+#: snapshots it holds on the driver between probes (committed rows ×
+#: dim, plus the sidecar's centroids and codebooks, of every held
+#: index) together, checked on every probe. A probe's own holdings
+#: come on top of the store's, so with the store full one probe in
+#: flight can bring the driver to twice the budget and more — the
+#: store, plus that probe's query rows, slice (a fill's whole-index
+#: collect is one) and scoring work, each within the budget — and
+#: each concurrent probe adds its own. Bounded control data under the
+#: small-queries contract, but a contract must be ENFORCED, not
+#: assumed. Default 8M scalars ≈ 64 MB at 8 bytes a scalar;
+#: env-tunable.
 #: Past the cap on the query rows the probe falls back to the Spark
 #: cell selection and the lazy-checkpoint plan (distinct-cell collect
 #: for pruning — always tiny, bounded by index geometry — and the
@@ -560,16 +569,16 @@ def ivfpq_topk(
     m codes. Probe cells are picked as similarity.ivf_topk ranks them
     (cosine desc, centroid id asc) by :func:`_probe_cells`, and the
     index is pruned to them before anything is decoded. ``index`` is
-    the (neighbor_id, cell, pq_code) frame, or a :class:`_HeldIndex`,
-    a persisted index's rows already on the driver. Within the collect
-    budget both steps run on the driver — one bounded collect of the
-    query rows (no job over a local relation), and one of the probed
-    slice unless the index is held — and the result is a local
-    relation, so collecting it starts no job: a probe of a held index
-    over a local query set starts none at all. Past the budget, or on
-    an odd input, :func:`_score_cells` decodes and ranks in a Spark
-    plan. Returns (query_id, neighbor_id, cosine, rank) — cosine of
-    query vs reconstruction.
+    the (neighbor_id, cell, pq_code) frame, or ``ann_index``'s
+    ``_Snapshot``, a persisted index's rows already on the driver.
+    Within the collect budget both steps run on the driver — one
+    bounded collect of the query rows (no job over a local relation),
+    and one of the probed slice unless the index is held — and the
+    result is a local relation, so collecting it starts no job: a
+    probe of a held index over a local query set starts none at all.
+    Past the budget, or on an odd input, :func:`_score_cells` decodes
+    and ranks in a Spark plan. Returns (query_id, neighbor_id, cosine,
+    rank) — cosine of query vs reconstruction.
     """
     probes = _probe_cells(queries, centroids, dim, n_probe, id_col, vec_col)
     return _score_cells(probes, index, codebooks, dim, k)
@@ -638,26 +647,27 @@ def _pick_cells_local(
     ]
 
 
-@dataclass
-class _Probes:
+class _Probes(NamedTuple):
     """A probe's cell selection: ``cells``, the sorted probed-cell ids
     (the scan's IN-list, which prunes partitions/buckets), and the
     (query_id, __qv, __qn, cell) probe ``rows`` when the driver holds
-    them, else None. :meth:`frame` is the probe frame a Spark plan
-    joins: a local relation of the rows, built on first use only, since
-    the driver scorer reads the rows; or, when the driver holds no
-    rows, the checkpointed Spark selection given as ``built``."""
+    them, else None and the ``checkpoint`` of the Spark selection.
+    :meth:`frame` is the probe frame a Spark plan joins. Over held rows
+    it is a local relation built on call, since the driver scorer reads
+    the rows: a warm probe that builds none ran in 70 ms against 79 ms
+    with the frame built (4 queries over a local query set, dim 64,
+    4 cores)."""
 
     cells: list
     rows: list | None
     schema: StructType
     spark: SparkSession
-    built: DataFrame | None = None
+    checkpoint: DataFrame | None = None
 
     def frame(self) -> DataFrame:
-        if self.built is None:
-            self.built = local_frame(self.spark, self.rows, self.schema)
-        return self.built
+        if self.rows is None:
+            return self.checkpoint
+        return local_frame(self.spark, self.rows, self.schema)
 
 
 def _probe_cells(
@@ -714,21 +724,6 @@ def _collect_probes(probes: DataFrame, dim: int) -> _Probes:
         r["cell"] for r in ck.select("cell").distinct().collect()
     )
     return _Probes(cells, None, ck.schema, spark, ck)
-
-
-class _HeldIndex(NamedTuple):
-    """A persisted index's committed rows held on the driver, as the
-    probe scorer reads them (``ann_index``'s resident store builds it
-    from one collect). ``cells`` maps cell id → the (neighbor ids,
-    codes) arrays of :func:`_cell_arrays`, or is None when some row's
-    id or code is not an integer, which only the Spark tail scores;
-    ``neighbor_field`` is the index frame's neighbor_id field, the
-    result schema's; ``frame`` builds the index frame, for the Spark
-    tail only."""
-
-    cells: dict | None
-    neighbor_field: StructField
-    frame: Callable[[], DataFrame]
 
 
 def _cell_arrays(slice_rows: list, m: int, ks: int) -> dict | None:
@@ -907,7 +902,7 @@ def _score_arrays(
 
 def _score_cells(
     probes: _Probes,
-    index: DataFrame | _HeldIndex,
+    index: DataFrame | _Snapshot,
     codebooks: list[list[list[float]]],
     dim: int,
     k: int,
@@ -925,19 +920,17 @@ def _score_cells(
     Fast path, when the driver holds the probe rows: the slice is
     scored in numpy (:func:`_score_arrays`, bit-identical to the Spark
     tail) and returned as a local relation with the Spark tail's
-    schema — collecting it starts no job. A :class:`_HeldIndex` hands
-    over its probed cells' arrays and starts no job; from an index
-    frame the slice (neighbor_id, cell, pq_code) is collected once —
-    one job while its partitions fit
+    schema — collecting it starts no job. ``ann_index``'s held
+    ``_Snapshot`` hands over its probed cells' arrays and starts no
+    job; from an index frame the slice (neighbor_id, cell, pq_code) is
+    collected once — one job while its partitions fit
     ``spark.sql.limit.initialNumPartitions`` (set by ``session.tune``)
     — under ``_PROBE_COLLECT_SCALARS`` (slice rows × dim). Otherwise,
     over the budget, or on an input the driver path does not
     reproduce exactly, the Spark tail runs: the slice is decoded
-    (:func:`pq_reconstruct`; in residual mode the centroid table rides
-    as one broadcast one-row frame, as the codebooks do), joined to
-    the broadcast probe frame on cell, and ranked by
-    ``similarity._rank_topk``."""
-    held = index if isinstance(index, _HeldIndex) else None
+    (:func:`pq_reconstruct`), joined to the broadcast probe frame on
+    cell, and ranked by ``similarity._rank_topk``."""
+    held = None if isinstance(index, DataFrame) else index
     scanned = None if held else _probed_slice(index, probes.cells)
     top = None
     if probes.rows is not None and held is None:
@@ -962,13 +955,14 @@ def _score_cells(
     if offsets is None:
         decoded = pq_reconstruct(scanned, codebooks, out_col="__cv")
     else:
+        recon = (
+            f"zip_with({_centroid_lookup_expr(offsets)}, __dec, "
+            f"(a, b) -> a + b)"
+        )
         decoded = (
             pq_reconstruct(scanned, codebooks, out_col="__dec")
-            .crossJoin(F.broadcast(_centroid_table(probes.spark, offsets)))
-            .withColumn(
-                "__cv", F.expr(f"zip_with({_CELL_CENTROID}, __dec, (a, b) -> a + b)")
-            )
-            .drop("__dec", "__offs")
+            .withColumn("__cv", F.expr(recon))
+            .drop("__dec")
         )
     pairs = decoded.withColumn("__cn", norm("__cv", dim)).join(
         F.broadcast(probes.frame()), on="cell"
@@ -996,27 +990,6 @@ def _centroid_lookup_expr(
     return f"element_at(array({arrays}), CAST({cell_col} + 1 AS INT))"
 
 
-#: The centroid of each row's cell, looked up in :func:`_centroid_table`.
-_CELL_CENTROID = "element_at(__offs, CAST(cell + 1 AS INT))"
-
-
-def _centroid_table(spark: SparkSession, centroids: list[list[float]]) -> DataFrame:
-    """The centroid table as ONE one-row ``__offs array<array<double>>``
-    local frame, cross-joined broadcast onto rows that look up their
-    cell's centroid (``_CELL_CENTROID``), as :func:`pq_reconstruct`
-    attaches its codebooks. The lookup stays one small expression
-    wherever the optimizer copies it — into each unrolled term of a
-    norm or dot, or into a filter pushed down through it — where an
-    inlined literal table copies n_centroids·dim literals each time (a
-    32.8 M-character plan for a dim-64 residual probe over a
-    lazily-encoded index, which ran out of driver heap)."""
-    return local_frame(
-        spark,
-        [([[float(x) for x in c] for c in centroids],)],
-        "__offs array<array<double>>",
-    )
-
-
 def ivf_residuals(
     corpus: DataFrame,
     centroids: list[list[float]],
@@ -1028,17 +1001,34 @@ def ivf_residuals(
     centroid — what residual-mode PQ codebooks train on (faiss IVF+PQ
     proper: the residual distribution is tighter than the raw one, so
     the same code budget buys more accuracy). One map pass: cosine
-    argmax cell + centroid lookup (:func:`_centroid_table`) +
-    elementwise subtract."""
+    argmax cell + centroid lookup + elementwise subtract.
+
+    The centroid table rides as ONE broadcast one-row ``__offs
+    array<array<double>>`` frame, as :func:`pq_reconstruct` attaches
+    its codebooks, not as the inlined literal of
+    :func:`_centroid_lookup_expr`: over a lazily-encoded index the
+    optimizer copies the residual into every unrolled term of the
+    encode that a decode's code guard is pushed into, and with the
+    literal each copy carried n_centroids·dim literals (a 32.8
+    M-character plan for a dim-64 residual probe's Spark tail, which
+    ran out of driver heap)."""
     assigned = corpus.select(
         F.col(id_col),
         F.col(vec_col),
         norm(F.col(vec_col), dim).alias("__n"),
     ).withColumn("cell", cell_assign(vec_col, "__n", centroids, dim))
-    res = f"zip_with({vec_col}, {_CELL_CENTROID}, (a, b) -> CAST(a AS DOUBLE) - b)"
-    return assigned.crossJoin(
-        F.broadcast(_centroid_table(corpus.sparkSession, centroids))
-    ).select(F.col(id_col), F.col("cell"), F.expr(res).alias("__res"))
+    table = local_frame(
+        corpus.sparkSession,
+        [([[float(x) for x in c] for c in centroids],)],
+        "__offs array<array<double>>",
+    )
+    res = (
+        f"zip_with({vec_col}, element_at(__offs, CAST(cell + 1 AS INT)), "
+        f"(a, b) -> CAST(a AS DOUBLE) - b)"
+    )
+    return assigned.crossJoin(F.broadcast(table)).select(
+        F.col(id_col), F.col("cell"), F.expr(res).alias("__res")
+    )
 
 
 def ivfpq_index_residual(

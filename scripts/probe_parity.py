@@ -8,9 +8,11 @@ query set (an RDD-backed frame, as a serving client builds it), and
 with a ``local_frame`` query set and ``quantization._PROBE_COLLECT_SCALARS``
 set to 1, which sends every probe down the Spark cell selection and the
 Spark scoring tail instead of the driver path (frame kind ``tail``). Each
-request is served twice: cold, with ``ann_index``'s resident store cleared
-first, and warm, from the store the cold probe filled (a tree without the
-store serves both the same way). For each probe it records the rows
+request is served three times: cold, with ``ann_index``'s resident store
+cleared first, so the probe collects its slice; fill, the version's second
+probe, which collects the whole index into the store; and warm, from the
+store (a tree without the store serves all three the same way). For each
+probe it records the rows
 ``(query_id, neighbor_id, cosine bits, rank)``, the result schema with
 nullability, the Spark jobs the probe started (construct and collect), its
 wall time, and the index rows in the probed cells (slice rows), and prints a
@@ -23,7 +25,7 @@ rows per result.
 
 ``--tree`` imports the package from another checkout (default: the tree
 holding this script). ``--compare`` exits 1 if any probe's rows or
-schema differ, cold or warm. One local session, ``--cpus`` cores
+schema differ, in any state. One local session, ``--cpus`` cores
 (default: all).
 """
 
@@ -111,7 +113,7 @@ def run(args, work: str) -> dict:
     }
     budget = Q._PROBE_COLLECT_SCALARS
     store = getattr(AI, "_RESIDENT", None)
-    states = ("cold", "warm")
+    states = ("cold", "fill", "warm")
     probes, schemas = [], {}
     for name in args.indexes.split(","):
         path = os.path.join(work, name)

@@ -24,6 +24,8 @@ ann_index.read_index).
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -254,22 +256,23 @@ def _local_queries(spark, vecs, n=4):
 
 
 def test_probe_index_construct_job_count(spark, flat_index, imi_index):
-    """Jobs per probe, building the result frame and collecting it, cold
-    (the first probe of a committed version: the resident store is
-    empty) and warm. Flat over a local query set: cold one, the fill
-    that collects the whole index into the store; warm none — the query
-    rows are collected without a job, the cells picked and the slice
-    scored on the driver from the store, and the result is a local
-    relation. Flat over a ``createDataFrame(list)`` query set: one more
-    each — its bounded collect is one job at the session's
-    ``limit.initialNumPartitions`` (Spark's incremental take would make
-    it two). Two-level: the level-2 ranking window's collect adds its
-    four jobs. An extra collect, count or checkpoint on any path fails
-    the pin."""
-    for name, (path, vecs), kind, cold, warm in (
-        ("flat", flat_index, "local", 1, 0),
-        ("flat", flat_index, "rdd", 2, 1),
-        ("imi", imi_index, "local", 5, 4),
+    """Jobs per probe, building the result frame and collecting it, for
+    the first three probes of a committed version (the resident store
+    starts empty). The first probe collects its probed slice, as a probe
+    without the store does; the second collects the whole index into
+    the store instead; from the third on the probe is warm. Flat over a
+    local query set: one, one, then none — the query rows are collected
+    without a job, the cells picked and the slice scored on the driver
+    from the store, and the result is a local relation. Flat over a
+    ``createDataFrame(list)`` query set: one more each — its bounded
+    collect is one job at the session's ``limit.initialNumPartitions``
+    (Spark's incremental take would make it two). Two-level: the
+    level-2 ranking window's collect adds its four jobs. An extra
+    collect, count or checkpoint on any path fails the pin."""
+    for name, (path, vecs), kind, pins in (
+        ("flat", flat_index, "local", (1, 1, 0)),
+        ("flat", flat_index, "rdd", (2, 2, 1)),
+        ("imi", imi_index, "local", (5, 5, 4)),
     ):
         rows = [(10_000 + i, vecs[i].tolist()) for i in range(4)]
         if kind == "local":
@@ -278,23 +281,37 @@ def test_probe_index_construct_job_count(spark, flat_index, imi_index):
             q = spark.createDataFrame(rows, _QSCHEMA)
         AI.probe_index(spark, path, q, k=5).collect()  # warm the session
         AI._RESIDENT.clear()
-        got = {}
-        for state in ("cold", "warm"):
-            got[state] = _jobs(
+        got = [
+            _jobs(
                 spark,
                 f"probe_{name}_{kind}_{state}",
                 lambda: AI.probe_index(spark, path, q, k=5).collect(),
             )
-        assert len(got["cold"][0]) == 4 * 5, (name, kind)
-        assert sorted(map(tuple, got["warm"][0])) == sorted(map(tuple, got["cold"][0]))
-        assert (got["cold"][1], got["warm"][1]) == (cold, warm), (name, kind)
+            for state in ("first", "fill", "warm")
+        ]
+        assert len(got[0][0]) == 4 * 5, (name, kind)
+        assert len({tuple(sorted(map(tuple, rows))) for rows, _ in got}) == 1
+        assert tuple(jobs for _, jobs in got) == pins, (name, kind)
+
+
+_GROUPS = itertools.count()
+
+
+def _probe_thrice(spark, path, q):
+    """Three probes of the current version — first, fill, warm — as
+    (rows, jobs) pairs."""
+    return [
+        _jobs(spark, f"thrice_{next(_GROUPS)}", lambda: _probe(spark, path, q))
+        for _ in range(3)
+    ]
 
 
 def test_warm_probe_follows_every_commit(spark, tmp_path):
-    """Every lifecycle verb commits a new manifest version, and the
-    first probe after it refills the store (one job) instead of serving
-    the previous version's rows; the next probe is warm (no job). Both
-    answer exactly as a cold probe with the store cleared."""
+    """Every lifecycle verb commits a new manifest version. The first
+    probe after it collects its slice (one job) instead of serving the
+    previous version's rows, the second fills the store (one job), and
+    the third is warm (none). All answer exactly as a probe with the
+    store cleared."""
     rng = np.random.default_rng(17)
     vecs = rng.normal(size=(300, DIM)).astype(np.float32)
 
@@ -306,18 +323,18 @@ def test_warm_probe_follows_every_commit(spark, tmp_path):
     path = str(tmp_path / "idx")
     AI.build_ivfpq_index(spark, frame(0, 200), path, dim=DIM, m=4, ks=16, n_iter=1)
     q = _local_queries(spark, vecs[200:])
-    before = _probe(spark, path, q)
+    before = [rows for rows, _ in _probe_thrice(spark, path, q)][-1]
 
     def step(label, verb, changes):
         nonlocal before
         verb()
-        after, jobs = _jobs(spark, f"commit_{label}", lambda: _probe(spark, path, q))
-        warm, warm_jobs = _jobs(spark, f"warm_{label}", lambda: _probe(spark, path, q))
+        got = _probe_thrice(spark, path, q)
         AI._RESIDENT.clear()
-        assert after == warm == _probe(spark, path, q), label
-        assert (jobs, warm_jobs) == (1, 0), label
-        assert (after != before) == changes, label
-        before = after
+        cold = _probe(spark, path, q)
+        assert [rows for rows, _ in got] == [cold] * 3, label
+        assert [jobs for _, jobs in got] == [1, 1, 0], label
+        assert (cold != before) == changes, label
+        before = cold
 
     # the queries' own vectors join the index: they answer themselves
     step("append", lambda: AI.append_ivfpq_index(spark, path, frame(200, 204)), True)
@@ -333,26 +350,47 @@ def test_warm_probe_follows_every_commit(spark, tmp_path):
 
 
 def test_store_is_bypassed_past_the_budget(spark, flat_index, monkeypatch):
-    """An index whose rows × dim exceed ``_PROBE_COLLECT_SCALARS`` is
-    not held: every probe collects its probed slice (one job) and
-    answers as the held index does. A held index is dropped as soon as
-    the budget shrinks below it."""
+    """A snapshot counts its rows × dim and its sidecar's centroids and
+    codebooks. A held snapshot is dropped as soon as the budget shrinks
+    below that; the store then holds nothing, and every probe collects
+    its probed slice (one job) and answers as the held index does."""
     path, vecs = flat_index
     q = _local_queries(spark, vecs)
     AI._RESIDENT.clear()
-    held = _probe(spark, path, q)
-    assert AI._RESIDENT._snaps
-    rows = AI.read_index(spark, path).count()
-    monkeypatch.setattr(Q, "_PROBE_COLLECT_SCALARS", rows * DIM - 1)
-    for i in range(2):
+    held = [rows for rows, _ in _probe_thrice(spark, path, q)][-1]
+    (snap,) = AI._RESIDENT._held.values()
+    meta = AI.load_index_meta(path)
+    books = len(meta["codebooks"]) * len(meta["codebooks"][0]) * (DIM // len(meta["codebooks"]))
+    assert snap.scalars >= snap.rows * DIM + len(meta["centroids"]) * DIM + books
+    monkeypatch.setattr(Q, "_PROBE_COLLECT_SCALARS", snap.scalars - 1)
+    for i in range(3):
         got, jobs = _jobs(spark, f"bypass_{i}", lambda: _probe(spark, path, q))
         assert (got, jobs) == (held, 1)
-        assert not any(s.held for s in AI._RESIDENT._snaps.values())
+        assert not AI._RESIDENT._held
 
 
-def test_concurrent_cold_probes_fill_once(spark, flat_index):
-    """Four threads probing one cold index all get the cold answer, and
-    only one of them fills the store (one job across all four)."""
+def test_store_remembers_few_roots(spark, flat_index, monkeypatch):
+    """The store remembers the latest version of at most ``_SEEN_ROOTS``
+    data roots: a root pushed out by others is a first probe again."""
+    path, vecs = flat_index
+    q = _local_queries(spark, vecs)
+    monkeypatch.setattr(AI, "_SEEN_ROOTS", 2)
+    AI._RESIDENT.clear()
+    _probe_thrice(spark, path, q)
+    for other in ("a", "b"):
+        AI._RESIDENT.get((other, 0, (), None), lambda: None)
+    assert len(AI._RESIDENT._seen) == 2
+    assert [jobs for _, jobs in _probe_thrice(spark, path, q)] == [0, 0, 0]
+    for other in ("c", "d"):
+        AI._RESIDENT.get((other, 0, (), None), lambda: None)
+    AI._RESIDENT._held.clear()
+    assert [jobs for _, jobs in _probe_thrice(spark, path, q)] == [1, 1, 0]
+
+
+def test_concurrent_cold_probes_fill_once(spark, flat_index, monkeypatch):
+    """Four threads probing one cold index all get the cold answer. One
+    of them is the version's first probe and collects its slice; the
+    store is filled once (two jobs across all four)."""
     import sys
     from concurrent.futures import ThreadPoolExecutor
 
@@ -361,6 +399,9 @@ def test_concurrent_cold_probes_fill_once(spark, flat_index):
     AI._RESIDENT.clear()
     want = _probe(spark, path, q)
     AI._RESIDENT.clear()
+    fills = []
+    fill = AI._fill
+    monkeypatch.setattr(AI, "_fill", lambda *a: fills.append(1) or fill(*a))
     switch = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
@@ -373,13 +414,20 @@ def test_concurrent_cold_probes_fill_once(spark, flat_index):
     finally:
         sys.setswitchinterval(switch)
     assert [r[0] for r in results] == [want] * 4
-    assert sum(r[1] for r in results) == 1
+    assert len(fills) == 1
+    assert sum(r[1] for r in results) == 2
 
 
-def test_probe_reads_one_manifest_snapshot(spark, tmp_path, monkeypatch):
-    """A rebuild that commits after the probe has resolved the sidecar
-    must not pair the old parameters with the new codes: the answer is
-    a cold probe of the old index or of the new one."""
+@pytest.mark.parametrize("state", ["first", "fill"])
+def test_probe_reads_one_manifest_snapshot(spark, tmp_path, monkeypatch, state):
+    """A rebuild that commits right after the probe has read the
+    manifest must not pair the old parameters with the new codes: the
+    probe answers as a cold probe of the old index, whether it is the
+    version's first probe (sidecar and slice read after the commit) or
+    its second (the fill reads them after the commit). The rebuild's
+    vacuum is held back, so the old version's files stay readable as
+    they do until a vacuum runs; a probe that races the vacuum itself
+    fails on the missing file instead of answering."""
     rng = np.random.default_rng(23)
     vecs = rng.normal(size=(200, DIM)).astype(np.float32)
     path = str(tmp_path / "idx")
@@ -394,34 +442,36 @@ def test_probe_reads_one_manifest_snapshot(spark, tmp_path, monkeypatch):
     q = _local_queries(spark, vecs, n=8)
     AI._RESIDENT.clear()
     old = _probe(spark, path, q)
-    AI._RESIDENT.clear()
-    load = AI.load_index_meta
+    if state == "first":
+        AI._RESIDENT.clear()
+    read = AI.txlog.read_manifest
     done = []
 
-    def load_then_rebuild(p):
-        meta = load(p)
-        if not done:  # rebuild_index resolves the sidecar through here too
+    def read_then_rebuild(root, *a, **kw):
+        manifest = read(root, *a, **kw)
+        if not done:  # rebuild_index reads the manifest through here too
             done.append(True)
-            AI.rebuild_index(spark, rebuilt, path)
-        return meta
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(AI.txlog, "vacuum", lambda *a, **kw: [])
+                AI.rebuild_index(spark, rebuilt, path)
+        return manifest
 
-    monkeypatch.setattr(AI, "load_index_meta", load_then_rebuild)
+    monkeypatch.setattr(AI.txlog, "read_manifest", read_then_rebuild)
     got = _probe(spark, path, q)
     monkeypatch.undo()
-    if not done:
-        AI.rebuild_index(spark, rebuilt, path)
     AI._RESIDENT.clear()
     new = _probe(spark, path, q)
-    assert old != new
-    assert got in (old, new)
+    assert done and old != new
+    assert got == old
 
 
 def test_rerank_shortlist_from_footers(spark, flat_index, monkeypatch):
     """``probe_index_rerank`` derives its shortlist depth from the
     committed files' footers: the depth is the one a count of the index
     gives, without the count's two jobs (its scan and aggregate stages).
-    A cold rerank request starts five jobs — the fill, then the
-    re-rank's join — and a warm one four."""
+    The first two rerank requests of a version start five jobs — the
+    slice collect, then the fill, and the re-rank's join — and a warm
+    one four."""
     path, vecs = flat_index
     corpus = local_frame(
         spark, [(i, vecs[i].tolist()) for i in range(len(vecs))], _QSCHEMA
@@ -438,8 +488,8 @@ def test_rerank_shortlist_from_footers(spark, flat_index, monkeypatch):
             f"rerank_{state}",
             lambda: AI.probe_index_rerank(spark, path, q, corpus, k=5).collect(),
         )
-        for state in ("cold", "warm")
+        for state in ("first", "fill", "warm")
     ]
-    assert seen[-1] == AI.read_index(spark, path).count() == len(vecs)
-    assert [len(rows) for rows, _ in got] == [4 * 5] * 2
-    assert [jobs for _, jobs in got] == [5, 4]
+    assert seen[-3:] == [AI.read_index(spark, path).count()] * 3 == [len(vecs)] * 3
+    assert [len(rows) for rows, _ in got] == [4 * 5] * 3
+    assert [jobs for _, jobs in got] == [5, 5, 4]

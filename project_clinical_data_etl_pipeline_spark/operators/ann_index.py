@@ -1,12 +1,12 @@
 """Persisted IVF+PQ index LIFECYCLE — build / append / compact /
 retrain-criterion / probe over a self-contained on-disk index.
 
-The round-10 serving path (``quantization.persist_ivfpq_index``) builds
-a bucketed index once per process and keeps the trained centroids +
-codebooks in process memory — rebuild-only maintenance. A 100 TB corpus
-that grows continuously (the repo's own ``incremental_dedup_corpus``
-stream) cannot pay a full retrain + re-encode per append, so this
-module gives the index a real lifecycle:
+``quantization.persist_ivfpq_index`` writes a bucketed table and leaves
+the trained centroids + codebooks with its caller, in process memory —
+rebuild-only maintenance. A 100 TB corpus that grows continuously (the
+repo's own ``incremental_dedup_corpus`` stream) cannot pay a full
+retrain + re-encode per append, so this module gives the index a real
+lifecycle:
 
 - **Layout**: parquet ``(neighbor_id, cell, pq_code)`` partitioned by
   ``cell`` — the moral twin of the bucketed table (probes prune to the
@@ -106,7 +106,9 @@ if TYPE_CHECKING:
     from pyspark.sql.types import StructField
 
 _DATA_DIR = "index"
-_META_RETRIES = 4  # redo attempts when a verb loses the parameter race
+# redo attempts when a verb loses the parameter race, or a probe its
+# version's sidecar to a vacuum
+_META_RETRIES = 4
 
 
 def _data_path(path: str) -> str:
@@ -833,7 +835,6 @@ def _split_flat_cell(
         n_centroids=n_subcells,
         n_iter=n_iter,
         round_dp=6,
-        materialize=False,  # recon is already materialized
     )
     new_cents = [list(c) for c in meta["centroids"]]
     new_cents[cell_id] = sub[0]
@@ -1201,21 +1202,33 @@ def _open_index(
     so a commit landing mid-probe cannot pair one version's parameters
     with another's codes. ``index`` is the resident store's
     :class:`_Snapshot` of the version when it holds one, else the index
-    frame over those files."""
+    frame over those files.
+
+    A commit's vacuum deletes the superseded sidecar at once, so the
+    version a manifest read names can lose its sidecar before the probe
+    reads it: the FileNotFoundError re-reads the manifest and opens the
+    version it now names, up to ``_META_RETRIES`` reads, then raises."""
     root = _data_path(path)
-    manifest = txlog.read_manifest(root)
-    files = [os.path.join(root, f) for f in manifest["files"]]
-    key = (
-        os.path.realpath(root),
-        manifest["version"],
-        tuple(manifest["files"]),
-        manifest["meta_file"],
-    )
-    snap = _RESIDENT.get(key, partial(_fill, spark, path, manifest, files))
+    for attempt in range(_META_RETRIES):
+        manifest = txlog.read_manifest(root)
+        files = [os.path.join(root, f) for f in manifest["files"]]
+        key = (
+            os.path.realpath(root),
+            manifest["version"],
+            tuple(manifest["files"]),
+            manifest["meta_file"],
+        )
+        try:
+            snap = _RESIDENT.get(key, partial(_fill, spark, path, manifest, files))
+            meta = _meta_of(path, manifest)[0] if snap is None else snap.meta
+            break
+        except FileNotFoundError:
+            if attempt == _META_RETRIES - 1:
+                raise
     frame = partial(_read_files, spark, path, files)
     if snap is None:
-        return _meta_of(path, manifest)[0], files, frame()
-    return snap.meta, files, snap._replace(frame=frame)
+        return meta, files, frame()
+    return meta, files, snap._replace(frame=frame)
 
 
 def probe_index(
@@ -1236,9 +1249,14 @@ def probe_index(
     returns a local relation.
 
     The sidecar and the files come from one manifest read
-    (:func:`_open_index`). The first probe of a committed version
-    collects its probed slice, one job, as it did before the resident
-    store (:class:`_ResidentStore`); the second collects the whole
+    (:func:`_open_index`); a version whose sidecar a vacuum deleted
+    after that read is replaced by the version a fresh read names. The
+    window left open is the data files: a vacuum that runs after the
+    sidecar read deletes files the probe then fails to read.
+
+    The first probe of a committed version collects its probed slice,
+    one job, as it did before the resident store
+    (:class:`_ResidentStore`); the second collects the whole
     index into the store in one job, when its rows × dim fit
     ``quantization._PROBE_COLLECT_SCALARS``; later probes of that
     version score from the store and scan nothing. So a warm flat

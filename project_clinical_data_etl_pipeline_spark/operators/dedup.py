@@ -19,7 +19,7 @@ Text never shuffles; only ids and fixed-width signatures do.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -115,26 +115,6 @@ def _mix(x: int) -> int:
     return x ^ (x >> 31)
 
 
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """k-word shingles as an array<string>. Built with higher-order
-    functions only: split → transform over positions → slice+join.
-
-    PERF: ``col`` should be a plain attribute (or cheap) — the words
-    expression is embedded inside the position lambda, and interpreted
-    HOFs have NO common-subexpression elimination, so an expensive
-    ``col`` re-evaluates once per shingle position. For DataFrame-level
-    use go through :func:`with_shingles`, which materializes the words
-    array in its own projection first (measured 4× on the bench corpus).
-    """
-    words = F.split(normalize_text(col), " ")
-    n = F.size(words)
-    # positions 1 .. n-k+1; each shingle = words[i .. i+k-1] joined
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
-    return F.transform(
-        idx, lambda i: F.array_join(F.slice(words, i, k), " ")
-    )
-
-
 def _shingles_from_words(words: Column, k: int) -> Column:
     """Shingle array from a words array via zip-with-shifted-slices.
 
@@ -178,19 +158,6 @@ def with_shingles(
     referenced more than once."""
     w = df.withColumn("__words", F.split(normalize_text(F.col(text_col)), " "))
     return w.withColumn(out, _shingles_from_words(F.col("__words"), k)).drop("__words")
-
-
-def minhash_signature(col: Column, num_hashes: int = 32, k: int = 3) -> Column:
-    """MinHash signature as array<bigint> of length ``num_hashes``.
-
-    hash_i(shingle) = xxhash64(shingle, seed=i); signature[i] =
-    min over shingles. Pure JVM expressions — per-row map work, no
-    shuffle. 32×8 bytes per doc regardless of doc size.
-
-    PERF: prefer :func:`minhash_signature_from_shingles` over a
-    materialized shingle attribute (see :func:`with_shingles`).
-    """
-    return minhash_signature_from_shingles(word_shingles(col, k), num_hashes)
 
 
 def minhash_signature_from_shingles(
@@ -283,7 +250,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     k: int = 3,
-    materialize_signatures: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """MinHash + LSH candidate pairs: docs sharing ≥1 band bucket.
@@ -312,12 +278,11 @@ def minhash_lsh_pairs(
         F.col(id_col).alias("__id"),
         minhash_signature_from_shingles(F.col("__shingles"), num_hashes).alias("__sig"),
     )
-    if materialize_signatures:
-        # "sign once, join many": both self-join sides would otherwise
-        # re-run the shingle+hash pipeline. Signatures are fixed-width
-        # (num_hashes × 8 B/doc) so the checkpoint is tiny relative to
-        # the text; at warehouse scale persist to a table instead.
-        sig = sig.localCheckpoint()
+    # "sign once, join many": both self-join sides would otherwise re-run
+    # the shingle+hash pipeline. Signatures are fixed-width (num_hashes ×
+    # 8 B/doc) so the checkpoint is tiny relative to the text; at
+    # warehouse scale persist to a table instead.
+    sig = sig.localCheckpoint()
     return _lsh_banded_pairs(sig, num_hashes, bands, max_bucket_size)
 
 
@@ -421,7 +386,6 @@ def minhash_md5_lsh_pairs(
     num_hashes: int = 8,
     bands: int = 4,
     k: int = 3,
-    materialize_signatures: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """MinHash+LSH pairs on the md5-salted signature kernel — the
@@ -434,9 +398,7 @@ def minhash_md5_lsh_pairs(
         minhash_signature_md5_from_shingles(F.col("__shingles"), num_hashes).alias(
             "__sig"
         ),
-    )
-    if materialize_signatures:
-        sig = sig.localCheckpoint()
+    ).localCheckpoint()
     return _lsh_banded_pairs(sig, num_hashes, bands, max_bucket_size)
 
 
@@ -697,8 +659,6 @@ def jaccard_pairs_prefix(
     text_col: str,
     k: int = 3,
     threshold: float = 0.5,
-    positional: bool = True,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via prefix filtering — output-identical
     to :func:`ngram_jaccard_pairs` (df_max=None) but with candidate
@@ -717,8 +677,8 @@ def jaccard_pairs_prefix(
       1. global df per shingle (one partial-agg groupBy);
       2. per-doc sort by (df, shingle) — deterministic total order —
          and slice the prefix;
-      3. self-join on prefix tokens + LENGTH filter (t·max ≤ min) and,
-         when ``positional``, the PPJoin positional bound
+      3. self-join on prefix tokens + LENGTH filter (t·max ≤ min) and
+         the PPJoin positional bound
          ``1 + min(n_a − p_a, n_b − p_b) ≥ ⌈t/(1+t)·(n_a+n_b)⌉``
          (kept iff ANY shared prefix token passes — weaker than
          PPJoin's sequential accumulation, therefore sound);
@@ -738,13 +698,13 @@ def jaccard_pairs_prefix(
     faster, and the gap grows with df since the naive index's
     every-shingle fan-out is quadratic).
 
-    ``checkpoint`` (default True) puts localCheckpoint lineage cuts on
-    the shingle-array frame and the exploded prefix: the plan references
-    each TWICE (self-join) plus the arrays twice more (verification), so
-    a lazy lineage re-runs the shingling regex pipeline up to six times —
-    measured 72s → ~30s at sf1/t=0.7, vs the naive path's 138s. Pass
-    False where executor-loss resilience matters more than the saved
-    recomputation (localCheckpoint blocks are not fault-tolerant)."""
+    localCheckpoint lineage cuts sit on the shingle-array frame and the
+    exploded prefix: the plan references each TWICE (self-join) plus the
+    arrays twice more (verification), so a lazy lineage re-runs the
+    shingling regex pipeline up to six times — measured 72s → ~30s at
+    sf1/t=0.7, vs the naive path's 138s. localCheckpoint blocks are not
+    fault-tolerant: a lost executor fails the query instead of
+    recomputing them."""
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     eps = 1e-9
@@ -755,9 +715,8 @@ def jaccard_pairs_prefix(
             F.array_distinct(F.col("__shingles")).alias("__sh"),
         )
         .select("__id", "__sh", F.size("__sh").alias("__n"))
+        .localCheckpoint()
     )
-    if checkpoint:
-        sizes = sizes.localCheckpoint()
     tok = sizes.select("__id", "__n", F.explode("__sh").alias("__s"))
     dfreq = tok.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
     # per-doc canonical order: ascending (df, shingle) — deterministic
@@ -778,10 +737,9 @@ def jaccard_pairs_prefix(
         "__n",
         F.posexplode(F.slice("__toks", 1, plen)).alias("__pos", "__t"),
     ).select("__id", "__n", "__pos", F.col("__t.__s").alias("__s"))
-    if checkpoint:
-        # fixed-width (id, n, pos, token) rows — cheap to materialize,
-        # read twice by the self-join
-        pref = pref.localCheckpoint()
+    # fixed-width (id, n, pos, token) rows — cheap to materialize, read
+    # twice by the self-join
+    pref = pref.localCheckpoint()
     l, r = pref.alias("l"), pref.alias("r")
     joined = l.join(r, on="__s").filter(F.col("l.__id") < F.col("r.__id"))
     # length filter: J ≥ t ⇒ t·max(na,nb) ≤ min(na,nb)
@@ -790,17 +748,16 @@ def jaccard_pairs_prefix(
         F.greatest(na, nb).cast("double") * F.lit(threshold)
         <= F.least(na, nb).cast("double") + F.lit(eps)
     )
-    if positional:
-        # overlap requirement α = ⌈t/(1+t)·(na+nb)⌉ (guarded down);
-        # upper bound from this match's suffix lengths must reach it
-        alpha = F.ceil(
-            (na + nb).cast("double") * F.lit(threshold / (1.0 + threshold))
-            - F.lit(eps)
-        )
-        ubound = F.lit(1) + F.least(
-            na - F.col("l.__pos") - F.lit(1), nb - F.col("r.__pos") - F.lit(1)
-        )
-        joined = joined.filter(ubound >= alpha)
+    # overlap requirement α = ⌈t/(1+t)·(na+nb)⌉ (guarded down); upper
+    # bound from this match's suffix lengths must reach it
+    alpha = F.ceil(
+        (na + nb).cast("double") * F.lit(threshold / (1.0 + threshold))
+        - F.lit(eps)
+    )
+    ubound = F.lit(1) + F.least(
+        na - F.col("l.__pos") - F.lit(1), nb - F.col("r.__pos") - F.lit(1)
+    )
+    joined = joined.filter(ubound >= alpha)
     cands = joined.select(
         F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b")
     ).distinct()
@@ -1130,18 +1087,6 @@ def decontaminate_fuzzy(
         .distinct()
     )
     return docs.join(F.broadcast(contaminated), on=id_col, how="left_anti")
-
-
-def keep_canonical(df: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
-    """Resolve duplicate pairs into a kept set: drop every id that
-    appears as the larger member of a pair (min-id canonicalization —
-    one pass, no iterative connected components; adequate when clusters
-    are cliques, which LSH candidate sets approximate). For non-clique
-    pair graphs — (a,c),(b,c) keeps BOTH a and b here — use
-    :func:`keep_canonical_components`, which resolves true connected
-    components first."""
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, on=id_col, how="left_anti")
 
 
 def dedup_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:

@@ -273,9 +273,11 @@ def pagerank(
       so the five rounds chain into ONE plan executed by the terminal
       action — AQE materializes the stages bottom-up with broadcasts
       reused in place (measured min-of-3 at sf1: 18.0 s → 14.4 s).
-      The returned frame re-derives the whole chain if a caller runs
-      MULTIPLE actions on it — checkpoint or persist at the call site
-      in that case.
+      Each new action on the returned frame (a count, a derived frame)
+      re-derives the whole chain; only a repeated collect of the same
+      frame reuses its finished adaptive plan's stage outputs
+      (tests/test_pagerank.py). Checkpoint or persist at the call site
+      before running several actions.
     """
     from pyspark.sql import Window
 

@@ -105,8 +105,8 @@ _PROBE_COLLECT_SCALARS = int(
 #: Above this many codebook scalars (m·ks·subdim), the inlined-literal
 #: encode expression stops being "free codegen" and starts being a
 #: Catalyst ANALYSIS cost (a literal ks=256/dim=64 decode measured ~5 s
-#: of pure compile on a 100-row frame). kernel='auto' switches the
-#: encode to the Arrow kernel there. It governs encode only: decode is
+#: of pure compile on a 100-row frame). :func:`pq_encode` switches to
+#: the Arrow kernel there. It governs encode only: decode is
 #: the one-row broadcast of :func:`pq_reconstruct` at every ks.
 _EXPR_KERNEL_MAX_SCALARS = 4096
 
@@ -265,34 +265,28 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     code_col: str = "pq_code",
-    kernel: str = "auto",
 ) -> DataFrame:
     """Append ``code_col``: array<bigint> of ``m`` codebook indices —
     pure map pass, no join, no Exchange either way.
 
-    ``kernel``: 'expr' inlines the codebooks as codegen literals —
-    zero Python in the path, but the expression tree is m·ks·subdim
+    Two kernels, picked by size: up to ``_EXPR_KERNEL_MAX_SCALARS``
+    codebook scalars the codebooks inline as codegen literals — zero
+    Python in the path, but the expression tree is m·ks·subdim
     scalars, which at faiss-standard ks=256 costs seconds of Catalyst
-    analysis PER PLAN. 'arrow' ships the codebooks to an Arrow-batched
-    numpy kernel (same arithmetic fold, bit-identical codes — pinned by
-    tests) with O(1) plan size. 'auto' picks 'expr' up to
-    ``_EXPR_KERNEL_MAX_SCALARS`` codebook scalars, 'arrow' above —
-    graded small-ks paths keep the all-JVM plan, serving-scale ks
-    stays compile-bounded. Both kernels give one answer on a bad row:
-    a NULL vector, fewer than m·subdim elements, or a NULL or NaN among
-    the first m·subdim raises a named error, and elements past m·subdim
-    are ignored."""
+    analysis PER PLAN. Above it they ship to an Arrow-batched numpy
+    kernel (same arithmetic fold, bit-identical codes — pinned by
+    tests) with O(1) plan size, so graded small-ks paths keep the
+    all-JVM plan and serving-scale ks stays compile-bounded. Both
+    kernels give one answer on a bad row: a NULL vector, fewer than
+    m·subdim elements, or a NULL or NaN among the first m·subdim raises
+    a named error, and elements past m·subdim are ignored."""
     m = len(codebooks)
     ks = len(codebooks[0])
     w = len(codebooks[0][0])
-    if kernel == "auto":
-        kernel = "expr" if m * ks * w <= _EXPR_KERNEL_MAX_SCALARS else "arrow"
-    if kernel == "arrow":
+    if m * ks * w > _EXPR_KERNEL_MAX_SCALARS:
         return df.withColumn(
             code_col, _pq_encode_arrow_udf(codebooks)(F.col(vec_col))
         )
-    if kernel != "expr":
-        raise ValueError(f"kernel must be 'auto', 'expr', or 'arrow'; got {kernel!r}")
     ref = _col_sql(vec_col)
     codes = ", ".join(
         l2_argmin_expr(_slice_ref(ref, s * w, w), codebooks[s]) for s in range(m)
@@ -475,53 +469,6 @@ def _exact_rerank(
         F.broadcast(q), on="query_id"
     )
     return _rank_topk(pairs, k, dim)
-
-
-def ivfpq_topk_rerank(
-    queries: DataFrame,
-    index: DataFrame,
-    raw_corpus: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    dim: int,
-    k: int = 5,
-    n_probe: int = 4,
-    shortlist: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The full production serving chain: IVF probe (scan only the
-    ``n_probe`` matching buckets of the persisted (id, cell, pq_code)
-    index) → ADC shortlist of ``shortlist`` per query (reconstruction
-    is codebook lookup on the probed slice only) → EXACT cosine
-    re-rank of the shortlist against the raw vector table
-    (:func:`_exact_rerank` — a broadcast-semi-pruned float read of
-    ≤ shortlist·|queries| rows).
-
-    Cost at 100 TB per query batch: ~n_probe/n_centroids of the corpus
-    read as m-byte codes + shortlist·|queries| full vectors — both
-    terms independent of corpus float volume. Recall is bounded by
-    (a) the true neighbor's cell being probed and (b) surviving the
-    ADC shortlist; with shortlist ≫ k the second bound is loose, so
-    ivfpq_rerank recall ≈ ivf recall at the same n_probe (tested in
-    tests/test_quantization.py). ``shortlist=None`` derives the depth
-    from the index size (:func:`derived_shortlist`); note the probed
-    slice is ~n_probe/n_centroids of the index, so the derived depth
-    is conservative there."""
-    if shortlist is None:
-        shortlist = derived_shortlist(index.count())
-    cand = ivfpq_topk(
-        queries,
-        index,
-        centroids,
-        codebooks,
-        dim,
-        k=shortlist,
-        n_probe=n_probe,
-        id_col=id_col,
-        vec_col=vec_col,
-    ).select("query_id", "neighbor_id")
-    return _exact_rerank(queries, cand, raw_corpus, k, dim, id_col, vec_col)
 
 
 def ivfpq_index(
@@ -1079,23 +1026,19 @@ def persist_ivfpq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     num_buckets: int | None = None,
-    residual: bool = False,
 ) -> None:
     """Materialize the IVF+PQ index as a table BUCKETED BY cell — the
     serving layout: the build-time map pass (coarse argmax + fine
     argmins) runs ONCE, and every query's probe scans only the matching
     buckets of an m-codes-per-vector table (bucket pruning × PQ
-    compression). ``residual=True`` stores residual-mode codes (train
-    ``codebooks`` on :func:`ivf_residuals` output and query via
-    :func:`ivfpq_topk_residual`). ``num_buckets=None`` derives the
+    compression). ``num_buckets=None`` derives the
     count from corpus volume (plans.layout.derived_width, floor 16 —
     the sf4 rule: static partitioning parameters scale with data)."""
     from ..plans.layout import derived_width, write_bucketed
 
     if num_buckets is None:
         num_buckets = derived_width(corpus.count(), floor=16)
-    build = ivfpq_index_residual if residual else ivfpq_index
-    idx = build(corpus, centroids, codebooks, dim, id_col, vec_col)
+    idx = ivfpq_index(corpus, centroids, codebooks, dim, id_col, vec_col)
     write_bucketed(idx, table, ["cell"], num_buckets=num_buckets)
 
 
@@ -1180,7 +1123,7 @@ def imi_cell_cols(
     map pass: c1 = cosine argmax vs cents1 (similarity.cell_assign —
     expr or Arrow kernel by size), residual = literal-table lookup +
     elementwise subtract, c2 = L2 argmin of the residual vs cents2
-    (pq_encode with m=1 — same kernel switch). No join, no Exchange;
+    (pq_encode with m=1 — same size-picked kernel). No join, no Exchange;
     both centroid sets ride the task binaries (k1+k2 vectors).
     ``stride`` defaults to len(cents2); the managed index builds with
     HEADROOM (2·k2) so level-2 entries appended by a later

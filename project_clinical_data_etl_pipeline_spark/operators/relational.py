@@ -133,19 +133,17 @@ def dim_enrich(
     dim: DataFrame,
     on: Column | str | list[str],
     how: str = "inner",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """OP-24/25/26: terminology-style dimension enrichment. The reference
     does this as N+1 per-row HTTP lookups (src/coding_task_1.py:137-175);
     the engine does ONE broadcast hash join — no shuffle of the fact side.
 
-    ``broadcast_dim=True`` is the right default for terminology/dim
-    tables (SNOMED ≈ 500k concepts ≈ tens of MB — comfortably under the
-    64 MB broadcast threshold we set). For dims that outgrow broadcast,
-    pass False and let AQE choose shuffled hash / sort-merge.
+    The dim side is always broadcast: terminology/dim tables fit (SNOMED
+    ≈ 500k concepts ≈ tens of MB — comfortably under the 64 MB broadcast
+    threshold we set). For a dim that outgrows broadcast, join it
+    directly and let AQE choose shuffled hash / sort-merge.
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how=how)
 
 
 def lookup_first_match(

@@ -35,6 +35,11 @@ from .classify import _round_half_up
 from .similarity import _lit_double
 from .text import words_array
 
+#: Scoring legs per plan in :func:`bm25_topk_multi`: every this many
+#: legs are unioned and lineage-cut, so Catalyst never analyzes more
+#: than this many deep per-term expression trees in one plan.
+_MAX_LEGS_PER_PLAN = 32
+
 
 def _check_terms(query_terms: list[str]) -> None:
     """Terms are spliced into generated SQL for BOTH engines: enforce
@@ -121,7 +126,6 @@ def bm25_topk(
     k1: float = 1.2,
     b: float = 0.75,
     score_dp: int = 6,
-    materialize: bool = True,
 ) -> DataFrame:
     """Top-``k`` documents by BM25 (Robertson/Sparck Jones idf with the
     +1 floor, as in Lucene) for a literal query-term list. Returns
@@ -132,14 +136,13 @@ def bm25_topk(
     combined; scoring is a pure map pass with idf/avgdl inlined. Docs
     matching no query term are filtered before the top-k heap.
 
-    ``materialize`` (default True) lazily localCheckpoints the
-    tokenized (id, words, dl) projection so the stats job and the
-    scoring pass share ONE regex tokenization of the corpus — without
-    it both passes re-tokenize, which the sf1 scale run measured as the
-    dominant cost at 10x bench scale (11.2x growth for 10x data; the
-    shared-scan form restores ~linear). Pass False to keep recomputable
-    lineage on a real cluster and persist() yourself — same trade-off
-    as :func:`bm25_topk_multi`.
+    The tokenized (id, words, dl) projection is lazily
+    localCheckpointed so the stats job and the scoring pass share ONE
+    regex tokenization of the corpus — without it both passes
+    re-tokenize, which the sf1 scale run measured as the dominant cost
+    at 10x bench scale (11.2x growth for 10x data; the shared-scan form
+    restores ~linear). The checkpoint forfeits lineage: a lost executor
+    fails the query instead of recomputing it.
     """
     _check_terms(query_terms)
     # NB deliberately NO fan_out before tokenizing: measured at sf1,
@@ -150,8 +153,7 @@ def bm25_topk(
     base = docs.select(
         F.col(id_col), words_array(F.col(text_col)).alias("__ws")
     ).withColumn("__dl", F.expr("CAST(size(__ws) AS DOUBLE)"))
-    if materialize:
-        base = base.localCheckpoint(eager=False)
+    base = base.localCheckpoint(eager=False)
 
     stats = base.agg(
         F.count(F.lit(1)).alias("n"),
@@ -185,8 +187,6 @@ def bm25_topk_multi(
     k1: float = 1.2,
     b: float = 0.75,
     score_dp: int = 6,
-    materialize: bool = True,
-    max_legs_per_plan: int = 32,
 ) -> DataFrame:
     """Batched BM25: top-``k`` per query for MANY query-term sets in
     ONE corpus text scan. Returns (query_id, rank, id_col, score);
@@ -217,19 +217,15 @@ def bm25_topk_multi(
     scans; this path costs 1 text scan + q scans of the compact frame
     (~16 B + matched-entries per doc vs the full text) — it wins from
     roughly q ≥ 2 on text-heavy corpora and is the only sane shape for
-    a thousands-of-queries contamination benchmark. ``materialize``
-    localCheckpoints the compact frame so the q scoring passes reuse it
-    (pass False to keep recomputable lineage on a real cluster, and
-    persist() it yourself).
+    a thousands-of-queries contamination benchmark. The compact frame
+    is localCheckpointed so the q scoring passes reuse it.
 
     Plan growth is BOUNDED, not O(q): each scoring leg carries a deep
-    per-term expression tree, so with ``materialize`` every
-    ``max_legs_per_plan`` legs are unioned and lineage-cut
-    (localCheckpoint) — Catalyst never analyzes more than
-    ``max_legs_per_plan`` scoring legs in one plan, and the final frame
-    is a shallow union of materialized chunks plus one rank window.
-    (With ``materialize=False`` the full O(q) lineage is kept by
-    design — persist/checkpoint chunks yourself on a real cluster.)
+    per-term expression tree, so every ``_MAX_LEGS_PER_PLAN`` legs are
+    unioned and lineage-cut (localCheckpoint) — Catalyst never analyzes
+    more than ``_MAX_LEGS_PER_PLAN`` scoring legs in one plan, and the
+    final frame is a shallow union of materialized chunks plus one rank
+    window.
     """
     if not queries:
         raise ValueError("queries must be non-empty")
@@ -240,12 +236,11 @@ def bm25_topk_multi(
     base = docs.select(
         F.col(id_col), words_array(F.col(text_col)).alias("__ws")
     ).withColumn("__dl", F.expr("CAST(size(__ws) AS DOUBLE)"))
-    if materialize:
-        # the ONE-text-scan contract lives here: base (id, words, dl) is
-        # consumed by the stats aggregate, the (doc, term) join, AND the
-        # compact join — without the lineage cut each would re-run the
-        # regex tokenization over the full text column
-        base = base.localCheckpoint(eager=False)
+    # the ONE-text-scan contract lives here: base (id, words, dl) is
+    # consumed by the stats aggregate, the (doc, term) join, AND the
+    # compact join — without the lineage cut each would re-run the
+    # regex tokenization over the full text column
+    base = base.localCheckpoint(eager=False)
 
     spark = docs.sparkSession
     terms_df = local_frame(spark, [(t,) for t in union_terms], "__term string")
@@ -255,11 +250,10 @@ def bm25_topk_multi(
         .groupBy(id_col, "__term")
         .agg(F.count(F.lit(1)).alias("__tf"))
     )
-    if materialize:
-        # tok feeds BOTH the df_by_term collect and (via tf_map) the
-        # compact join — without this cut the widest post-tokenization
-        # stage (explode + broadcast join + (doc,term) count) runs twice
-        tok = tok.localCheckpoint(eager=False)
+    # tok feeds BOTH the df_by_term collect and (via tf_map) the compact
+    # join — without this cut the widest post-tokenization stage
+    # (explode + broadcast join + (doc,term) count) runs twice
+    tok = tok.localCheckpoint(eager=False)
     tf_map = tok.groupBy(id_col).agg(
         F.map_from_entries(
             F.collect_list(F.struct("__term", "__tf"))
@@ -268,9 +262,7 @@ def bm25_topk_multi(
     compact = base.select(F.col(id_col), "__dl").join(
         tf_map, on=id_col, how="inner"  # docs matching NO union term can
         # never score > 0 for any query — drop them before the q passes
-    )
-    if materialize:
-        compact = compact.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
 
     stats = base.agg(
         F.count(F.lit(1)).alias("n"), F.sum("__dl").cast("bigint").alias("total_dl")
@@ -297,8 +289,6 @@ def bm25_topk_multi(
         # (absent term → tf 0); same double cast, same value
         return f"CAST(coalesce(element_at(__tfm, '{term}'), 0) AS DOUBLE)"
 
-    if max_legs_per_plan < 1:
-        raise ValueError("max_legs_per_plan must be >= 1")
     chunks: list[DataFrame] = []
     pending: DataFrame | None = None
     pending_legs = 0
@@ -310,11 +300,8 @@ def bm25_topk_multi(
         )
         pending = leg if pending is None else pending.unionByName(leg)
         pending_legs += 1
-        if pending_legs >= max_legs_per_plan:
-            chunks.append(
-                pending.localCheckpoint(eager=False) if materialize
-                else pending
-            )
+        if pending_legs >= _MAX_LEGS_PER_PLAN:
+            chunks.append(pending.localCheckpoint(eager=False))
             pending, pending_legs = None, 0
     if pending is not None:
         chunks.append(pending)

@@ -347,7 +347,7 @@ def cell_assign_expr(
 #: analysis + Janino compile cost that grows with the corpus: SemDeDup
 #: derives k = max(16, ⌊√n⌋), so at warehouse scale k reaches tens of
 #: thousands and the literal tree would be megabytes per plan.
-#: kernel='auto' switches to the Arrow kernel there (O(1) plan size,
+#: :func:`cell_assign` switches to the Arrow kernel there (O(1) plan size,
 #: bit-identical assignment — pinned by tests/test_similarity_kernels).
 #: The bound is MEASURED, not argued: at 2,816 scalars (SemDeDup's
 #: k=44 at sf0.1) the expr kernel's repeated plan analysis costs the
@@ -410,29 +410,19 @@ def cell_assign(
     norm_col: Column | str,
     centroids: list[list[float]],
     dim: int,
-    kernel: str = "auto",
 ) -> Column:
-    """Voronoi cell id with a kernel switch: 'expr' inlines the
-    centroids as codegen literals (:func:`cell_assign_expr` — all-JVM,
-    the graded path), 'arrow' ships them inside an Arrow kernel with
-    O(1) plan size (``norm_col`` is ignored there — the kernel
-    recomputes the identical fold norm), 'auto' picks 'expr' up to
-    ``_ASSIGN_EXPR_MAX_SCALARS`` centroid scalars. Values are
-    bit-identical either way, and so is the answer on a bad row: a
-    NULL vector, fewer than ``dim`` elements, a NULL or NaN among the
-    first ``dim`` or a zero norm raises a named error, and elements past
-    ``dim`` are ignored."""
-    if kernel == "auto":
-        kernel = (
-            "expr" if len(centroids) * dim <= _ASSIGN_EXPR_MAX_SCALARS else "arrow"
-        )
-    if kernel == "arrow":
+    """Voronoi cell id, with the kernel picked by size: up to
+    ``_ASSIGN_EXPR_MAX_SCALARS`` centroid scalars the centroids inline
+    as codegen literals (:func:`cell_assign_expr` — all-JVM, the graded
+    path), above it they ship inside an Arrow kernel with O(1) plan
+    size (``norm_col`` is ignored there — the kernel recomputes the
+    identical fold norm). Values are bit-identical either way, and so
+    is the answer on a bad row: a NULL vector, fewer than ``dim``
+    elements, a NULL or NaN among the first ``dim`` or a zero norm
+    raises a named error, and elements past ``dim`` are ignored."""
+    if len(centroids) * dim > _ASSIGN_EXPR_MAX_SCALARS:
         vref = vec_col if isinstance(vec_col, Column) else F.col(vec_col)
         return _cell_assign_arrow_udf(centroids, dim)(vref)
-    if kernel != "expr":
-        raise ValueError(
-            f"kernel must be 'auto', 'expr', or 'arrow'; got {kernel!r}"
-        )
     return cell_assign_expr(vec_col, norm_col, centroids, dim)
 
 
@@ -483,7 +473,6 @@ def kmeans_centroids(
     n_centroids: int = 16,
     n_iter: int = 2,
     round_dp: int | None = None,
-    materialize: bool = True,
 ) -> list[list[float]]:
     """Spherical-k-means centroids via Lloyd iterations in DataFrame ops
     — the quality upgrade over min-id seeding for IVF cells.
@@ -525,15 +514,12 @@ def kmeans_centroids(
             F.col(vec_col).alias("__v"), norm(F.col(vec_col), dim).alias("__n")
         )
     )
-    if materialize:
-        # each Lloyd iteration re-reads the (vector, norm) projection:
-        # materialize it once instead of re-scanning the source +
-        # recomputing norms per iteration. NB localCheckpoint stores
-        # blocks on executor-local storage and FORFEITS lineage — on a
-        # real cluster with executor loss / dynamic allocation, pass
-        # materialize=False (recomputable lineage) or persist() the
-        # projection yourself before calling.
-        vecs = vecs.localCheckpoint(eager=False)
+    # each Lloyd iteration re-reads the (vector, norm) projection:
+    # materialize it once instead of re-scanning the source +
+    # recomputing norms per iteration. NB localCheckpoint stores blocks
+    # on executor-local storage and FORFEITS lineage: a lost executor
+    # fails the run instead of recomputing them.
+    vecs = vecs.localCheckpoint(eager=False)
     mean_sql = DECIMAL_MEAN_SQL
     if round_dp is not None:
         mean_sql = f"round({mean_sql}, {round_dp})"
@@ -574,58 +560,6 @@ def assign_cells(
     )
 
 
-def persist_ivf_index(
-    spark,
-    corpus: DataFrame,
-    table: str,
-    centroids: list[list[float]],
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_buckets: int | None = None,
-) -> None:
-    """Materialize the IVF index: the cell assignment persisted as a
-    table BUCKETED BY cell. The expensive part of ivf_topk — the
-    corpus-wide argmax assignment (cross join + per-vector window) —
-    runs ONCE at build time; every subsequent query is a scan of the
-    probed cells only (bucket pruning) with zero Exchange before the
-    probe join. ``num_buckets=None`` derives the count from corpus
-    volume (plans.layout.derived_width, floor 16 — the sf4 rule: any
-    static partitioning parameter scales with data)."""
-    from ..plans.layout import derived_width, write_bucketed
-
-    if num_buckets is None:
-        num_buckets = derived_width(corpus.count(), floor=16)
-    assigned = assign_cells(corpus, centroids, dim, id_col, vec_col)
-    write_bucketed(assigned, table, ["cell"], num_buckets=num_buckets)
-
-
-def ivf_topk_indexed(
-    spark,
-    table: str,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Top-k against a persisted IVF index (see
-    :func:`persist_ivf_index`): probe cells are picked by the shared
-    selector (``quantization._probe_cells`` — on the driver when the
-    small-by-contract query set fits the collect budget, else a Spark
-    crossJoin + window with a collected or checkpointed result) and
-    pushed into the bucketed scan as an IN filter — Spark prunes to the
-    matching buckets (SelectedBucketsCount in the plan) and the only
-    Exchange in the whole query is the final per-query rank window."""
-    from .quantization import _probe_cells
-
-    probes = _probe_cells(queries, centroids, dim, n_probe, id_col, vec_col)
-    assigned = spark.table(table).filter(F.col("cell").isin(probes.cells))
-    return _rank_topk(assigned.join(F.broadcast(probes.frame()), on="cell"), k, dim)
-
-
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -643,9 +577,9 @@ def ivf_topk(
 
     Default centroid seeding is deterministic min-id corpus vectors —
     the form the DuckDB oracle reproduces. Pass ``centroids`` (e.g.
-    from :func:`kmeans_centroids`) for trained cells, and at warehouse
-    scale persist the assignment via :func:`persist_ivf_index` so
-    queries probe a bucketed table instead of re-assigning the corpus.
+    from :func:`kmeans_centroids`) for trained cells; at warehouse
+    scale serve from a persisted ``ann_index`` index instead, so
+    queries probe a committed table rather than re-assigning the corpus.
     Shape at 100 TB: assignment is one map pass over the corpus vs the
     broadcast centroid set; each query scores ~n_probe/n_centroids of
     the corpus.

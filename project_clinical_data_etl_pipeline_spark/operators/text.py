@@ -427,8 +427,8 @@ DEFAULT_WORDPIECE_VOCAB: list[str] = sorted(
     }
 )
 
-#: Above this many vocab pieces kernel='auto' stops inlining literal
-#: buckets (plan-size guard, same rationale as quantization's
+#: Above this many vocab pieces :func:`wordpiece_count` stops inlining
+#: literal buckets (plan-size guard, same rationale as quantization's
 #: _EXPR_KERNEL_MAX_SCALARS).
 _WP_EXPR_MAX_PIECES = 512
 
@@ -617,23 +617,16 @@ def _wp_arrow_udf(vocab: list[str]):
 def wordpiece_count(
     text_col: str,
     vocab: list[str] | None = None,
-    kernel: str = "auto",
 ) -> Column:
     """Greedy longest-match WordPiece token count (BIGINT) of
-    ``text_col``; NULL text -> NULL. ``kernel``: 'expr' inlines the
-    vocab as literal length buckets (all-JVM, the graded path),
-    'arrow' ships it inside an Arrow-batched kernel (O(1) plan at BERT
-    vocab sizes), 'auto' switches at ``_WP_EXPR_MAX_PIECES``. Both
-    kernels are bit-identical (tests/test_wordpiece.py)."""
+    ``text_col``; NULL text -> NULL. Up to ``_WP_EXPR_MAX_PIECES``
+    vocab pieces the vocab inlines as literal length buckets (all-JVM,
+    the graded path); above it the vocab ships inside an Arrow-batched
+    kernel (O(1) plan at BERT vocab sizes). Both kernels are
+    bit-identical (tests/test_wordpiece.py)."""
     vocab = vocab or DEFAULT_WORDPIECE_VOCAB
-    if kernel == "auto":
-        kernel = "expr" if len(vocab) <= _WP_EXPR_MAX_PIECES else "arrow"
-    if kernel == "arrow":
+    if len(vocab) > _WP_EXPR_MAX_PIECES:
         return _wp_arrow_udf(vocab)(F.col(text_col))
-    if kernel != "expr":
-        raise ValueError(
-            f"kernel must be 'auto', 'expr', or 'arrow'; got {kernel!r}"
-        )
     return F.expr(_wp_count_sql(text_col, vocab, "spark"))
 
 

@@ -18,7 +18,7 @@ import os
 import shutil
 from urllib.parse import urlparse
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -158,29 +158,6 @@ def salted_join(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
     return salted_l.join(salted_r, on=[key, "__salt"], how=how).drop("__salt")
-
-
-def salted_group_count(df: DataFrame, key: str, salt: int = 8) -> DataFrame:
-    """Two-phase aggregation for skewed group keys: partial count on
-    (key, salt) then final on key. Spark's partial aggregation already
-    does this map-side; the explicit form matters for high-cardinality
-    combiners (collect_list/distinct) where map-side combine is
-    ineffective."""
-    phase1 = (
-        df.withColumn("__salt", (F.rand(seed=42) * salt).cast("int"))
-        .groupBy(key, "__salt")
-        .agg(F.count(F.lit(1)).alias("__partial"))
-    )
-    return phase1.groupBy(key).agg(F.sum("__partial").cast("bigint").alias("n"))
-
-
-def repartition_by_range_for_write(
-    df: DataFrame, cols: list[Column | str], target_partitions: int
-) -> DataFrame:
-    """Range-partition before a sorted write: produces globally ordered,
-    evenly-sized files (sampled range bounds), the layout that makes
-    min/max row-group skipping effective for time-series scans."""
-    return df.repartitionByRange(target_partitions, *cols)
 
 
 def zorder_value(

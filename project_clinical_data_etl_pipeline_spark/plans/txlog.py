@@ -4,12 +4,13 @@ crash windows the round-11 lifecycle documented as open (ann_index:
 "the data-then-meta write order means a crash between the two can
 still double-append on replay").
 
-Model: a target directory owns a ``_commits.json`` manifest listing
-the data files that EXIST (relative paths) and the stream batch ids
-already applied. Readers load only manifest-listed files; writers
+Model: a target directory owns a log of versioned manifests
+(``_commits.v{N}.json``, see CONCURRENCY below); the highest version
+lists the data files that EXIST (relative paths) and the stream batch
+ids already applied. Readers load only manifest-listed files; writers
 land new files first (crash ⇒ orphans that no reader sees), then
-publish them with ONE atomic manifest replace (``os.replace`` — POSIX
-rename atomicity) that carries the file list AND the batch id in the
+publish them with ONE atomic claim of the next version (``os.link``
+create-if-absent) that carries the file list AND the batch id in the
 same commit. Idempotence and visibility therefore switch together:
 either a batch's files are visible and its id is recorded, or neither.
 
@@ -339,12 +340,6 @@ def has_batch(
     if entry["watermark"] is not None and batch_id <= entry["watermark"]:
         return True
     return batch_id in entry["ids"]
-
-
-def current_meta_file(root: str) -> str | None:
-    """Absolute path of the committed sidecar pointer, or None."""
-    rel = read_manifest(root)["meta_file"]
-    return None if rel is None else os.path.join(root, rel)
 
 
 def committed_files(root: str, version: int | None = None) -> list[str]:

@@ -54,13 +54,10 @@ def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
 
 
-def write_text(df: DataFrame, path: str, mode: str = "overwrite",
-               single_file: bool = False) -> None:
+def write_text(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """OP-08 text export (reference id handoffs + the ER7 message,
-    src/coding_task_5.py:168-170). ``single_file`` coalesces — only for
-    driver-scale outputs, never bulk data."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode(mode).text(path)
+    src/coding_task_5.py:168-170)."""
+    df.write.mode(mode).text(path)
 
 
 def write_training_shards(

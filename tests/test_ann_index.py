@@ -572,7 +572,7 @@ def test_legacy_unpointed_index_falls_back_to_meta_json(
         batch_id=4,
     )
     assert stats["appended"] == 50
-    assert txlog.current_meta_file(droot) is not None
+    assert txlog.read_manifest(droot)["meta_file"] is not None
     assert AI.load_index_meta(dst)["appended_n"] == 50
     # ...and vacuum retires both legacy files
     removed = txlog.vacuum(droot)

@@ -15,6 +15,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 #: slow: index builds in most tests; runs in the default suite, and
@@ -429,7 +431,8 @@ def test_per_branch_sidecar_is_rejected(spark, corpus, imi_built, tmp_path):
 
     path = str(tmp_path / "per_branch_idx")
     shutil.copytree(imi_built[0], path)
-    meta_file = txlog.current_meta_file(AI._data_path(path))
+    root = AI._data_path(path)
+    meta_file = os.path.join(root, txlog.read_manifest(root)["meta_file"])
     with open(meta_file) as fh:
         meta = json.load(fh)
     meta["per_branch"] = True

@@ -73,7 +73,7 @@ def test_approx_indexes_return_all_queries(spark, sf_dir, exact_topk):
 
 
 # ---------------------------------------------------------------------------
-# Trained (k-means) IVF + the persisted bucketed index
+# Trained (k-means) IVF
 
 
 @pytest.fixture(scope="module")
@@ -128,29 +128,6 @@ def test_kmeans_centroids_recall_and_balance(spark, sf_dir, exact_topk, ivf_part
     seed_rows = e.orderBy("vec_id").limit(16).select("embedding").collect()
     minid_cents = [[float(x) for x in r[0]] for r in seed_rows]
     assert min_cell(cents) >= min_cell(minid_cents)
-
-
-def test_persisted_ivf_index_is_exchange_free_with_bucket_pruning(
-    spark, sf_dir, exact_topk, ivf_parts
-):
-    """The persisted index must (a) return exactly what the direct
-    k-means IVF returns, (b) prune the scan to the probed cells' buckets
-    (SelectedBucketsCount), and (c) never shuffle the corpus on cell —
-    the assignment argmax ran once at build time, and the probe join is
-    broadcast against the bucketed scan."""
-    S, e, q, cents = ivf_parts
-    table = "ivf_index_test"
-    S.persist_ivf_index(spark, e, table, cents, dim=64)
-    try:
-        idx = S.ivf_topk_indexed(spark, table, q, cents, dim=64)
-        assert _sets(idx) == _sets(S.ivf_topk(q, e, k=5, dim=64, centroids=cents))
-        idx.collect()  # finalize the AQE plan before reading it
-        plan = idx._jdf.queryExecution().executedPlan().toString()
-        assert "SelectedBucketsCount:" in plan
-        assert "hashpartitioning(cell" not in plan  # no shuffle on cell
-        assert "Bucketed: true" in plan
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_semdedup_recall_vs_hash_capped_brute(spark, sf_dir):

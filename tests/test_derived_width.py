@@ -47,23 +47,19 @@ def test_non_pow2_mode():
 
 
 def test_index_persist_paths_default_to_derived_width():
-    """The serving-index writers must not ship a hard-coded bucket
-    count: their num_buckets defaults to None (= derive from corpus
+    """The serving-index writer must not ship a hard-coded bucket
+    count: its num_buckets defaults to None (= derive from corpus
     volume at call time) — the regression this pins is a future editor
     'simplifying' the default back to a constant."""
     from project_clinical_data_etl_pipeline_spark.operators.quantization import (
         persist_ivfpq_index,
     )
-    from project_clinical_data_etl_pipeline_spark.operators.similarity import (
-        persist_ivf_index,
-    )
 
-    for fn in (persist_ivfpq_index, persist_ivf_index):
-        default = inspect.signature(fn).parameters["num_buckets"].default
-        assert default is None, (
-            f"{fn.__name__} hard-codes num_buckets={default}; static "
-            "partitioning must derive from data volume (SCALE.md r9)"
-        )
+    default = inspect.signature(persist_ivfpq_index).parameters["num_buckets"].default
+    assert default is None, (
+        f"persist_ivfpq_index hard-codes num_buckets={default}; static "
+        "partitioning must derive from data volume (SCALE.md r9)"
+    )
 
 
 def test_layout_bench_buckets_derive_from_volume():
@@ -77,9 +73,11 @@ def test_derived_shortlist_scales_with_corpus():
     """ADC re-rank shortlist must derive from corpus size: a fixed 200
     measured recall@5 0.875 at 8k vectors but 0.75 at 20k (SCALE.md
     round 10). n/40 with the validated floor and a bound-shaped cap."""
+    from project_clinical_data_etl_pipeline_spark.operators.ann_index import (
+        probe_index_rerank,
+    )
     from project_clinical_data_etl_pipeline_spark.operators.quantization import (
         derived_shortlist,
-        ivfpq_topk_rerank,
         pq_topk_rerank,
     )
 
@@ -88,7 +86,7 @@ def test_derived_shortlist_scales_with_corpus():
     assert derived_shortlist(20_000) == 500     # the measured 0.95 point
     assert derived_shortlist(20_001) == 501     # ceiling division
     assert derived_shortlist(10**9) == 5_000    # absolute work cap
-    for fn in (pq_topk_rerank, ivfpq_topk_rerank):
+    for fn in (pq_topk_rerank, probe_index_rerank):
         default = inspect.signature(fn).parameters["shortlist"].default
         assert default is None, (
             f"{fn.__name__} hard-codes shortlist={default}; serving "

@@ -114,41 +114,6 @@ def test_salted_join_rejects_right_emitting_joins(spark, sf_dir, how):
         L.salted_join(o, c, "o_custkey", how=how)
 
 
-def test_salted_group_count_matches_plain(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem")
-    plain = {
-        (r["l_orderkey"], r["n"])
-        for r in li.groupBy("l_orderkey")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .collect()
-    }
-    salted = {
-        (r["l_orderkey"], r["n"])
-        for r in L.salted_group_count(li, "l_orderkey").collect()
-    }
-    assert plain == salted
-
-
-def test_range_partitioned_write_orders_files(spark, sf_dir, tmp_path):
-    e = load(spark, sf_dir, "events")
-    out = str(tmp_path / "events_ranged")
-    L.repartition_by_range_for_write(e, ["ts"], 4).write.mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
-    assert back.count() == e.count()
-    # each file covers a disjoint ts range → min/max skipping works:
-    # a tight ts filter must prune row groups (scan reads < all files)
-    stats = [
-        (r["f"], r["mn"], r["mx"])
-        for r in back.withColumn("f", F.input_file_name())
-        .groupBy("f")
-        .agg(F.min("ts").alias("mn"), F.max("ts").alias("mx"))
-        .collect()
-    ]
-    stats.sort(key=lambda x: x[1])
-    for (_, _, prev_max), (_, nxt_min, _) in zip(stats, stats[1:]):
-        assert prev_max <= nxt_min
-
-
 # ---------------------------------------------------------------------------
 # Z-order clustering: quantitative multi-dimension file-skipping test
 

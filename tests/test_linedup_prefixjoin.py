@@ -7,7 +7,6 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from project_clinical_data_etl_pipeline_spark.operators import dedup as D
 
@@ -34,8 +33,7 @@ def _near_dup_corpus(spark, n_docs: int = 48, seed: int = 7):
 
 
 @pytest.mark.parametrize("threshold", [0.2, 0.5, 0.8])
-@pytest.mark.parametrize("positional", [True, False])
-def test_prefix_jaccard_matches_naive(spark, threshold, positional):
+def test_prefix_jaccard_matches_naive(spark, threshold):
     """The prefix-filtered path must be OUTPUT-IDENTICAL to the naive
     inverted-index path — same pairs, same exact jaccard values."""
     df = _near_dup_corpus(spark)
@@ -48,7 +46,7 @@ def test_prefix_jaccard_matches_naive(spark, threshold, positional):
     pref = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in D.jaccard_pairs_prefix(
-            df, "doc_id", "text", threshold=threshold, positional=positional
+            df, "doc_id", "text", threshold=threshold
         ).collect()
     }
     assert pref == naive

@@ -69,3 +69,34 @@ def test_partitioning_invariance(spark):
         for r in pagerank(df.repartition(13, F.col("dst"))).collect()
     }
     assert a == b
+
+
+def _jobs(spark, group, fn):
+    """(fn(), the Spark jobs it started) — counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_each_action_rederives_the_chain(spark):
+    """pagerank returns the iteration as one unmaterialized chain (no
+    per-iteration checkpoint), so each new action on the returned frame
+    plans and runs the whole chain again: two counts give one answer
+    from the same number of jobs. The one exception is a repeated
+    collect of the same frame, which reuses the first collect's finished
+    adaptive plan — its materialized stage outputs — and runs only the
+    final stage, one job. A caller that runs several different actions
+    checkpoints or persists the frame itself."""
+    edges = [((i * 7919) % 23, (i * 104729) % 23) for i in range(200)]
+    ranks = pagerank(spark.createDataFrame(edges, "src long, dst long"))
+    counts = [_jobs(spark, f"pagerank_count_{i}", ranks.count) for i in range(2)]
+    assert counts[0] == counts[1] and counts[0][1] > 1
+    first, first_jobs = _jobs(spark, "pagerank_collect_1", ranks.collect)
+    second, second_jobs = _jobs(spark, "pagerank_collect_2", ranks.collect)
+    assert sorted((r.node, r.rank) for r in first) == sorted(_py_pagerank(edges).items())
+    assert sorted(first) == sorted(second)
+    assert first_jobs > 1 and second_jobs == 1

@@ -418,16 +418,18 @@ def test_concurrent_cold_probes_fill_once(spark, flat_index, monkeypatch):
     assert sum(r[1] for r in results) == 2
 
 
+@pytest.mark.parametrize("vacuum", [False, True], ids=["held", "vacuum"])
 @pytest.mark.parametrize("state", ["first", "fill"])
-def test_probe_reads_one_manifest_snapshot(spark, tmp_path, monkeypatch, state):
+def test_probe_reads_one_manifest_snapshot(spark, tmp_path, monkeypatch, state, vacuum):
     """A rebuild that commits right after the probe has read the
-    manifest must not pair the old parameters with the new codes: the
-    probe answers as a cold probe of the old index, whether it is the
-    version's first probe (sidecar and slice read after the commit) or
-    its second (the fill reads them after the commit). The rebuild's
-    vacuum is held back, so the old version's files stay readable as
-    they do until a vacuum runs; a probe that races the vacuum itself
-    fails on the missing file instead of answering."""
+    manifest must not pair the old parameters with the new codes,
+    whether the probe is the version's first (sidecar and slice read
+    after the commit) or its second (the fill reads them after the
+    commit). With the rebuild's vacuum held back, the old version's
+    files stay readable and the probe answers as a cold probe of the
+    old index. With the vacuum run, the old sidecar is gone before the
+    probe reads it: the probe re-reads the manifest and answers as a
+    cold probe of the rebuilt index."""
     rng = np.random.default_rng(23)
     vecs = rng.normal(size=(200, DIM)).astype(np.float32)
     path = str(tmp_path / "idx")
@@ -452,7 +454,8 @@ def test_probe_reads_one_manifest_snapshot(spark, tmp_path, monkeypatch, state):
         if not done:  # rebuild_index reads the manifest through here too
             done.append(True)
             with pytest.MonkeyPatch.context() as mp:
-                mp.setattr(AI.txlog, "vacuum", lambda *a, **kw: [])
+                if not vacuum:
+                    mp.setattr(AI.txlog, "vacuum", lambda *a, **kw: [])
                 AI.rebuild_index(spark, rebuilt, path)
         return manifest
 
@@ -462,7 +465,7 @@ def test_probe_reads_one_manifest_snapshot(spark, tmp_path, monkeypatch, state):
     AI._RESIDENT.clear()
     new = _probe(spark, path, q)
     assert done and old != new
-    assert got == old
+    assert got == (new if vacuum else old)
 
 
 def test_rerank_shortlist_from_footers(spark, flat_index, monkeypatch):

@@ -154,25 +154,6 @@ def test_sessionize_batch_invariants(spark, events):
             assert (b["session_start"] - a["session_end"]).total_seconds() > gap
 
 
-@settings(max_examples=10, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 15), st.integers(0, 15)), min_size=0, max_size=20
-    )
-)
-def test_keep_canonical_drops_exactly_pair_losers(spark, raw_pairs):
-    """keep_canonical removes precisely the ids appearing as the larger
-    member of any pair — never a winner that isn't also a loser."""
-    pairs_data = [(a, b) for a, b in raw_pairs if a < b]
-    df = spark.createDataFrame([(i,) for i in range(16)], "doc_id long")
-    pairs = spark.createDataFrame(
-        pairs_data or [(None, None)], "id_a long, id_b long"
-    ).filter(F.col("id_a").isNotNull())
-    kept = {r["doc_id"] for r in D.keep_canonical(df, "doc_id", pairs).collect()}
-    losers = {b for _, b in pairs_data}
-    assert kept == set(range(16)) - losers
-
-
 def _uf_components(n: int, pairs_data: list[tuple[int, int]]) -> dict[int, int]:
     """Python union-find oracle: id → min id of its component, only for
     ids that appear in some pair."""
@@ -211,17 +192,15 @@ def test_dedup_components_match_union_find(spark, raw_pairs):
 
 
 def test_keep_canonical_components_resolves_non_cliques(spark):
-    """(a,c),(b,c) is NOT a clique: pairwise min-id keep retains both a
-    and b, but the docs are transitively one cluster — the component
-    resolver must keep only a. Also: a long chain (worst case for
-    propagation) collapses to its min."""
+    """(a,c),(b,c) is NOT a clique: dropping each pair's larger id
+    would keep both a and b, but the docs are transitively one cluster
+    — the component resolver must keep only a. Also: a long chain
+    (worst case for propagation) collapses to its min."""
     df = spark.createDataFrame([(i,) for i in range(16)], "doc_id long")
     pairs = spark.createDataFrame(
         [(0, 2), (1, 2)] + [(i, i + 1) for i in range(5, 12)],
         "id_a long, id_b long",
     )
-    pairwise = {r["doc_id"] for r in D.keep_canonical(df, "doc_id", pairs).collect()}
-    assert {0, 1} <= pairwise  # documents the clique-only limitation
     exact = {
         r["doc_id"]
         for r in D.keep_canonical_components(df, "doc_id", pairs).collect()

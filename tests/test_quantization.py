@@ -380,41 +380,6 @@ def test_pq_rerank_recovers_exact_scores_and_beats_raw_adc(
             assert r["cosine"] == brute[key], key
 
 
-def test_ivfpq_rerank_tracks_ivf_recall(spark, corpus, codebooks):
-    """ivfpq_topk_rerank with a generous shortlist must recover
-    (at least) raw IVF+PQ's recall — the ADC quantization loss is
-    undone by the exact re-rank, leaving only the cell-probe bound."""
-    from project_clinical_data_etl_pipeline_spark.operators.similarity import (
-        kmeans_centroids,
-    )
-
-    cents = kmeans_centroids(corpus, dim=DIM, n_centroids=8, n_iter=2,
-                             round_dp=6)
-    index = Q.ivfpq_index(corpus, cents, codebooks, dim=DIM)
-    q = corpus.filter(F.col("vec_id") < 8)
-    brute = {
-        (r["query_id"], r["neighbor_id"])
-        for r in brute_force_topk(q, corpus, k=5, dim=DIM).collect()
-    }
-    raw = {
-        (r["query_id"], r["neighbor_id"])
-        for r in Q.ivfpq_topk(
-            q, index, cents, codebooks, dim=DIM, k=5, n_probe=4
-        ).collect()
-    }
-    rer = {
-        (r["query_id"], r["neighbor_id"])
-        for r in Q.ivfpq_topk_rerank(
-            q, index, corpus, cents, codebooks, dim=DIM, k=5, n_probe=4,
-            shortlist=64,
-        ).collect()
-    }
-    recall_rer = len(rer & brute) / len(brute)
-    recall_raw = len(raw & brute) / len(brute)
-    assert recall_rer >= recall_raw
-    assert recall_rer >= 0.4
-
-
 def test_probe_collect_budget_fallback_matches_fast_path(
     spark, corpus, codebooks, monkeypatch
 ):

@@ -1,6 +1,6 @@
 """Kernel gates for PQ encode/decode (operators.quantization): the
 Arrow encode kernel must be BIT-IDENTICAL to the literal-expression
-kernel it bounds the compile cost of — same codes — and the 'auto'
+kernel it bounds the compile cost of — same codes — and the size
 switch must pick the all-JVM expression plan at graded small ks and the
 O(1)-plan Arrow kernel at faiss-standard ks=256. The one decode, a
 one-row-broadcast codebook lookup, must return the plain lookup's
@@ -9,6 +9,7 @@ doubles at both sizes.
 
 from __future__ import annotations
 
+import sys
 import time
 
 import pytest
@@ -19,6 +20,9 @@ from project_clinical_data_etl_pipeline_spark.tables import load
 from tests.scan_plan import bucketed_scans
 
 M, KS, DIM = 8, 16, 64
+
+#: pq_encode picks its kernel by codebook size: moving the bound forces one
+_BOUND = {"expr": sys.maxsize, "arrow": 0}
 
 
 @pytest.fixture(scope="module")
@@ -43,58 +47,38 @@ def _big_codebooks(m: int = 8, ks: int = 256, w: int = 8):
     ]
 
 
-def test_arrow_encode_matches_expr_kernel(corpus, codebooks):
-    expr = {
+def _codes(monkeypatch, df, books, kernel):
+    monkeypatch.setattr(Q, "_EXPR_KERNEL_MAX_SCALARS", _BOUND[kernel])
+    return {
         r["vec_id"]: r["pq_code"]
-        for r in Q.pq_encode(corpus, codebooks, kernel="expr")
-        .select("vec_id", "pq_code")
-        .collect()
+        for r in Q.pq_encode(df, books).select("vec_id", "pq_code").collect()
     }
-    arrow = {
-        r["vec_id"]: r["pq_code"]
-        for r in Q.pq_encode(corpus, codebooks, kernel="arrow")
-        .select("vec_id", "pq_code")
-        .collect()
-    }
-    assert arrow == expr
 
 
-def test_arrow_encode_matches_expr_kernel_ks256(corpus):
+def test_arrow_encode_matches_expr_kernel(corpus, codebooks, monkeypatch):
+    arrow = _codes(monkeypatch, corpus, codebooks, "arrow")
+    assert arrow == _codes(monkeypatch, corpus, codebooks, "expr")
+
+
+def test_arrow_encode_matches_expr_kernel_ks256(corpus, monkeypatch):
     """At faiss-standard ks=256 the argmin surface is 2048 centroids —
     the tie/fold behavior must still match the literal expression
     exactly (the expr side pays its ~seconds of compile once, here)."""
     books = _big_codebooks()
     sample = corpus.filter(F.col("vec_id") < 64)
-    expr = {
-        r["vec_id"]: r["pq_code"]
-        for r in Q.pq_encode(sample, books, kernel="expr")
-        .select("vec_id", "pq_code")
-        .collect()
-    }
-    arrow = {
-        r["vec_id"]: r["pq_code"]
-        for r in Q.pq_encode(sample, books, kernel="arrow")
-        .select("vec_id", "pq_code")
-        .collect()
-    }
-    assert arrow == expr
+    arrow = _codes(monkeypatch, sample, books, "arrow")
+    assert arrow == _codes(monkeypatch, sample, books, "expr")
 
 
 def test_auto_kernel_switches_on_codebook_size(corpus, codebooks):
     # graded small-ks path: all-JVM expression plan, no Python eval
-    small = Q.pq_encode(corpus, codebooks, kernel="auto").select(
-        "vec_id", "pq_code"
-    )
+    small = Q.pq_encode(corpus, codebooks).select("vec_id", "pq_code")
     assert "EvalPython" not in small._jdf.queryExecution().executedPlan().toString()
     # serving-scale ks=256: Arrow kernel (never row-at-a-time Python)
-    big = Q.pq_encode(corpus, _big_codebooks(), kernel="auto").select(
-        "vec_id", "pq_code"
-    )
+    big = Q.pq_encode(corpus, _big_codebooks()).select("vec_id", "pq_code")
     plan = big._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan
     assert "BatchEvalPython" not in plan
-    with pytest.raises(ValueError):
-        Q.pq_encode(corpus, codebooks, kernel="simd")
 
 
 def test_ks256_pq_topk_bounded_compile_and_codes_only_scan(

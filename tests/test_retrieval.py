@@ -193,11 +193,12 @@ def test_bm25_multi_bit_equal_to_per_query(spark, docs):
         assert ranks.get(qid, []) == list(range(1, len(want) + 1)), qid
 
 
-def test_bm25_multi_chunked_legs_parity(spark, docs):
-    """max_legs_per_plan bounds Catalyst analysis per plan (legs are
+def test_bm25_multi_chunked_legs_parity(spark, docs, monkeypatch):
+    """_MAX_LEGS_PER_PLAN bounds Catalyst analysis per plan (legs are
     unioned and lineage-cut every chunk); results must be identical to
     the unchunked plan for every chunk boundary shape — including a
     final partial chunk and chunk size 1."""
+    from project_clinical_data_etl_pipeline_spark.operators import retrieval
     from project_clinical_data_etl_pipeline_spark.operators.retrieval import (
         bm25_topk_multi,
     )
@@ -218,9 +219,8 @@ def test_bm25_multi_chunked_legs_parity(spark, docs):
 
     want = snap(bm25_topk_multi(docs, queries, k=4))
     for legs in (1, 2):
-        assert snap(
-            bm25_topk_multi(docs, queries, k=4, max_legs_per_plan=legs)
-        ) == want, legs
+        monkeypatch.setattr(retrieval, "_MAX_LEGS_PER_PLAN", legs)
+        assert snap(bm25_topk_multi(docs, queries, k=4)) == want, legs
 
 
 def test_bm25_multi_adversarial_unicode_parity(spark, tmp_path):

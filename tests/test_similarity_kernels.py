@@ -1,7 +1,7 @@
 """Kernel-equivalence gates for Voronoi cell assignment
 (operators.similarity.cell_assign): the Arrow kernel must be
 BIT-IDENTICAL to the literal-expression kernel it bounds the plan cost
-of — same cell ids, same tie behavior — and the 'auto' switch must keep
+of — same cell ids, same tie behavior — and the size switch must keep
 graded-scale centroid sets all-JVM while corpus-scale k (SemDeDup's
 k = sqrt(n)) takes the O(1)-plan Arrow path. On a malformed vector both
 kernels of the assignment and of the PQ encode give one answer.
@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import re
+import sys
 import time
 
 import numpy as np
@@ -23,6 +24,15 @@ from project_clinical_data_etl_pipeline_spark.session import local_frame
 from project_clinical_data_etl_pipeline_spark.tables import load
 
 DIM = 64
+
+#: cell_assign and pq_encode pick their kernel by size: moving the
+#: bound forces one
+_BOUND = {"expr": sys.maxsize, "arrow": 0}
+
+
+def _force(monkeypatch, kernel):
+    monkeypatch.setattr(S, "_ASSIGN_EXPR_MAX_SCALARS", _BOUND[kernel])
+    monkeypatch.setattr(Q, "_EXPR_KERNEL_MAX_SCALARS", _BOUND[kernel])
 
 
 @pytest.fixture(scope="module")
@@ -41,23 +51,27 @@ def centroids(spark, sf_dir):
     return S.kmeans_centroids(e, dim=DIM, n_iter=2, round_dp=6)
 
 
-def _assign(vecs, cents, kernel):
+def _assign(vecs, cents, monkeypatch=None, kernel=None):
+    """Cell ids by the size-picked kernel, or by ``kernel`` when given."""
+    if kernel is not None:
+        _force(monkeypatch, kernel)
     return {
         r["vec_id"]: r["c"]
         for r in vecs.select(
-            "vec_id", S.cell_assign("__v", "__n", cents, DIM, kernel=kernel).alias("c")
+            "vec_id", S.cell_assign("__v", "__n", cents, DIM).alias("c")
         ).collect()
     }
 
 
-def test_arrow_assignment_matches_expr(vecs, centroids):
-    assert _assign(vecs, centroids, "arrow") == _assign(vecs, centroids, "expr")
+def test_arrow_assignment_matches_expr(vecs, centroids, monkeypatch):
+    arrow = _assign(vecs, centroids, monkeypatch, "arrow")
+    assert arrow == _assign(vecs, centroids, monkeypatch, "expr")
 
 
-def test_tie_goes_to_lowest_id_in_both_kernels(vecs, centroids):
+def test_tie_goes_to_lowest_id_in_both_kernels(vecs, centroids, monkeypatch):
     dup = [centroids[0], centroids[0], centroids[1]]
-    a = _assign(vecs, dup, "expr")
-    b = _assign(vecs, dup, "arrow")
+    a = _assign(vecs, dup, monkeypatch, "expr")
+    b = _assign(vecs, dup, monkeypatch, "arrow")
     assert a == b
     assert 1 not in set(a.values())  # duplicate centroid never wins
 
@@ -76,11 +90,9 @@ def test_auto_switch_on_centroid_scalars(vecs, centroids):
     bplan = big._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in bplan
     assert "BatchEvalPython" not in bplan
-    with pytest.raises(ValueError):
-        S.cell_assign("__v", "__n", centroids, DIM, kernel="simd")
 
 
-def test_large_k_assignment_bounded_and_correct(vecs):
+def test_large_k_assignment_bounded_and_correct(vecs, monkeypatch):
     """SemDeDup-scale k: assignment over k=256 centroids (16384 scalars
     — past the literal-expression bound) must run through the Arrow
     kernel in bounded wall time AND agree with the expression kernel on
@@ -92,10 +104,10 @@ def test_large_k_assignment_bounded_and_correct(vecs):
     ]
     sample = vecs.filter(F.col("vec_id") < 64)
     t0 = time.time()
-    via_auto = _assign(sample, cents, "auto")
+    via_auto = _assign(sample, cents)
     elapsed = time.time() - t0
     assert elapsed < 30, f"k=256 arrow assignment took {elapsed:.1f}s"
-    via_expr = _assign(sample, cents, "expr")
+    via_expr = _assign(sample, cents, monkeypatch, "expr")
     assert via_auto == via_expr
 
 
@@ -141,7 +153,9 @@ def _ref_encode(v, books):
 @pytest.mark.parametrize("kernel", ["expr", "arrow"])
 @pytest.mark.parametrize("op", ["cell_assign", "pq_encode"])
 @pytest.mark.parametrize("case", list(_BAD))
-def test_malformed_vector_answer_is_kernel_independent(spark, op, kernel, case):
+def test_malformed_vector_answer_is_kernel_independent(
+    spark, monkeypatch, op, kernel, case
+):
     """A bad row gets one answer whichever kernel runs: a NULL vector,
     a NULL or NaN element among the first dim (m·subdim for the encode)
     or fewer elements raises a named error; elements past that are
@@ -156,13 +170,14 @@ def test_malformed_vector_answer_is_kernel_independent(spark, op, kernel, case):
     books[0][4], books[1][4] = _GOOD[:4], _GOOD[4:]
     rows = [(i, rng.normal(size=_W).tolist()) for i in range(3)] + [(9, _BAD[case])]
     df = local_frame(spark, rows, "vec_id bigint, v array<double>")
+    _force(monkeypatch, kernel)
     if op == "cell_assign":
         out = df.withColumn("__n", S.norm("v")).select(
-            "vec_id", S.cell_assign("v", "__n", cents, _W, kernel=kernel).alias("a")
+            "vec_id", S.cell_assign("v", "__n", cents, _W).alias("a")
         )
         ref = lambda v: _ref_assign(v, cents)  # noqa: E731
     else:
-        out = Q.pq_encode(df, books, vec_col="v", code_col="a", kernel=kernel).select(
+        out = Q.pq_encode(df, books, vec_col="v", code_col="a").select(
             "vec_id", "a"
         )
         ref = lambda v: _ref_encode(v, books)  # noqa: E731

@@ -28,7 +28,6 @@ def test_empty_manifest_state(tmp_path):
         "lineages": {},
     }
     assert txlog.committed_files(str(tmp_path)) == []
-    assert txlog.current_meta_file(str(tmp_path)) is None
 
 
 def test_commit_versions_add_remove(tmp_path):
@@ -80,13 +79,13 @@ def test_meta_file_pointer_flips_atomically_and_persists(tmp_path):
     root = str(tmp_path)
     _touch(root, "_meta.v0.json")
     txlog.commit(root, add_files=["f1"], meta_file="_meta.v0.json")
-    assert txlog.current_meta_file(root) == os.path.join(root, "_meta.v0.json")
+    assert txlog.read_manifest(root)["meta_file"] == "_meta.v0.json"
     # retained across commits that don't pass one (appends, compactions)
     txlog.commit(root, add_files=["f2"])
-    assert txlog.current_meta_file(root) == os.path.join(root, "_meta.v0.json")
+    assert txlog.read_manifest(root)["meta_file"] == "_meta.v0.json"
     # retained across reset too (rebuild reusing parameters)
     txlog.commit(root, reset=True, add_files=["f3"])
-    assert txlog.current_meta_file(root) == os.path.join(root, "_meta.v0.json")
+    assert txlog.read_manifest(root)["meta_file"] == "_meta.v0.json"
     # flipped when a new one is committed; vacuum reclaims the stale one
     _touch(root, "_meta.v3.json")
     txlog.commit(root, meta_file="_meta.v3.json")

@@ -2,13 +2,15 @@
 the expression kernel, the Arrow kernel, and the DuckDB twin must agree
 bit-for-bit; an independent pure-Python greedy reference pins the
 SEMANTICS (greedy longest-match, '##' continuations, [UNK] word = 1);
-and the 'auto' switch keeps graded plans all-JVM while big vocabs take
-the O(1)-plan Arrow path.
+and the size switch keeps graded plans all-JVM while big vocabs take
+the O(1)-plan Arrow path. A test forces a kernel by moving the size
+bound, ``_WP_EXPR_MAX_PIECES``.
 """
 
 from __future__ import annotations
 
 import re
+import sys
 
 import duckdb
 import pytest
@@ -74,19 +76,25 @@ def _collect(df, col):
     return {r["i"]: r["c"] for r in df.select("i", col.alias("c")).collect()}
 
 
-def test_expr_kernel_matches_python_oracle(case_df):
-    got = _collect(case_df, X.wordpiece_count("t", kernel="expr"))
+def _count(monkeypatch, kernel, text_col, vocab=None):
+    """wordpiece_count with ``kernel`` forced through the size bound."""
+    bound = {"expr": sys.maxsize, "arrow": 0}[kernel]
+    monkeypatch.setattr(X, "_WP_EXPR_MAX_PIECES", bound)
+    return X.wordpiece_count(text_col, vocab)
+
+
+def test_expr_kernel_matches_python_oracle(case_df, monkeypatch):
+    got = _collect(case_df, _count(monkeypatch, "expr", "t"))
     want = {i: _python_oracle(t, X.DEFAULT_WORDPIECE_VOCAB) for i, t in enumerate(CASES)}
     assert got == want
 
 
-def test_arrow_kernel_matches_expr(case_df):
-    assert _collect(case_df, X.wordpiece_count("t", kernel="arrow")) == _collect(
-        case_df, X.wordpiece_count("t", kernel="expr")
-    )
+def test_arrow_kernel_matches_expr(case_df, monkeypatch):
+    arrow = _collect(case_df, _count(monkeypatch, "arrow", "t"))
+    assert arrow == _collect(case_df, _count(monkeypatch, "expr", "t"))
 
 
-def test_duckdb_twin_matches_expr(case_df):
+def test_duckdb_twin_matches_expr(case_df, monkeypatch):
     con = duckdb.connect()
     con.execute("CREATE TABLE tt(i INT, t VARCHAR)")
     for i, t in enumerate(CASES):
@@ -96,15 +104,15 @@ def test_duckdb_twin_matches_expr(case_df):
             f"SELECT i, {X.wordpiece_count_duck_sql('t')} FROM tt"
         ).fetchall()
     )
-    assert duck == _collect(case_df, X.wordpiece_count("t", kernel="expr"))
+    assert duck == _collect(case_df, _count(monkeypatch, "expr", "t"))
 
 
-def test_kernels_agree_on_documents_table(spark, sf_dir):
+def test_kernels_agree_on_documents_table(spark, sf_dir, monkeypatch):
     d = load(spark, sf_dir, "documents")
     mism = (
         d.select(
-            X.wordpiece_count("text", kernel="expr").alias("a"),
-            X.wordpiece_count("text", kernel="arrow").alias("b"),
+            _count(monkeypatch, "expr", "text").alias("a"),
+            _count(monkeypatch, "arrow", "text").alias("b"),
         )
         .filter("a IS DISTINCT FROM b")
         .count()
@@ -112,11 +120,11 @@ def test_kernels_agree_on_documents_table(spark, sf_dir):
     assert mism == 0
 
 
-def test_custom_vocab_and_unk_semantics(case_df):
+def test_custom_vocab_and_unk_semantics(case_df, monkeypatch):
     # vocab with no single-char fallback: any word not exactly covered
     # falls to [UNK] = 1 token per word
     vocab = ["hel", "##lo", "world"]
-    got = _collect(case_df, X.wordpiece_count("t", vocab=vocab, kernel="expr"))
+    got = _collect(case_df, _count(monkeypatch, "expr", "t", vocab))
     assert got[1] == 3  # "hello world" -> hel+##lo (2) + world (1)
     want = {i: _python_oracle(t, vocab) for i, t in enumerate(CASES)}
     assert got == want
@@ -139,15 +147,13 @@ def test_auto_switch_and_validation(case_df):
         r["c"] for r in small.collect()
     } or big.collect() == small.collect()
     with pytest.raises(ValueError):
-        X.wordpiece_count("t", kernel="simd")
-    with pytest.raises(ValueError):
         X._wp_buckets(["ok", "##"])  # empty continuation body
 
 
-def test_vocab_quoting_survives_both_dialects(spark):
+def test_vocab_quoting_survives_both_dialects(spark, monkeypatch):
     vocab = ["it", "##'", "##s", "a", "b", "'", "-"]
     df = spark.createDataFrame([(0, "it's a-b '")], "i int, t string")
-    got = _collect(df, X.wordpiece_count("t", vocab=vocab, kernel="expr"))
+    got = _collect(df, _count(monkeypatch, "expr", "t", vocab))
     con = duckdb.connect()
     duck = con.execute(
         f"SELECT {X.wordpiece_count_duck_sql('t', vocab)} FROM "
@@ -207,10 +213,10 @@ def test_train_vocab_plan_is_partial_agg_topk(spark, sf_dir):
         X.wordpiece_train_vocab(d, vocab_size=0)
 
 
-def test_arrow_kernel_at_bert_scale_vocab(spark, sf_dir):
+def test_arrow_kernel_at_bert_scale_vocab(spark, sf_dir, monkeypatch):
     """BERT-scale vocab (~30k pieces — the size the corpus's 31-word
-    vocabulary can never induce, so built deterministically): kernel=
-    'auto' must route to the Arrow kernel (plan stays O(1) — no 30k
+    vocabulary can never induce, so built deterministically): the size
+    switch must route to the Arrow kernel (plan stays O(1) — no 30k
     literal arrays in Catalyst), results must match the independent
     Python oracle on the full sf documents table AND the literal-expr
     kernel on a sample (which pays its one-time giant-plan analysis
@@ -237,8 +243,8 @@ def test_arrow_kernel_at_bert_scale_vocab(spark, sf_dir):
     assert 29_000 <= len(vocab) <= 32_000  # BERT-scale (30,522 in paper)
 
     d = load(spark, sf_dir, "documents")
-    # auto must pick arrow at this size, and never row-at-a-time Python
-    col = X.wordpiece_count("text", vocab, kernel="auto")
+    # the size switch must pick arrow here, never row-at-a-time Python
+    col = X.wordpiece_count("text", vocab)
     out = d.select("doc_id", col.alias("n"))
     t0 = time.time()
     got = {r["doc_id"]: r["n"] for r in out.collect()}
@@ -253,10 +259,10 @@ def test_arrow_kernel_at_bert_scale_vocab(spark, sf_dir):
 
     # literal-expr parity on a sample: the expr plan inlines ~47k
     # bucketed literals — its one-time analysis cost is exactly what
-    # the auto switch exists to avoid, paid here once as the parity
+    # the size switch exists to avoid, paid here once as the parity
     # baseline
     sample = d.filter(F.col("doc_id") < 20)
-    expr_col = X.wordpiece_count("text", vocab, kernel="expr")
+    expr_col = _count(monkeypatch, "expr", "text", vocab)
     expr_got = {
         r["doc_id"]: r["n"]
         for r in sample.select("doc_id", expr_col.alias("n")).collect()

@@ -1261,7 +1261,10 @@ def probe_index(
     ``quantization._PROBE_COLLECT_SCALARS``; later probes of that
     version score from the store and scan nothing. So a warm flat
     probe starts no job over a local query set and one (the query
-    collect) over an RDD-backed one; the first two probes of a version
+    collect) over an RDD-backed one. That collect reads the query ids
+    and vectors only: each ‖q‖ is computed on the driver with the
+    engine's fold (``quantization._query_norm``), so a request plans
+    no norm expression. The first two probes of a version
     start one more, as does every probe of an index too large to hold.
     A two-level probe adds the jobs of its level-2 ranking window. A
     sidecar of a per-branch index raises ValueError

@@ -56,6 +56,7 @@ from .similarity import (
     _col_sql,
     _corpus_frame,
     _dot_lit_sql,
+    _fold_norm,
     _fold_sq_norm,
     _guard_sql,
     _lit_double,
@@ -519,10 +520,12 @@ def ivfpq_topk(
     the (neighbor_id, cell, pq_code) frame, or ``ann_index``'s
     ``_Snapshot``, a persisted index's rows already on the driver.
     Within the collect budget both steps run on the driver — one
-    bounded collect of the query rows (no job over a local relation),
-    and one of the probed slice unless the index is held — and the
-    result is a local relation, so collecting it starts no job: a
-    probe of a held index over a local query set starts none at all.
+    bounded collect of the query ids and vectors (no job over a local
+    relation; each ‖q‖ is then folded on the driver, not planned as a
+    norm expression), and one of the probed slice unless the index is
+    held — and the result is a local relation, so collecting it starts
+    no job: a probe of a held index over a local query set starts none
+    at all.
     Past the budget, or on an odd input, :func:`_score_cells` decodes
     and ranks in a Spark plan. Returns (query_id, neighbor_id, cosine,
     rank) — cosine of query vs reconstruction.
@@ -540,8 +543,9 @@ def _pick_cells_local(
     bit-for-bit. The cosine is the engine's arithmetic: elements cast
     to double, a 0.0-seeded left-to-right sum over indexes 1..dim
     (vectorised across queries and centroids, never ``np.dot``, which
-    sums pairwise), ``dot / (‖q‖·‖c‖)`` with the engine-computed ‖q‖
-    and an IEEE ``sqrt`` of the same fold for ‖c‖. Order per query is
+    sums pairwise), ``dot / (‖q‖·‖c‖)`` with the row's ‖q‖ (engine-
+    computed, or :func:`_query_norm`'s bit-identical driver fold) and
+    an IEEE ``sqrt`` of the same fold for ‖c‖. Order per query is
     (cosine desc, centroid id asc), the window's order. None — the
     caller falls back to the Spark selection — on a NULL or duplicate
     query id (the window would rank such rows as one partition), a NULL
@@ -630,28 +634,58 @@ def _probe_cells(
     probe's cells, and the two-level probe's level-1 branches
     (:func:`imi_probe_cells`).
 
-    Fast path: the query rows are collected ONCE, in one job (none over
-    a local relation), under the ``_PROBE_COLLECT_SCALARS`` budget
-    (|queries|·n_probe·dim scalars, the size of the probe rows the
-    driver then holds), and the cells are picked in numpy
-    (:func:`_pick_cells_local`, bit-identical to the Spark selection)
-    — no crossJoin, shuffle window or probe-frame collect. Over the
-    budget, or on a row the driver path does not reproduce exactly,
-    the Spark selection (``similarity._spark_probe_cells``) runs and
+    Fast path: the query ids and vectors are collected ONCE, in one
+    job (none over a local relation), under the
+    ``_PROBE_COLLECT_SCALARS`` budget (|queries|·n_probe·dim scalars,
+    the size of the probe rows the driver then holds); each ‖q‖ is
+    folded on the driver (:func:`_query_norm`), and the cells are
+    picked in numpy (:func:`_pick_cells_local`) — bit-identical to the
+    Spark selection, with no norm expression to plan and no crossJoin,
+    shuffle window or probe-frame collect. The collect projects the two
+    columns rather than ``similarity._query_frame``, whose dim-term
+    ``SQRT`` would be parsed, analyzed and compiled on every request
+    (about 40 ms of a warm dim-64 probe over a local query set,
+    4 cores). Over the budget, or on a row the driver path does not
+    reproduce exactly (the norm of a NULL, short or NULL-element
+    vector is None here), the Spark selection
+    (``similarity._spark_probe_cells``) runs over ``_query_frame`` and
     :func:`_collect_probes` collects or checkpoints its result."""
-    q = _query_frame(queries, dim, id_col, vec_col)
+    sel = queries.select(id_col, vec_col)
     per_query = max(dim, 1) * max(n_probe, 1)
     cap_rows = max(1, _PROBE_COLLECT_SCALARS // per_query)
-    rows = q.limit(cap_rows + 1).collect()
+    rows = sel.limit(cap_rows + 1).collect()
     picked = None
     if len(rows) <= cap_rows:
+        rows = [(r[0], r[1], _query_norm(r[1], dim)) for r in rows]
         picked = _pick_cells_local(rows, centroids, dim, n_probe)
     if picked is None:
+        q = _query_frame(queries, dim, id_col, vec_col)
         cent = _centroid_df(q.sparkSession, centroids)
         return _collect_probes(_spark_probe_cells(q, cent, dim, n_probe), dim)
-    schema = StructType(q.schema.fields + [StructField("cell", LongType())])
+    id_field, vec_field = sel.schema.fields
+    schema = StructType(
+        [
+            StructField("query_id", id_field.dataType, id_field.nullable, id_field.metadata),
+            StructField("__qv", vec_field.dataType, vec_field.nullable, vec_field.metadata),
+            StructField("__qn", DoubleType()),
+            StructField("cell", LongType()),
+        ]
+    )
     cells = sorted({p[3] for p in picked})
-    return _Probes(cells, picked, schema, q.sparkSession)
+    return _Probes(cells, picked, schema, sel.sparkSession)
+
+
+def _query_norm(vec, dim: int) -> float | None:
+    """The ``__qn`` of ``similarity._query_frame`` computed on the
+    driver: ``similarity._fold_norm`` of the first ``dim`` elements,
+    the engine's 0.0-seeded left-to-right fold and IEEE ``sqrt``, so
+    the bits are the engine's. None where the fold does not reproduce
+    the engine — a NULL vector, fewer than ``dim`` elements, or a NULL
+    among the first ``dim`` — so :func:`_pick_cells_local` sends the
+    query set to the Spark selection."""
+    if vec is None or len(vec) < dim or None in vec[:dim]:
+        return None
+    return _fold_norm(vec[:dim])
 
 
 def _collect_probes(probes: DataFrame, dim: int) -> _Probes:

@@ -1,8 +1,8 @@
 """Minimal atomic commit manifest for multi-file parquet targets — the
-local stand-in for a Delta/Iceberg transaction log, closing the
-crash windows the round-11 lifecycle documented as open (ann_index:
-"the data-then-meta write order means a crash between the two can
-still double-append on replay").
+local stand-in for a Delta/Iceberg transaction log. One commit
+publishes a write's data files together with its batch id and, where
+there is one, the sidecar that describes them, so a crash between the
+writes leaves nothing half-visible and a replay cannot double-append.
 
 Model: a target directory owns a log of versioned manifests
 (``_commits.v{N}.json``, see CONCURRENCY below); the highest version
@@ -22,7 +22,7 @@ and readers resolve the current one through the manifest — so data
 and parameters can never be observed mismatched (the Iceberg
 metadata-pointer move, one level down).
 
-CONCURRENCY (round 12): commits are OPTIMISTIC, Delta-style. Each
+CONCURRENCY: commits are OPTIMISTIC, Delta-style. Each
 commit publishes a new VERSIONED manifest file
 (``_commits.v{N}.json``) claimed by ``os.link`` from a fully-written
 temp file — link(2) fails atomically if the target exists, so version
@@ -30,13 +30,13 @@ N+1 can be claimed by exactly ONE writer; a loser re-reads the
 winner's state and retries its commit on top (bounded retries, then
 ``CommitConflict``). Readers resolve the highest version present —
 always a complete file, never torn. The version files double as the
-log's history; ``vacuum`` retains the trailing window. The former
-single-writer caveat is CLOSED (multi-writer lost-update test-pinned).
+log's history; ``vacuum`` retains the trailing window. Concurrent
+writers lose no update (test-pinned).
 
-Conflict SEMANTICS (round 13): file-level retries stay blind — a
-loser re-applies its add/remove sets on the winner's state, which is
-correct for the disjoint-file writers this repo composes. The ONE
-logical conflict the log now detects is the sidecar pointer: a writer
+Conflict SEMANTICS: file-level retries are blind — a loser re-applies
+its add/remove sets on the winner's state, which is correct for the
+disjoint-file writers this repo composes. The ONE logical conflict
+the log detects is the sidecar pointer: a writer
 that derived its new ``meta_file`` from the pointer it READ passes
 that origin as ``expect_meta_file``; if any interleaved commit moved
 the pointer, the commit raises :class:`MetaConflict` instead of
@@ -69,13 +69,14 @@ land→commit window, or run grace-0 vacuums only while no writer is
 mid-landing.
 
 Deliberate simplifications vs a real table format, stated:
-- the manifest is rewritten whole per commit — MEASURED (round 12):
-  a one-file commit against a 10^4-file manifest costs ~6 ms, against
+- the manifest is rewritten whole per commit — MEASURED: a one-file
+  commit against a 10^4-file manifest costs ~6 ms, against
   10^5 files ~78 ms, so the whole-rewrite design holds to ~10^5 files
   per target and segment-append + checkpoint (the real-log recipe)
   is only needed past that;
-- retried commits re-apply their file deltas blindly (no logical
-  conflict detection between concurrent writers' intents);
+- retried commits re-apply their file deltas blindly: concurrent
+  writers' file intents are not compared, and the sidecar pointer is
+  the one conflict checked (``expect_meta_file``, see above);
 - ``vacuum`` deletes unreferenced data files — run it OUTSIDE any
   reader's lifetime, as with Delta's VACUUM retention caveat;
 - each lineage's batch-id set is truncated to the 1000 LARGEST ids
@@ -87,9 +88,9 @@ Deliberate simplifications vs a real table format, stated:
   correctness bound.
 
 Replay guards are keyed by (LINEAGE, batch id) — Delta's
-(txnAppId, txnVersion) recipe (round 12; previously a single implicit
-lineage, which would false-skip a brand-new stream whose batch ids
-restart at 0 against a target with append history). The default
+(txnAppId, txnVersion) recipe — so a brand-new stream whose batch ids
+restart at 0 is not false-skipped against a target with another
+stream's append history. The default
 lineage ("default") mirrors into the legacy top-level ``batch_ids`` /
 ``batch_watermark`` fields, and legacy manifests read back as that
 lineage, so single-stream callers and old manifests are unaffected.
@@ -165,7 +166,7 @@ def read_manifest(root: str, version: int | None = None) -> dict:
     lineage fields existed read back with neutral defaults (their
     batch history becomes the default lineage).
 
-    ``version`` (round 12 — the versioned log's TIME TRAVEL): read the
+    ``version`` (the versioned log's TIME TRAVEL): read the
     state AS OF that commit version instead of the latest. Only
     versions inside the vacuum-retained history window
     (``_MANIFEST_HISTORY``) are readable; asking for a pruned or
@@ -238,8 +239,7 @@ def commit(
     :class:`CommitConflict`). Returns the new state. Paths are
     relative to ``root``.
 
-    ``expect_meta_file`` (round 13 — the sidecar-pointer conflict
-    check): pass the pointer value the caller READ when it derived the
+    ``expect_meta_file`` (the sidecar-pointer conflict check): pass the pointer value the caller READ when it derived the
     ``meta_file`` it is now committing. If the manifest's pointer no
     longer equals it — an interleaved commit changed the parameters —
     the commit raises :class:`MetaConflict` instead of reverting the
@@ -386,7 +386,7 @@ def _referenced_ever(root: str) -> tuple[set[str], set[str]]:
 
 def vacuum(root: str, orphan_grace_s: float = _ORPHAN_GRACE_S) -> list[str]:
     """Delete dead physical state. Two classes, treated differently
-    (round 13 — the multi-writer hazard the round-12 advice named):
+    so that vacuum is safe beside concurrent writers:
 
     - **Superseded** files — referenced by a RETAINED manifest version
       but not the current one (compactions'/rebuilds'/splits' retired
@@ -455,10 +455,10 @@ def vacuum(root: str, orphan_grace_s: float = _ORPHAN_GRACE_S) -> list[str]:
 
 
 def land(root: str, write_fn) -> list[str]:
-    """Stage-and-move landing with EXACT file attribution (round 13 —
-    replaces the before/after directory-listing diff, which both
-    mis-attributed concurrent writers' files and cost O(total files)
-    per landing): ``write_fn(staging_dir)`` writes its output under a
+    """Stage-and-move landing with EXACT file attribution — unlike a
+    before/after directory-listing diff, it never attributes a
+    concurrent writer's files to this landing, and it costs O(this
+    landing's files), not O(total files): ``write_fn(staging_dir)`` writes its output under a
     fresh hidden staging directory; every data file is then moved into
     ``root`` preserving its relative (partition) path and the moved
     relative paths — exactly this landing's files, whatever any other

@@ -119,3 +119,29 @@ def test_package_names_used_by_entry_files_exist(path):
     missing: list[str] = []
     _check_scope(tree, {}, os.path.relpath(path, ROOT), missing)
     assert not missing, missing
+
+
+def test_worker_daemon_module_imports():
+    """The module ``get_spark`` names in ``spark.python.daemon.module``
+    must import and have a ``main``: Spark starts every Python worker
+    through it, so a rename would otherwise fail at the first Python
+    task of a session."""
+    from project_clinical_data_etl_pipeline_spark import session
+
+    with open(session.__file__) as fh:
+        tree = ast.parse(fh.read(), filename=session.__file__)
+    (get_spark,) = [
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "get_spark"
+    ]
+    names = [
+        eval(compile(ast.Expression(node.args[1]), session.__file__, "eval"), vars(session))
+        for node in ast.walk(get_spark)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "config"
+        and len(node.args) == 2
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value == "spark.python.daemon.module"
+    ]
+    assert len(names) == 1, names
+    assert callable(importlib.import_module(names[0]).main)

@@ -66,8 +66,13 @@ def _spark_cells(queries, centroids, n_probe):
 
 
 def _driver_cells(queries, centroids, n_probe):
-    q = S._query_frame(queries, DIM, "vec_id", "embedding")
-    picked = Q._pick_cells_local(q.collect(), centroids, DIM, n_probe)
+    """The driver selection as ``_probe_cells`` runs it: raw rows
+    collected, each ‖q‖ folded on the driver."""
+    rows = [
+        (i, v, Q._query_norm(v, DIM))
+        for i, v in queries.select("vec_id", "embedding").collect()
+    ]
+    picked = Q._pick_cells_local(rows, centroids, DIM, n_probe)
     return None if picked is None else sorted((p[0], p[3]) for p in picked)
 
 
@@ -123,18 +128,27 @@ def _outcome(fn):
 def test_null_and_zero_norm_queries_take_the_fallback(spark):
     """Rows the driver path cannot reproduce go to the Spark selection
     and answer exactly as it does — including its error: under ANSI
-    arithmetic a zero-norm query's cosine is a division by zero."""
+    arithmetic a zero-norm query's cosine is a division by zero, and a
+    short vector's norm reads past its end. The driver norm of a NULL
+    vector, a short vector or a NULL element is None (the engine's is
+    NULL or an error); a NaN element's is NaN, as the engine's is."""
     rng = np.random.default_rng(5)
     cents = rng.normal(size=(8, DIM)).tolist()
     good = _f32(rng.normal(size=(3, DIM)))
     cases = {
-        "null vector": good + [None],
-        "null element": good + [[None] + good[0][1:]],
-        "zero norm": good + [[0.0] * DIM],
+        "null vector": (good + [None], None),
+        "null element": (good + [[None] + good[0][1:]], None),
+        "short vector": (good + [good[0][: DIM - 1]], None),
+        "nan element": (good + [[float("nan")] + good[0][1:]], None),
+        "zero norm": (good + [[0.0] * DIM], None),
+        "duplicate id": (good[:2], [7, 7]),
     }
-    for name, vecs in cases.items():
-        q = _queries(spark, vecs)
+    outcomes = {}
+    for name, (vecs, ids) in cases.items():
+        q = _queries(spark, vecs, ids)
         assert _driver_cells(q, cents, 2) is None, name
+        if name in ("null vector", "null element", "short vector"):
+            assert Q._query_norm(vecs[-1], DIM) is None, name
 
         def spark_path():
             probes = Q._collect_probes(_spark_probes(q, cents, 2), DIM)
@@ -148,11 +162,14 @@ def test_null_and_zero_norm_queries_take_the_fallback(spark):
 
         want = _outcome(spark_path)
         assert _outcome(selector) == want, name
-        if name.startswith("null"):
-            assert isinstance(want, tuple) and len(want[1]) == 4 * 2, name
-    # a duplicated query id is one window partition in Spark: fallback
-    q = _queries(spark, good[:2], ids=[7, 7])
-    assert _driver_cells(q, cents, 2) is None
+        outcomes[name] = want
+    for name in ("null vector", "null element", "nan element"):
+        assert len(outcomes[name][1]) == 4 * 2, name
+    assert outcomes["short vector"] == "ArrayIndexOutOfBoundsException"
+    assert outcomes["zero norm"] == "ArithmeticException"
+    # a duplicated query id is one window partition in Spark: its two
+    # rows share one ranking, n_probe cells in all
+    assert [qid for qid, _ in outcomes["duplicate id"][1]] == [7, 7]
 
 
 def test_driver_probe_frame_equals_spark_probe_frame(spark):
@@ -167,6 +184,45 @@ def test_driver_probe_frame_equals_spark_probe_frame(spark):
     )
     assert rows == want
     assert cells == sorted({r[1] for r in want})
+    probes = Q._probe_cells(q, cents, DIM, 3, "vec_id", "embedding")
+    assert probes.rows is not None
+    assert probes.frame().schema == spark_frame.schema
+
+
+@pytest.mark.parametrize("element", ["float", "double"])
+def test_driver_norm_is_the_engine_norm_bit_for_bit(spark, element):
+    """``quantization._query_norm`` over a collected vector equals
+    ``similarity._query_frame``'s ``__qn`` bit for bit, across dims and
+    magnitudes: -0.0, subnormal elements and squares, squares that
+    overflow, and vectors longer than ``dim``."""
+    import struct
+
+    rng = np.random.default_rng(29)
+    tiny = 1e-45 if element == "float" else 5e-324
+    for dim in (8, 16, 64, 100):
+        vecs = [
+            (rng.normal(size=dim) * scale).tolist()
+            for scale in (1e-20, 1e-5, 1.0, 1e6, 1e18)
+            for _ in range(4)
+        ]
+        vecs += [
+            [-0.0] * dim,
+            [0.0, -0.0] * (dim // 2),
+            [tiny] * dim,
+            [-tiny, 1e-160 if element == "double" else 1e-30] * (dim // 2),
+            [3e38 if element == "float" else 1e200] + [1.0] * (dim - 1),
+            rng.normal(size=dim + 3).tolist(),
+        ]
+        q = local_frame(
+            spark,
+            list(enumerate(vecs)),
+            f"vec_id bigint, embedding array<{element}>",
+        )
+        rows = S._query_frame(q, dim, "vec_id", "embedding").collect()
+        assert len(rows) == len(vecs)
+        for r in rows:
+            got = Q._query_norm(r["__qv"], dim)
+            assert struct.pack(">d", got) == struct.pack(">d", r["__qn"]), (dim, r)
 
 
 @pytest.mark.parametrize(
